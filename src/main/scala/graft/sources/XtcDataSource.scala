@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, DataSourceRegister}
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, DataSourceRegister}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -45,6 +45,9 @@ final case class XtcFrameMeta(
 object XtcFormat {
   val Magic = 1995
   val FirstIdx = 9
+  /** Most small-delta atoms one run token can carry (a 5-bit run
+    * length, less its mod-3 size-shift residue, over 3 ints per atom). */
+  val MaxRun = 10
 
   /** The format's shared integer-size ladder (≈ 2^(i/3), with the
     * historical deviations every public implementation carries —
@@ -317,10 +320,17 @@ object XtcFormat {
     * run/size-shift token whose mod-3 residue moves `smallidx` up or
     * down the magicints ladder. The first atom of a run is swapped
     * with its predecessor (the format's water-molecule optimization —
-    * decode must un-swap by emitting the previous coordinate first). */
+    * decode must un-swap by emitting the previous coordinate first).
+    *
+    * `limit` stops the decode once atoms [0, limit) are out: the
+    * bit-stream is sequential, so that prefix is exactly what a full
+    * decode yields, and the payload past it is never read — nor
+    * checked, as for a header-only scan. The step that reaches
+    * `limit` still runs to the end of its run, so `out` must hold
+    * [[decodedFloats]]`(nAtoms, limit)` floats. */
   def decompress(meta: XtcFrameMeta, blob: Array[Byte], out: Array[Float],
-      path: String, frame: Long): Unit =
-    try decompressImpl(meta, blob, out, path, frame)
+      path: String, frame: Long, limit: Int = Int.MaxValue): Unit =
+    try decompressImpl(meta, blob, out, path, frame, limit)
     catch {
       // a declared nBytes smaller than the atoms' bit demand runs the
       // reader off the blob: surface it as the same parse-error
@@ -331,8 +341,13 @@ object XtcFormat {
             s" for ${meta.nAtoms} atoms)")
     }
 
+  /** Floats [[decompress]] writes for `nAtoms` decoded up to `limit`:
+    * the last step may run up to [[MaxRun]] atoms past it. */
+  def decodedFloats(nAtoms: Int, limit: Int): Long =
+    3L * math.min(nAtoms.toLong, limit.toLong + MaxRun)
+
   private def decompressImpl(meta: XtcFrameMeta, blob: Array[Byte],
-      out: Array[Float], path: String, frame: Long): Unit = {
+      out: Array[Float], path: String, frame: Long, limit: Int): Unit = {
     val n = meta.nAtoms
     val sizeInt = new Array[Int](3)
     val bitSizeInt = new Array[Int](3)
@@ -367,7 +382,7 @@ object XtcFormat {
     // the run length PERSISTS across flag groups: a 0 flag re-uses the
     // previous run length unchanged (the encoder's prevrun elision)
     var run = 0
-    while (atom < n) {
+    while (atom < n && atom < limit) {
       if (bitSize == 0) {
         thisCoord(0) = reader.receiveBits(bitSizeInt(0))
         thisCoord(1) = reader.receiveBits(bitSizeInt(1))
@@ -553,6 +568,14 @@ object XtcFormat {
   * the stored box is all zeros — the format's "no box" convention).
   * Units are GROMACS-native nm/ps, so `unit_scale` defaults to 1.0.
   *
+  * Pushdown: `frame_id` bounds prune partitions and the index walk;
+  * an `atom_id` upper bound (`<`, `<=`, `=`, `IN`) stops each frame's
+  * decode at the bound, and a lower bound skips the rows below it.
+  * Every frame header is still read and validated; compressed payload
+  * past the bound is not decoded, so it is not checked either — the
+  * contract of the header-only scan, which skips the decode when x/y/z
+  * are pruned. Spark re-checks every pushed filter after the scan.
+  *
   * Usage: `spark.read.format("xtc").option("chunks", 100).load(path)`.
   */
 class XtcDataSource extends TableProvider with DataSourceRegister {
@@ -635,32 +658,49 @@ class XtcScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
   private var required: StructType = XtcTable.Schema
   private var frameLo: Long = 0L
   private var frameHi: Long = Long.MaxValue // exclusive
+  private var atomLo: Int = 0
+  private var atomHi: Int = Int.MaxValue // exclusive
   private var limit: Int = -1
   private var pushed: Array[Filter] = Array.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
+  private def atomBound(v: Long): Int =
+    math.max(0L, math.min(v, Int.MaxValue.toLong)).toInt
+
   /** frame_id predicates bound both the partition plan AND the index
-    * walk itself (see TrrScanBuilder). */
+    * walk itself (see TrrScanBuilder); atom_id predicates bound each
+    * frame's decode and row emission. All filters stay post-scan. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
+    pushed = filters.filter {
       case EqualTo("frame_id", v: Long) =>
         frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
+        true
       case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
+        frameLo = math.max(frameLo, v + 1); true
       case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
+        frameLo = math.max(frameLo, v); true
       case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
+        frameHi = math.min(frameHi, v); true
       case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
+        frameHi = math.min(frameHi, v + 1); true
+      case EqualTo("atom_id", v: Int) =>
+        atomLo = math.max(atomLo, atomBound(v))
+        atomHi = math.min(atomHi, atomBound(v + 1L)); true
+      case GreaterThan("atom_id", v: Int) =>
+        atomLo = math.max(atomLo, atomBound(v + 1L)); true
+      case GreaterThanOrEqual("atom_id", v: Int) =>
+        atomLo = math.max(atomLo, atomBound(v)); true
+      case LessThan("atom_id", v: Int) =>
+        atomHi = math.min(atomHi, atomBound(v)); true
+      case LessThanOrEqual("atom_id", v: Int) =>
+        atomHi = math.min(atomHi, atomBound(v + 1L)); true
+      case In("atom_id", vs)
+          if vs.nonEmpty && vs.forall(_.isInstanceOf[Int]) =>
+        val ids = vs.map(_.asInstanceOf[Int])
+        atomLo = math.max(atomLo, atomBound(ids.min))
+        atomHi = math.min(atomHi, atomBound(ids.max + 1L)); true
       case _ => false
     }
     filters
@@ -671,7 +711,7 @@ class XtcScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
 
   override def build(): Scan =
     new XtcScan(paths, chunks, unitScale, required, frameLo, frameHi, limit,
-      mode, expectAtoms)
+      mode, expectAtoms, atomLo, atomHi, pushed.toSeq)
 }
 
 /** startFrame/endFrame are LOCAL to `filePath`; `startByte` is the
@@ -682,10 +722,13 @@ case class XtcFrameRange(startFrame: Long, endFrame: Long, startByte: Long,
 
 class XtcScan(paths: Seq[String], chunks: Int, unitScale: Double,
     required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    mode: String, expectAtoms: Int = -1)
+    mode: String, expectAtoms: Int = -1, atomLo: Int = 0,
+    atomHi: Int = Int.MaxValue, pushed: Seq[Filter] = Nil)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  override def description(): String =
+    s"XtcScan PushedFilters: ${pushed.mkString("[", ", ", "]")}"
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -744,16 +787,16 @@ class XtcScan(paths: Seq[String], chunks: Int, unitScale: Double,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new XtcReaderFactory(unitScale, required, mode)
+    new XtcReaderFactory(unitScale, required, mode, atomLo, atomHi)
 }
 
 class XtcReaderFactory(unitScale: Double, required: StructType,
-    mode: String)
+    mode: String, atomLo: Int = 0, atomHi: Int = Int.MaxValue)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] =
     new XtcPartitionReader(unitScale, required,
-      partition.asInstanceOf[XtcFrameRange], mode)
+      partition.asInstanceOf[XtcFrameRange], mode, atomLo, atomHi)
 }
 
 /** Positioned read of a variable-record range: one seek to the
@@ -761,9 +804,11 @@ class XtcReaderFactory(unitScale: Double, required: StructType,
   * each frame's own declared data length advances the cursor. The
   * whole compressed blob is read in ONE positioned read and decoded
   * in-task; when the x/y/z columns are all pruned the decode is
-  * skipped entirely (header-only scan). */
+  * skipped entirely (header-only scan). Each frame emits atoms
+  * [atomLo, min(nAtoms, atomHi)), and its decode stops at that end. */
 class XtcPartitionReader(unitScale: Double, required: StructType,
-    range: XtcFrameRange, mode: String)
+    range: XtcFrameRange, mode: String, atomLo: Int = 0,
+    atomHi: Int = Int.MaxValue)
     extends PartitionReader[InternalRow] {
 
   private val raf = FsIO.openRandom(range.filePath)
@@ -777,6 +822,7 @@ class XtcPartitionReader(unitScale: Double, required: StructType,
   private var boxNull = false
   private var frame = range.startFrame - 1 // advanced by loadFrame
   private var emit = 0
+  private var end = 0 // this frame's emitted atoms are [emit, end)
   private var nAtoms = 0
   private var current: InternalRow = _
 
@@ -792,10 +838,15 @@ class XtcPartitionReader(unitScale: Double, required: StructType,
       frame + range.frameOffset).getOrElse(return false)
     meta = m
     nAtoms = m.nAtoms
+    end = math.min(nAtoms, atomHi)
     // all-zero box = "no unitcell" (the format writes 9 zero floats)
     boxNull = m.box.forall(_ == 0f)
-    if (needXyz) {
-      if (xs.length < 3 * nAtoms) xs = new Array[Float](3 * nAtoms)
+    if (needXyz && atomLo < end) {
+      val floats = XtcFormat.decodedFloats(nAtoms, end)
+      if (floats > Int.MaxValue - 8)
+        XtcFormat.fail(range.filePath, frame + range.frameOffset,
+          s"$nAtoms atoms do not fit one frame buffer")
+      if (xs.length < floats) xs = new Array[Float](floats.toInt)
       if (nAtoms <= 9) {
         val buf = new Array[Byte](12 * nAtoms)
         raf.readFully(buf)
@@ -807,24 +858,24 @@ class XtcPartitionReader(unitScale: Double, required: StructType,
         raf.seek(m.dataStart)
         raf.readFully(blob)
         XtcFormat.decompress(m, blob, xs, range.filePath,
-          frame + range.frameOffset)
+          frame + range.frameOffset, end)
       }
       if (unitScale != 1.0) {
-        var i = 0
-        while (i < 3 * nAtoms) {
+        var i = 3 * atomLo
+        while (i < 3 * end) {
           xs(i) = (xs(i) * unitScale).toFloat; i += 1
         }
       }
     }
     raf.seek(m.frameEnd)
-    emit = 0
+    emit = math.min(atomLo, end)
     true
   }
 
   override def next(): Boolean = {
-    // loop: a 0-atom frame yields no rows but still advances (the
-    // initial nAtoms = 0 also forces the first load through here)
-    while (emit >= nAtoms) {
+    // loop: a frame with no atoms in bounds yields no rows but still
+    // advances (the initial end = 0 also forces the first load here)
+    while (emit >= end) {
       if (!loadFrame()) return false
     }
     val a = emit

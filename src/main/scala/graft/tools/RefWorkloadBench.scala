@@ -8,8 +8,10 @@ import org.apache.spark.sql.functions._
   * over the C(500,2) = 124,750 pair combinations — dask-traj threaded
   * 13.3 s / serial mdtraj 11.5 s / dask-traj distributed (4 proc) 6.32
   * s on the 100 MB binary XTC. Here the same shape runs as: binary DCD
-  * scan (the registry's seek-addressable binary format; XTC itself is
-  * the GPL scope-out) → per-frame gather of the 500-atom slice →
+  * scan by default (seek-addressable and uncompressed), or the XTC the
+  * published numbers used through the clean-room codec (`--format
+  * xtc`, where the `atom_id < 500` bound stops each frame's decode at
+  * the slice) → per-frame gather of the 500-atom slice →
   * ONE `pair_dist_stats` kernel call per frame (all 124,750 distances
   * in a tight codegen'd JVM loop) → global reduction. The summary
   * aggregation forces every distance to be computed while keeping the

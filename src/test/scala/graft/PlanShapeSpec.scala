@@ -1,5 +1,9 @@
 package graft
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 class PlanShapeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -63,17 +67,32 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("ngram_close_pairs"), p)
   }
 
-  test("q_lang_id_ngram: profile rides a BROADCAST join (never a " +
-    "shuffled one); only the final doc-aligned left join may " +
-    "sort-merge") {
+  test("q_lang_id_ngram: the nested-loop join builds the per-language " +
+    "profile (never the corpus); the hits side explodes no grams") {
+    // r21 shape: each doc's gram array meets the broadcast profile
+    // arrays (one row per language) in an array_intersect, so the
+    // load-bearing properties are which side is built and that no
+    // (doc, gram) rows exist on the hits side.
+    val plan = SparkEntry.queries("q_lang_id_ngram")(spark,
+      SparkTestBase.sf).queryExecution.sparkPlan
+    val joins = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(joins.length == 1, plan.treeString)
+    val j = joins.head
+    val (build, hits) =
+      if (j.buildSide == BuildRight) (j.right, j.left) else (j.left, j.right)
+    assert(build.output.map(_.name).toSet == Set("plang", "pgrams"),
+      build.treeString)
+    val buildKeys = build.collectFirst { case a: BaseAggregateExec =>
+      a.groupingExpressions.map(_.toAttribute.name)
+    }
+    assert(buildKeys.contains(Seq("plang")), build.treeString)
+    assert(hits.collect { case g: GenerateExec => g }.isEmpty,
+      hits.treeString)
+    // plans/r21/q_lang_id_ngram_after.txt: doc repartition, the
+    // profile's (lang, gram) and rank shuffles, its broadcast, the
+    // best-hit rank shuffle and the presentation sort = 6
     val c = counts("q_lang_id_ngram")
-    // floor: gram checkpoint repartition, profile groupBy + rank,
-    // hit groupBy, best rank, final join + presentation sort. The
-    // load-bearing property is the profile join: top-20-per-language
-    // is a tiny dimension and must broadcast — a shuffled gram join
-    // would move every (doc, gram) row a second time.
-    assert(c("exchanges") <= 7, c.toString)
-    assert(c("bhj") >= 1, c.toString)
+    assert(c("exchanges") <= 6, c.toString)
     assert(c("smj") <= 1, c.toString)
   }
 

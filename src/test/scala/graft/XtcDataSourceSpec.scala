@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.sources.{XtcFormat, XtcWrite}
+import graft.sources.{FsIO, XtcFormat, XtcWrite}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,6 +31,8 @@ class XtcDataSourceSpec extends AnyFunSuite {
 
   private val refXtc = "/root/reference/dask_traj/tests/test.xtc"
   private val refPdb = "/root/reference/dask_traj/tests/test.pdb"
+  /** 3 frames × 400 atoms with small-delta runs (graft.tools.XtcFixture). */
+  private val fixtureXtc = "fixtures/traj_xtc/traj.xtc"
 
   /** The format's quantization, replicated for expected values: decode
     * yields exactly lint × (1/precision) in float32. */
@@ -148,15 +151,17 @@ class XtcDataSourceSpec extends AnyFunSuite {
     assert(stats.getAs[Long](6) == frames.length.toLong * 2722)
   }
 
-  test("reference fixture: chunked reads are row-identical to a " +
+  test("committed fixture: chunked reads are row-identical to a " +
     "whole-file read (partition boundaries carry no decoder state)") {
-    assume(Files.exists(Paths.get(refXtc)))
     val whole = spark.read.format("xtc").option("chunks", 10000)
-      .load(refXtc).orderBy("frame_id", "atom_id").collect()
-    val chunked = spark.read.format("xtc").option("chunks", 7)
-      .load(refXtc).orderBy("frame_id", "atom_id").collect()
-    assert(whole.length == chunked.length)
-    whole.zip(chunked).foreach { case (a, b) => assert(a == b) }
+      .load(fixtureXtc).orderBy("frame_id", "atom_id").collect()
+    assert(whole.length == 3 * 400)
+    Seq(1, 2).foreach { chunks =>
+      val chunked = spark.read.format("xtc").option("chunks", chunks)
+        .load(fixtureXtc).orderBy("frame_id", "atom_id").collect()
+      assert(whole.length == chunked.length)
+      whole.zip(chunked).foreach { case (a, b) => assert(a == b) }
+    }
   }
 
   test("TrajLoad dispatches .xtc; top= accepts the matching reference " +
@@ -450,5 +455,139 @@ class XtcDataSourceSpec extends AnyFunSuite {
           s"sizes ${sizes.toSeq}")
       }
     }
+  }
+
+  // ---------------------------------------------------------------
+  // atom_id bounds pushed into the scan
+  // ---------------------------------------------------------------
+
+  /** Frame `frame` of `path` decoded with `limit` (NaN past what the
+    * decode wrote): the step that reaches the limit runs to the end of
+    * its small-delta run. */
+  private def decodeFrame(path: String, frame: Int, limit: Int)
+      : Array[Float] = {
+    val raf = FsIO.openRandom(path)
+    try {
+      var m = XtcFormat.readFrameMeta(raf, path, 0).get
+      (1 to frame).foreach { f =>
+        raf.seek(m.frameEnd)
+        m = XtcFormat.readFrameMeta(raf, path, f).get
+      }
+      val blob = new Array[Byte](m.nBytes)
+      raf.seek(m.dataStart)
+      raf.readFully(blob)
+      val out = Array.fill(
+        XtcFormat.decodedFloats(m.nAtoms, limit).toInt)(Float.NaN)
+      XtcFormat.decompress(m, blob, out, path, frame, limit)
+      out
+    } finally raf.close()
+  }
+
+  /** Atoms a decode of frame 0 stopped at `limit` writes. */
+  private def decodedAtoms(path: String, limit: Int): Int = {
+    val out = decodeFrame(path, 0, limit)
+    out.indexWhere(_.isNaN) match {
+      case -1 => out.length / 3
+      case i => i / 3
+    }
+  }
+
+  /** The first k > 10 that cuts a small-delta run right after its
+    * head: the run's first atom (stored swapped with its predecessor)
+    * is kept and the atom after it dropped. */
+  private lazy val runHeadCut: Int = (11 until 400).find { k =>
+    decodedAtoms(fixtureXtc, k - 1) == k - 1 &&
+      decodedAtoms(fixtureXtc, k) > k
+  }.getOrElse(fail("the fixture has no small-delta run past atom 10"))
+
+  test("a decode stopped at any limit yields exactly the full decode's " +
+    "prefix (every limit 0..nAtoms+5, every fixture frame)") {
+    (0 until 3).foreach { f =>
+      val full = decodeFrame(fixtureXtc, f, Int.MaxValue)
+      assert(full.length == 3 * 400)
+      (0 to 405).foreach { k =>
+        val kept = 3 * math.min(k, 400)
+        val got = decodeFrame(fixtureXtc, f, k)
+        assert(got.take(kept).sameElements(full.take(kept)),
+          s"frame $f limit $k")
+        // the decode stops within one run of the limit
+        assert(!got.take(kept).exists(_.isNaN), s"frame $f limit $k")
+      }
+    }
+    assert(decodedAtoms(fixtureXtc, runHeadCut) > runHeadCut)
+  }
+
+  private def pushedFilters(df: DataFrame): String =
+    "PushedFilters: \\[[^\\]]*\\]".r
+      .findAllIn(df.queryExecution.executedPlan.toString).mkString(" ")
+
+  private def sorted(df: DataFrame) = df.collect()
+    .sortBy(r => (r.getAs[Long]("frame_id"), r.getAs[Int]("atom_id")))
+
+  /** Each k over `path`, under every operator on all columns and under
+    * `<` and IN on the other query shapes: the pushed scan
+    * returns exactly the rows of the same predicate over
+    * `abs(atom_id)` (ids are >= 0), which the scan cannot see: the
+    * optimizer folds `atom_id + 0` back into a pushable comparison. */
+  private def assertBoundsMatch(path: String, ks: Seq[Int]): Unit = {
+    val plain = spark.read.format("xtc").option("chunks", 1).load(path)
+    val scaled = spark.read.format("xtc").option("chunks", 2)
+      .option("unit_scale", 10.0).load(path)
+    def pred(op: String, k: Int)(c: Column): Column = op match {
+      case "<" => c < k
+      case "<=" => c <= k
+      case "=" => c === k
+      case "in" => c.isin(k - 3, k / 2, k)
+    }
+    val shapes: Seq[(String, DataFrame, DataFrame => DataFrame)] = Seq(
+      ("all columns", plain, identity),
+      ("frame_id range", plain,
+        _.filter(col("frame_id") >= 1L && col("frame_id") <= 2L)),
+      ("x/y/z pruned", plain,
+        _.select("frame_id", "step", "atom_id", "precision")),
+      ("unit_scale 10", scaled, identity))
+    for (k <- ks; (what, df, shape) <- shapes;
+         op <- if (what == "all columns") Seq("<", "<=", "=", "in")
+               else Seq("<", "in")) {
+      val p = pred(op, k) _
+      val pushed = shape(df.filter(p(col("atom_id"))))
+      val opaque = shape(df.filter(p(abs(col("atom_id")))))
+      val ctx = s"$path atom_id $op $k, $what"
+      assert(pushedFilters(pushed).contains("atom_id"), ctx)
+      assert(!pushedFilters(opaque).contains("atom_id"), ctx)
+      val want = sorted(opaque)
+      assert(sorted(pushed).sameElements(want), ctx)
+      if (what == "all columns") {
+        // a limit over the bounded scan: rows of the bound, no fewer
+        val lim = pushed.limit(7).collect()
+        assert(lim.length == math.min(7, want.length), ctx)
+        assert(lim.forall(r => want.contains(r)), ctx)
+      }
+    }
+  }
+
+  test("atom_id bounds over the committed fixture (runs engaged) match " +
+    "the unpushed predicate: <, <=, =, IN x frame range, limit, pruned " +
+    "x/y/z and unit_scale; explain lists the pushed bound") {
+    assertBoundsMatch(fixtureXtc,
+      Seq(0, 1, 9, 10, runHeadCut, 500, 399, 400, 405))
+    val plan = spark.read.format("xtc").load(fixtureXtc)
+      .filter(col("atom_id") < 10).queryExecution.executedPlan.toString
+    assert(plan.contains("LessThan(atom_id,10)"), plan)
+  }
+
+  test("atom_id bounds over a plain-float (natoms <= 9) file match the " +
+    "unpushed predicate; precision stays null under the bound") {
+    val path = Files.createTempDirectory("xtcbound")
+      .resolve("tiny.xtc").toString
+    val rnd = new Random(5)
+    XtcWrite.write(path, (0 until 3).map(i => XtcWrite.Frame(
+      Array.fill(3 * 7)(rnd.between(-3f, 3f)),
+      box = Array(3f, 0f, 0f, 0f, 3f, 0f, 0f, 0f, 3f), step = i)))
+    assertBoundsMatch(path, Seq(0, 1, 6, 7, 9, 10, 12))
+    val rows = spark.read.format("xtc").load(path)
+      .filter(col("atom_id") < 3).collect()
+    assert(rows.length == 3 * 3)
+    assert(rows.forall(_.isNullAt(3)))
   }
 }
