@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -38,31 +38,9 @@ class ArcDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("arc", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"arc option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"arc option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"arc option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(0.1)
+    val o = new ReadOptions("arc", ArcTable.Schema, schema, properties)
     val mode = ParseMode.fromOptions("arc", properties)
-    if (schema != null) {
-      val want = ArcTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "arc source has a fixed schema " + ArcTable.Schema.simpleString +
-          "; the supplied read schema " + schema.simpleString +
-          " does not match (drop .schema(...) or make it identical)")
-    }
-    new ArcTable(paths, chunks, unitScale, mode)
+    new ArcTable(o.paths, o.chunks, o.unitScale(0.1), mode)
   }
 }
 
@@ -109,44 +87,8 @@ class ArcTable(paths: Seq[String], chunks: Int, unitScale: Double,
 }
 
 class ArcScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownLimit {
-  private var required: StructType = ArcTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
+    mode: String)
+    extends FrameScanBuilder(ArcTable.Schema) {
   override def build(): Scan =
     new ArcScan(paths, chunks, unitScale, required, frameLo, frameHi,
       limit, mode)

@@ -47,24 +47,9 @@ class GroDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("gro", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"gro option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"gro option 'chunks' must be > 0, got $chunks")
+    val o = new ReadOptions("gro", GroTable.Schema, schema, properties)
     val mode = ParseMode.fromOptions("gro", properties)
-    if (schema != null) {
-      val want = GroTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "gro source has a fixed schema " + GroTable.Schema.simpleString +
-          "; the supplied read schema does not match")
-    }
-    new GroTable(paths, chunks, mode)
+    new GroTable(o.paths, o.chunks, mode)
   }
 }
 
@@ -113,47 +98,7 @@ class GroTable(paths: Seq[String], chunks: Int,
 
 class GroScanBuilder(paths: Seq[String], chunks: Int,
     mode: String = ParseMode.FailFast)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = GroTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] =
-    Array.empty
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** frame_id predicates shrink the planned range (chunk pruning at
-    * plan time — same contract as XyzScanBuilder); all filters are
-    * returned as residuals so Spark still applies them exactly. */
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    import org.apache.spark.sql.sources._
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-    pushed
-
+    extends FrameScanBuilder(GroTable.Schema) {
   override def build(): Scan =
     new GroScan(paths, chunks, required, mode, frameLo, frameHi)
 }

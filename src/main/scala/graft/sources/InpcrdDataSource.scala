@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -48,40 +48,16 @@ class InpcrdDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("inpcrd", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"inpcrd option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"inpcrd option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"inpcrd option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(0.1)
+    val o = new ReadOptions("inpcrd", InpcrdTable.Schema, schema, properties)
     val vel = Option(properties.get("velocities")).map(_.toLowerCase)
       .getOrElse("auto")
     if (!Seq("auto", "true", "false").contains(vel))
       throw new IllegalArgumentException(
         s"inpcrd option 'velocities' must be auto, true or false, got " +
           s"'$vel'")
-    if (schema != null) {
-      val want =
-        InpcrdTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "inpcrd source has a fixed schema " +
-          InpcrdTable.Schema.simpleString +
-          "; the supplied read schema " + schema.simpleString +
-          " does not match (drop .schema(...) or make it identical)")
-    }
     val expectAtoms = Option(properties.get("top"))
       .map(PdbTopology.atomCount).getOrElse(-1)
-    new InpcrdTable(paths, chunks, unitScale, vel, expectAtoms)
+    new InpcrdTable(o.paths, o.chunks, o.unitScale(0.1), vel, expectAtoms)
   }
 }
 
@@ -118,44 +94,8 @@ class InpcrdTable(paths: Seq[String], chunks: Int, unitScale: Double,
 }
 
 class InpcrdScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    vel: String, expectAtoms: Int = -1) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownLimit {
-  private var required: StructType = InpcrdTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
+    vel: String, expectAtoms: Int = -1)
+    extends FrameScanBuilder(InpcrdTable.Schema) {
   override def build(): Scan =
     new InpcrdScan(paths, chunks, unitScale, vel, required, frameLo,
       frameHi, limit, expectAtoms)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -57,35 +57,10 @@ class LammpstrjDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("lammpstrj", properties)
-    def intOpt(key: String, default: Int): Int =
-      Option(properties.get(key)).map { v =>
-        try v.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"lammpstrj option '$key' must be an integer, got '$v'")
-        }
-      }.getOrElse(default)
-    val chunks = intOpt("chunks", 10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"lammpstrj option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"lammpstrj option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(1.0)
+    val o = new ReadOptions("lammpstrj", LammpstrjTable.Schema, schema,
+      properties)
     val mode = ParseMode.fromOptions("lammpstrj", properties)
-    if (schema != null) {
-      val want =
-        LammpstrjTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "lammpstrj source has a fixed schema " +
-          LammpstrjTable.Schema.simpleString +
-          "; the supplied read schema " + schema.simpleString +
-          " does not match (drop .schema(...) or make it identical)")
-    }
-    new LammpstrjTable(paths, chunks, unitScale, mode)
+    new LammpstrjTable(o.paths, o.chunks, o.unitScale(1.0), mode)
   }
 }
 
@@ -151,43 +126,8 @@ class LammpstrjTable(paths: Seq[String], chunks: Int, unitScale: Double,
 }
 
 class LammpstrjScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String) extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = LammpstrjTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
+    mode: String)
+    extends FrameScanBuilder(LammpstrjTable.Schema) {
   override def build(): Scan =
     new LammpstrjScan(paths, chunks, unitScale, required, frameLo, frameHi,
       limit, mode)

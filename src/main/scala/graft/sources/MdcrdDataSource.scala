@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -47,24 +47,14 @@ class MdcrdDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("mdcrd", properties)
-    def intOpt(key: String, default: Int): Int =
-      Option(properties.get(key)).map { v =>
-        try v.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"mdcrd option '$key' must be an integer, got '$v'")
-        }
-      }.getOrElse(default)
+    val o = new ReadOptions("mdcrd", MdcrdTable.Schema, schema, properties)
     // the frame shape is NOT in the file: either `natoms` directly or
     // `top` (a PDB topology, the reference's `load(..., top=...)` idiom
     // — core/dask_traj.py:61,80-83) must supply it; both must agree.
     // Required for SCANS (validated in newScanBuilder — the write path
     // does not need the atom count).
     val natoms = PdbTopology.resolveNatoms("mdcrd",
-      Option(properties.get("top")), intOpt("natoms", -1))
-    val chunks = intOpt("chunks", 10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"mdcrd option 'chunks' must be > 0, got $chunks")
+      Option(properties.get("top")), o.int("natoms", -1))
     val box = Option(properties.get("box")).map { v =>
       v.toLowerCase match {
         case "true" => true
@@ -73,22 +63,8 @@ class MdcrdDataSource extends TableProvider with DataSourceRegister {
           s"mdcrd option 'box' must be true or false, got '$other'")
       }
     }.getOrElse(false)
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"mdcrd option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(0.1)
     val mode = ParseMode.fromOptions("mdcrd", properties)
-    if (schema != null) {
-      val want = MdcrdTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "mdcrd source has a fixed schema " + MdcrdTable.Schema.simpleString +
-          "; the supplied read schema " + schema.simpleString +
-          " does not match (drop .schema(...) or make it identical)")
-    }
-    new MdcrdTable(paths, natoms, box, chunks, unitScale, mode)
+    new MdcrdTable(o.paths, natoms, box, o.chunks, o.unitScale(0.1), mode)
   }
 }
 
@@ -137,43 +113,7 @@ class MdcrdTable(paths: Seq[String], natoms: Int, box: Boolean,
 
 class MdcrdScanBuilder(paths: Seq[String], natoms: Int, box: Boolean,
     chunks: Int, unitScale: Double, mode: String)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = MdcrdTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
+    extends FrameScanBuilder(MdcrdTable.Schema) {
   override def build(): Scan =
     new MdcrdScan(paths, natoms, box, chunks, unitScale, required,
       frameLo, frameHi, limit, mode)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, DataSourceRegister}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -268,33 +268,11 @@ class NetcdfDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("netcdf", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"netcdf option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"netcdf option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"netcdf option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(1.0) // file is already Å (AMBER native units)
-    if (schema != null) {
-      val want = NetcdfTable.Schema.fields.map(f => (f.name, f.dataType))
-        .toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "netcdf source has a fixed schema " +
-          NetcdfTable.Schema.simpleString +
-          "; the supplied read schema does not match")
-    }
+    val o = new ReadOptions("netcdf", NetcdfTable.Schema, schema, properties)
     val expectAtoms = Option(properties.get("top"))
       .map(PdbTopology.atomCount).getOrElse(-1)
-    new NetcdfTable(paths, chunks, unitScale, expectAtoms)
+    // file is already Å (AMBER native units)
+    new NetcdfTable(o.paths, o.chunks, o.unitScale(1.0), expectAtoms)
   }
 }
 
@@ -335,43 +313,7 @@ class NetcdfTable(paths: Seq[String], chunks: Int, unitScale: Double,
 
 class NetcdfScanBuilder(paths: Seq[String], chunks: Int,
     unitScale: Double, expectAtoms: Int)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = NetcdfTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
+    extends FrameScanBuilder(NetcdfTable.Schema) {
   override def build(): Scan =
     new NetcdfScan(paths, chunks, unitScale, required, frameLo, frameHi,
       limit, expectAtoms)

@@ -51,30 +51,10 @@ class PdbDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("pdb", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"pdb option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"pdb option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"pdb option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(0.1) // Å → nm, the PDB distance_unit
+    val o = new ReadOptions("pdb", PdbTable.Schema, schema, properties)
     val mode = ParseMode.fromOptions("pdb", properties)
-    if (schema != null) {
-      val want = PdbTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "pdb source has a fixed schema " + PdbTable.Schema.simpleString +
-          "; the supplied read schema does not match")
-    }
-    new PdbTable(paths, chunks, unitScale, mode)
+    // Å → nm, the PDB distance_unit
+    new PdbTable(o.paths, o.chunks, o.unitScale(0.1), mode)
   }
 }
 
@@ -119,46 +99,7 @@ class PdbTable(paths: Seq[String], chunks: Int, unitScale: Double,
 
 class PdbScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
     mode: String = ParseMode.FailFast)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = PdbTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] =
-    Array.empty
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** frame_id predicates prune whole models from the plan (same
-    * contract as Xyz/GroScanBuilder); filters all stay residual. */
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    import org.apache.spark.sql.sources._
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-    pushed
-
+    extends FrameScanBuilder(PdbTable.Schema) {
   override def build(): Scan =
     new PdbScan(paths, chunks, unitScale, required, mode, frameLo, frameHi)
 }
@@ -246,9 +187,10 @@ class PdbScan(paths: Seq[String], chunks: Int, unitScale: Double,
       off: Long): Seq[InputPartition] = {
     val (ba, bb, bc, bal, bbe, bga) =
       box.getOrElse((0f, 0f, 0f, 0f, 0f, 0f))
-    val lo = (math.max(off, frameLo) - off).toInt
-    val hi = (math.min(off + starts.length, frameHi) - off).toInt
-    if (lo >= hi) return Nil
+    val lo0 = math.max(off, frameLo) - off
+    val hi0 = math.min(off + starts.length, frameHi) - off
+    if (lo0 >= hi0) return Nil
+    val (lo, hi) = (lo0.toInt, hi0.toInt)
     (lo until hi by chunks).map { s =>
       PdbFrameRange(s.toLong, math.min(s + chunks, hi).toLong,
         starts(s), ba, bb, bc, bal, bbe, bga, box.isDefined, p, off)

@@ -586,32 +586,12 @@ class XtcDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("xtc", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"xtc option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"xtc option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"xtc option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(1.0) // file is already nm (GROMACS native units)
+    val o = new ReadOptions("xtc", XtcTable.Schema, schema, properties)
     val mode = ParseMode.fromOptions("xtc", properties)
-    if (schema != null) {
-      val want = XtcTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "xtc source has a fixed schema " + XtcTable.Schema.simpleString +
-          "; the supplied read schema does not match")
-    }
     val expectAtoms = Option(properties.get("top"))
       .map(PdbTopology.atomCount).getOrElse(-1)
-    new XtcTable(paths, chunks, unitScale, mode, expectAtoms)
+    // file is already nm (GROMACS native units)
+    new XtcTable(o.paths, o.chunks, o.unitScale(1.0), mode, expectAtoms)
   }
 }
 
@@ -653,65 +633,39 @@ class XtcTable(paths: Seq[String], chunks: Int, unitScale: Double,
 
 class XtcScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
     mode: String, expectAtoms: Int = -1)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = XtcTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
+    extends FrameScanBuilder(XtcTable.Schema) {
   private var atomLo: Int = 0
   private var atomHi: Int = Int.MaxValue // exclusive
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
 
   private def atomBound(v: Long): Int =
     math.max(0L, math.min(v, Int.MaxValue.toLong)).toInt
 
-  /** frame_id predicates bound both the partition plan AND the index
-    * walk itself (see TrrScanBuilder); atom_id predicates bound each
-    * frame's decode and row emission. All filters stay post-scan. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-        true
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1); true
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); true
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v); true
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1); true
-      case EqualTo("atom_id", v: Int) =>
-        atomLo = math.max(atomLo, atomBound(v))
-        atomHi = math.min(atomHi, atomBound(v + 1L)); true
-      case GreaterThan("atom_id", v: Int) =>
-        atomLo = math.max(atomLo, atomBound(v + 1L)); true
-      case GreaterThanOrEqual("atom_id", v: Int) =>
-        atomLo = math.max(atomLo, atomBound(v)); true
-      case LessThan("atom_id", v: Int) =>
-        atomHi = math.min(atomHi, atomBound(v)); true
-      case LessThanOrEqual("atom_id", v: Int) =>
-        atomHi = math.min(atomHi, atomBound(v + 1L)); true
-      case In("atom_id", vs)
-          if vs.nonEmpty && vs.forall(_.isInstanceOf[Int]) =>
-        val ids = vs.map(_.asInstanceOf[Int])
-        atomLo = math.max(atomLo, atomBound(ids.min))
-        atomHi = math.min(atomHi, atomBound(ids.max + 1L)); true
-      case _ => false
-    }
-    filters
+  /** atom_id predicates bound each frame's decode and row emission
+    * (frame_id ones are the shared shell's: they bound the partition
+    * plan and the index walk). All filters stay post-scan. */
+  override protected def pushOther(filter: Filter): Boolean = filter match {
+    case EqualTo("atom_id", v: Int) =>
+      atomLo = math.max(atomLo, atomBound(v))
+      atomHi = math.min(atomHi, atomBound(v + 1L)); true
+    case GreaterThan("atom_id", v: Int) =>
+      atomLo = math.max(atomLo, atomBound(v + 1L)); true
+    case GreaterThanOrEqual("atom_id", v: Int) =>
+      atomLo = math.max(atomLo, atomBound(v)); true
+    case LessThan("atom_id", v: Int) =>
+      atomHi = math.min(atomHi, atomBound(v)); true
+    case LessThanOrEqual("atom_id", v: Int) =>
+      atomHi = math.min(atomHi, atomBound(v + 1L)); true
+    case In("atom_id", vs)
+        if vs.nonEmpty && vs.forall(_.isInstanceOf[Int]) =>
+      val ids = vs.map(_.asInstanceOf[Int])
+      atomLo = math.max(atomLo, atomBound(ids.min))
+      atomHi = math.min(atomHi, atomBound(ids.max + 1L)); true
+    case _ => false
   }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
 
   override def build(): Scan =
     new XtcScan(paths, chunks, unitScale, required, frameLo, frameHi, limit,
-      mode, expectAtoms, atomLo, atomHi, pushed.toSeq)
+      mode, expectAtoms, atomLo, atomHi, pushedFilters().toSeq)
 }
 
 /** startFrame/endFrame are LOCAL to `filePath`; `startByte` is the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -169,33 +169,9 @@ class XyzDataSource extends TableProvider with DataSourceRegister {
     * globally contiguous frame ids across files. */
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("xyz", properties)
-    def intOpt(key: String, default: Int): Int =
-      Option(properties.get(key)).map { v =>
-        try v.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"xyz option '$key' must be an integer, got '$v'")
-        }
-      }.getOrElse(default)
-    val chunks = intOpt("chunks", 10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"xyz option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"xyz option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(1.0)
+    val o = new ReadOptions("xyz", XyzTable.Schema, schema, properties)
     val mode = ParseMode.fromOptions("xyz", properties)
-    if (schema != null) {
-      val want = XyzTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "xyz source has a fixed schema " + XyzTable.Schema.simpleString +
-          "; the supplied read schema " + schema.simpleString +
-          " does not match (drop .schema(...) or make it identical)")
-    }
-    new XyzTable(paths, chunks, unitScale, mode)
+    new XyzTable(o.paths, o.chunks, o.unitScale(1.0), mode)
   }
 }
 
@@ -237,50 +213,7 @@ class XyzTable(paths: Seq[String], chunks: Int, unitScale: Double,
 
 class XyzScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
     mode: String = ParseMode.FailFast)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = XyzTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    // preserve pruning even when the requested set is empty (count(*))
-    required = requiredSchema
-
-  /** Frame-range predicate pushdown → partition pruning (the pushdown
-    * the reference lists as TODO, core/dask_traj.py:126 / SURVEY O5).
-    * Filters are only used to SHRINK the planned frame range; they are
-    * all returned as residuals so Spark still applies them exactly. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters // all residual: Spark re-evaluates, pruning is plan-only
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  /** Partial limit pushdown: plan only enough frames to cover the
-    * limit; Spark keeps its own Limit above. */
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
+    extends FrameScanBuilder(XyzTable.Schema) {
   override def build(): Scan =
     new XyzScan(paths, chunks, unitScale, required, frameLo, frameHi, limit,
       mode)

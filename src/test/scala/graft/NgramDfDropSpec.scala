@@ -82,18 +82,15 @@ class NgramDfDropSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the pure-chrome docs must be out of the tier entirely")
   }
 
-  test("chrome-free corpus takes the nHot == 0 dial branch and still " +
-    "pairs the prose near-dups (r21 — the direct-fingerprint plan " +
-    "must reproduce the anti-join branch's pairs)") {
+  test("an empty hot census still pairs the prose near-dups via the " +
+    "anti-join path") {
     import spark.implicits._
     // no sentence repeats often enough for ANY gram to clear the 25%
     // DF bar (10 docs, every phrase unique except the planted pair):
-    // the census comes back empty, the memoized nHot scalar picks the
-    // direct branch (grams = the kernel array, fingerprints as
-    // array_min over the salted md5s), and the tier's answer must be
-    // exactly the near-dup pair the anti-join branch would emit —
-    // the same identity the sf0.01/sf0.1/10x oracle gates pin, here
-    // as a fast in-suite regression net.
+    // the census comes back empty, so the broadcast anti-join removes
+    // nothing, and the tier's answer must still be exactly the
+    // near-dup pair — the same identity the sf0.01/sf0.1/10x oracle
+    // gates pin, here as a fast in-suite regression net.
     val pA = "the quick brown fox jumps over the lazy dog at dawn " +
       "beside the shallow river crossing"
     val pB = "the quick brown fox jumps over the lazy dog at dusk " +
@@ -109,7 +106,7 @@ class NgramDfDropSpec extends AnyFunSuite with BeforeAndAfterAll {
       (8L, "seventh distinct passage without shared wording"),
       (9L, "eighth and final unique document closing the corpus"))
     val dir = java.nio.file.Files
-      .createDirectories(root.resolve("dial")).toString
+      .createDirectories(root.resolve("cold")).toString
     docs.toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' as lang",
         "'spec' as source", "length(text) as n_chars")
@@ -121,10 +118,10 @@ class NgramDfDropSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect()
     val pairs = out.map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((0L, 1L)),
-      s"expected exactly the prose pair (0,1) from the dial branch, " +
+      s"expected exactly the prose pair (0,1) under an empty census, " +
         s"got ${out.mkString("[", ", ", "]")}")
     assert(out.head.getDouble(2) >= 0.5,
-      "pair (0,1) jaccard below the tier's bar on the dial branch")
+      "pair (0,1) jaccard below the tier's bar under an empty census")
   }
 
   test("all-5-grams-hot docs with COLD boundary 8-grams drop (the " +
