@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-extensions entry point (SURVEY §2.9): registers every graft
-  * native function at session build time, so a cluster deployment
-  * enables the library with
+  * native function and the frame-gather rewrite
+  * ([[graft.sources.FrameGather]]) at session build time, so a cluster
+  * deployment enables the library with
   *
   *   --conf spark.sql.extensions=graft.GraftExtensions
   *
@@ -85,5 +86,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(fn("topk_pairs",
       "topk_pairs(v, id, k) - partial-aggregatable per-group top-k of (v, id) pairs",
       es => TopKPairs.build(es).toAggregateExpression()))
+    ext.injectPlannerStrategy(_ => graft.sources.FrameGather.Planning)
   }
 }

@@ -1088,5 +1088,8 @@ object GraftFunctions {
       es => CosineClosePairs.build(es), "scala_udf")
     reg.createOrReplaceTempFunction("topk_pairs",
       es => TopKPairs.build(es).toAggregateExpression(), "scala_udf")
+    val extra = spark.experimental.extraOptimizations
+    if (!extra.contains(graft.sources.FrameGather))
+      spark.experimental.extraOptimizations = extra :+ graft.sources.FrameGather
   }
 }

@@ -38,7 +38,7 @@ class ArcDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("arc", ArcTable.Schema, schema, properties)
+    val o = new ReadOptions("arc", properties)
     val mode = ParseMode.fromOptions("arc", properties)
     new ArcTable(o.paths, o.chunks, o.unitScale(0.1), mode)
   }

@@ -34,7 +34,7 @@ class BinposDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("binpos", BinposTable.Schema, schema, properties)
+    val o = new ReadOptions("binpos", properties)
     val expectAtoms = Option(properties.get("top"))
       .map(PdbTopology.atomCount).getOrElse(-1)
     new BinposTable(o.paths, o.chunks, o.unitScale(0.1), expectAtoms)

@@ -161,7 +161,7 @@ class DcdDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("dcd", DcdTable.Schema, schema, properties)
+    val o = new ReadOptions("dcd", properties)
     val mode = ParseMode.fromOptions("dcd", properties)
     // Å→nm, the reference's in_units_of default
     new DcdTable(o.paths, o.chunks, o.unitScale(0.1), mode)

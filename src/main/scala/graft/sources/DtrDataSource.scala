@@ -275,7 +275,7 @@ class DtrDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("dtr", DtrTable.Schema, schema, properties)
+    val o = new ReadOptions("dtr", properties)
     new DtrTable(o.paths, o.chunks, o.unitScale(0.1)) // Å→nm, as dcd/pdb
   }
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.connector.read.{ScanBuilder, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.StructType
 
@@ -61,36 +61,52 @@ abstract class FrameScanBuilder(schema: StructType) extends ScanBuilder
   override def pushLimit(l: Int): Boolean = { limit = l; false }
 }
 
+/** A frame source scan whose partitions are frame-aligned, so it can
+  * gather each frame's atoms itself instead of emitting atom rows for a
+  * shuffle to regroup.
+  *
+  * Contract: every frame lives in exactly one input partition, and
+  * within a frame the atom rows come out in ascending, unique
+  * `atom_id`. [[FrameGather]] relies on it to plan
+  * `groupBy(frame_id).agg(sort_array(collect_list(struct(atom_id,
+  * …))))` over such a scan as [[gathered]]. */
+trait FrameGatherScan extends Scan {
+  /** This scan, emitting one row per frame: `(frame_id, a)`, where `a`
+    * is the frame's atoms [atomLo, min(nAtoms, atomHi)) under the
+    * pushed `atom_id` bounds, in ascending `atom_id`, as non-null
+    * `struct<atom_id: int, fields…: float>` elements. `fields` name
+    * coordinate columns (x, y, z). A frame with no atom in bounds
+    * emits no row, as `groupBy` makes no group for it. */
+  def gathered(fields: Seq[String]): Scan
+}
+
 /** The read options every trajectory source parses the same way.
-  * Construction resolves the paths ([[MultiPath]]), validates `chunks`
-  * (an integer > 0, default 10) and checks a user-supplied schema
-  * against the source's fixed one (erroring beats silently ignoring
-  * it). Errors name the format and the option key. */
-final class ReadOptions(format: String, fixed: StructType,
-    schema: StructType, props: util.Map[String, String]) {
+  * Construction resolves the paths ([[MultiPath]]) and validates
+  * `chunks` (an integer > 0, default 10). Errors name the format and
+  * the option key. */
+final class ReadOptions(format: String, props: util.Map[String, String]) {
   val paths: Seq[String] = MultiPath.rawPaths(format, props)
   val chunks: Int = int("chunks", 10)
   if (chunks <= 0) throw new IllegalArgumentException(
     s"$format option 'chunks' must be > 0, got $chunks")
-  if (schema != null) {
-    val want = fixed.fields.map(f => (f.name, f.dataType)).toSeq
-    val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-    if (got != want) throw new IllegalArgumentException(
-      s"$format source has a fixed schema ${fixed.simpleString}; the " +
-        s"supplied read schema ${schema.simpleString} does not match " +
-        "(drop .schema(...) or make it identical)")
-  }
 
   /** `unit_scale`, for the formats that take it: 0.1 for Å files (to
     * nm), 1.0 for files already in their convention's units. */
   def unitScale(default: Double): Double =
-    parsed("unit_scale", "numeric", default)(_.toDouble)
+    ReadOptions.unitScale(format, props, default)
 
   def int(key: String, default: Int): Int =
-    parsed(key, "an integer", default)(_.toInt)
+    ReadOptions.parsed(format, props, key, "an integer", default)(_.toInt)
+}
 
-  private def parsed[T](key: String, what: String, default: T)(
-      f: String => T): T =
+object ReadOptions {
+  /** `unit_scale` from any option map, the write paths' included. */
+  def unitScale(format: String, props: util.Map[String, String],
+      default: Double): Double =
+    parsed(format, props, "unit_scale", "numeric", default)(_.toDouble)
+
+  private def parsed[T](format: String, props: util.Map[String, String],
+      key: String, what: String, default: T)(f: String => T): T =
     Option(props.get(key)).map { v =>
       try f(v) catch {
         case _: NumberFormatException => throw new IllegalArgumentException(

@@ -47,7 +47,7 @@ class GroDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("gro", GroTable.Schema, schema, properties)
+    val o = new ReadOptions("gro", properties)
     val mode = ParseMode.fromOptions("gro", properties)
     new GroTable(o.paths, o.chunks, mode)
   }

@@ -91,7 +91,7 @@ class Hdf5DataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("hdf5", NetcdfTable.Schema, schema, properties)
+    val o = new ReadOptions("hdf5", properties)
     val expectAtoms = Option(properties.get("top"))
       .map(PdbTopology.atomCount).getOrElse(-1)
     // native convention units (nm)

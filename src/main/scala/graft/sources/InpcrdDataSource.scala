@@ -48,7 +48,7 @@ class InpcrdDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("inpcrd", InpcrdTable.Schema, schema, properties)
+    val o = new ReadOptions("inpcrd", properties)
     val vel = Option(properties.get("velocities")).map(_.toLowerCase)
       .getOrElse("auto")
     if (!Seq("auto", "true", "false").contains(vel))

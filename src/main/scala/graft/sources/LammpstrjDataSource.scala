@@ -57,8 +57,7 @@ class LammpstrjDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("lammpstrj", LammpstrjTable.Schema, schema,
-      properties)
+    val o = new ReadOptions("lammpstrj", properties)
     val mode = ParseMode.fromOptions("lammpstrj", properties)
     new LammpstrjTable(o.paths, o.chunks, o.unitScale(1.0), mode)
   }

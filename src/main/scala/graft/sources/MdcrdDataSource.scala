@@ -47,7 +47,7 @@ class MdcrdDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("mdcrd", MdcrdTable.Schema, schema, properties)
+    val o = new ReadOptions("mdcrd", properties)
     // the frame shape is NOT in the file: either `natoms` directly or
     // `top` (a PDB topology, the reference's `load(..., top=...)` idiom
     // — core/dask_traj.py:61,80-83) must supply it; both must agree.

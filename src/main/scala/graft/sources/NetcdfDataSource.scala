@@ -268,7 +268,7 @@ class NetcdfDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("netcdf", NetcdfTable.Schema, schema, properties)
+    val o = new ReadOptions("netcdf", properties)
     val expectAtoms = Option(properties.get("top"))
       .map(PdbTopology.atomCount).getOrElse(-1)
     // file is already Å (AMBER native units)

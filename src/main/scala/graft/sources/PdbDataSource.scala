@@ -51,7 +51,7 @@ class PdbDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("pdb", PdbTable.Schema, schema, properties)
+    val o = new ReadOptions("pdb", properties)
     val mode = ParseMode.fromOptions("pdb", properties)
     // Å → nm, the PDB distance_unit
     new PdbTable(o.paths, o.chunks, o.unitScale(0.1), mode)

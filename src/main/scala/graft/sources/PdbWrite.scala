@@ -23,8 +23,7 @@ class PdbWriteBuilder(path: String, info: LogicalWriteInfo)
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = {
-    val unitScale =
-      Option(info.options.get("unit_scale")).map(_.toDouble).getOrElse(0.1)
+    val unitScale = ReadOptions.unitScale("pdb", info.options, 0.1)
     new PdbWrite(path, info.schema(), doTruncate, unitScale)
   }
 }

@@ -206,7 +206,7 @@ class TrrDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("trr", TrrTable.Schema, schema, properties)
+    val o = new ReadOptions("trr", properties)
     val mode = ParseMode.fromOptions("trr", properties)
     // file is already nm (GROMACS native units)
     new TrrTable(o.paths, o.chunks, o.unitScale(1.0), mode)

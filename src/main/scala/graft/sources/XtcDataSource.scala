@@ -4,6 +4,7 @@ import java.nio.ByteBuffer
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -576,6 +577,14 @@ object XtcFormat {
   * contract of the header-only scan, which skips the decode when x/y/z
   * are pruned. Spark re-checks every pushed filter after the scan.
   *
+  * Frame-wide scan: [[XtcScan]] is a [[FrameGatherScan]] (partitions
+  * are frame ranges, atoms come out in file order). The [[FrameGather]]
+  * rewrite plans `groupBy(frame_id).agg(sort_array(collect_list(
+  * struct(atom_id, x, y, z))))` over it as [[XtcScan.gathered]]: one
+  * `(frame_id, a)` row per frame, built from the decode buffer, with no
+  * atom rows, shuffle or sort in between (`explain` shows `XtcScan
+  * gathered(atom_id, …)`).
+  *
   * Usage: `spark.read.format("xtc").option("chunks", 100).load(path)`.
   */
 class XtcDataSource extends TableProvider with DataSourceRegister {
@@ -586,7 +595,7 @@ class XtcDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("xtc", XtcTable.Schema, schema, properties)
+    val o = new ReadOptions("xtc", properties)
     val mode = ParseMode.fromOptions("xtc", properties)
     val expectAtoms = Option(properties.get("top"))
       .map(PdbTopology.atomCount).getOrElse(-1)
@@ -616,6 +625,13 @@ object XtcTable {
     StructField("bv3x", FloatType, nullable = true),
     StructField("bv3y", FloatType, nullable = true),
     StructField("bv3z", FloatType, nullable = true)))
+
+  /** [[XtcScan.gathered]]'s rows: the frame and its atoms' fields. */
+  def gatheredSchema(fields: Seq[String]): StructType = StructType(Seq(
+    StructField("frame_id", LongType, nullable = false),
+    StructField("a", ArrayType(StructType(("atom_id" +: fields).map(f =>
+      StructField(f, Schema(f).dataType, nullable = false))),
+      containsNull = false), nullable = false)))
 }
 
 class XtcTable(paths: Seq[String], chunks: Int, unitScale: Double,
@@ -677,12 +693,21 @@ case class XtcFrameRange(startFrame: Long, endFrame: Long, startByte: Long,
 class XtcScan(paths: Seq[String], chunks: Int, unitScale: Double,
     required: StructType, frameLo: Long, frameHi: Long, limit: Int,
     mode: String, expectAtoms: Int = -1, atomLo: Int = 0,
-    atomHi: Int = Int.MaxValue, pushed: Seq[Filter] = Nil)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
+    atomHi: Int = Int.MaxValue, pushed: Seq[Filter] = Nil,
+    gather: Option[Seq[String]] = None)
+    extends FrameGatherScan with Batch {
+  override def readSchema(): StructType = gather match {
+    case Some(fs) => XtcTable.gatheredSchema(fs)
+    case None => required
+  }
   override def toBatch: Batch = this
   override def description(): String =
-    s"XtcScan PushedFilters: ${pushed.mkString("[", ", ", "]")}"
+    "XtcScan" + gather.fold("")(fs => fs.mkString(" gathered(atom_id, ", ", ", ")")) +
+      s" PushedFilters: ${pushed.mkString("[", ", ", "]")}"
+
+  override def gathered(fields: Seq[String]): Scan =
+    new XtcScan(paths, chunks, unitScale, required, frameLo, frameHi, limit,
+      mode, expectAtoms, atomLo, atomHi, pushed, Some(fields))
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -741,16 +766,22 @@ class XtcScan(paths: Seq[String], chunks: Int, unitScale: Double,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new XtcReaderFactory(unitScale, required, mode, atomLo, atomHi)
+    new XtcReaderFactory(unitScale, required, mode, atomLo, atomHi, gather)
 }
 
 class XtcReaderFactory(unitScale: Double, required: StructType,
-    mode: String, atomLo: Int = 0, atomHi: Int = Int.MaxValue)
+    mode: String, atomLo: Int = 0, atomHi: Int = Int.MaxValue,
+    gather: Option[Seq[String]] = None)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new XtcPartitionReader(unitScale, required,
-      partition.asInstanceOf[XtcFrameRange], mode, atomLo, atomHi)
+      : PartitionReader[InternalRow] = {
+    val range = partition.asInstanceOf[XtcFrameRange]
+    gather match {
+      case Some(fs) => new XtcGatherReader(unitScale, fs, range, mode, atomLo, atomHi)
+      case None => new XtcPartitionReader(unitScale, required, range, mode,
+        atomLo, atomHi)
+    }
+  }
 }
 
 /** Positioned read of a variable-record range: one seek to the
@@ -772,11 +803,11 @@ class XtcPartitionReader(unitScale: Double, required: StructType,
     required.fieldNames.exists(Set("x", "y", "z"))
 
   private var meta: XtcFrameMeta = _
-  private var xs: Array[Float] = Array.empty
+  protected var xs: Array[Float] = Array.empty
   private var boxNull = false
-  private var frame = range.startFrame - 1 // advanced by loadFrame
-  private var emit = 0
-  private var end = 0 // this frame's emitted atoms are [emit, end)
+  protected var frame = range.startFrame - 1 // advanced by loadFrame
+  protected var emit = 0
+  protected var end = 0 // this frame's emitted atoms are [emit, end)
   private var nAtoms = 0
   private var current: InternalRow = _
 
@@ -785,7 +816,7 @@ class XtcPartitionReader(unitScale: Double, required: StructType,
     required.fieldNames.map(canon)
   }
 
-  private def loadFrame(): Boolean = {
+  protected def loadFrame(): Boolean = {
     if (frame + 1 >= range.endFrame) return false
     frame += 1
     val m = XtcFormat.readFrameMeta(raf, range.filePath,
@@ -859,4 +890,46 @@ class XtcPartitionReader(unitScale: Double, required: StructType,
 
   override def get(): InternalRow = current
   override def close(): Unit = raf.close()
+}
+
+/** [[XtcScan.gathered]]'s reader: the same frame loop, one row per
+  * frame with at least one atom in bounds. Each row's `a` array is
+  * written straight from the decode buffer into an UnsafeRow; no atom
+  * row is built. */
+final class XtcGatherReader(unitScale: Double, fields: Seq[String],
+    range: XtcFrameRange, mode: String, atomLo: Int, atomHi: Int)
+    extends XtcPartitionReader(unitScale,
+      XtcTable.Schema(("frame_id" +: "atom_id" +: fields).toSet),
+      range, mode, atomLo, atomHi) {
+
+  // offset of each field within an atom's (x, y, z) triple
+  private val offsets = fields.map(f => "xyz".indexOf(f)).toArray
+  private val rowWriter = new UnsafeRowWriter(2)
+  private val arrayWriter = new UnsafeArrayWriter(rowWriter, 8)
+  private val atomWriter = new UnsafeRowWriter(arrayWriter, 1 + offsets.length)
+
+  override def next(): Boolean = {
+    do { if (!loadFrame()) return false } while (emit >= end)
+    rowWriter.reset()
+    rowWriter.zeroOutNullBytes()
+    rowWriter.write(0, frame + range.frameOffset)
+    val arrayStart = rowWriter.cursor()
+    arrayWriter.initialize(end - emit)
+    var a = emit
+    while (a < end) {
+      val atomStart = arrayWriter.cursor()
+      atomWriter.resetRowWriter()
+      atomWriter.write(0, a)
+      var j = 0
+      while (j < offsets.length) {
+        atomWriter.write(j + 1, xs(3 * a + offsets(j))); j += 1
+      }
+      arrayWriter.setOffsetAndSizeFromPreviousCursor(a - emit, atomStart)
+      a += 1
+    }
+    rowWriter.setOffsetAndSizeFromPreviousCursor(1, arrayStart)
+    true
+  }
+
+  override def get(): InternalRow = rowWriter.getRow
 }

@@ -162,14 +162,13 @@ class XyzDataSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     XyzTable.Schema
 
-  /** Plan-time option validation. The source's fixed schema must match
-    * a user-supplied one exactly (erroring beats silently ignoring it).
-    * Paths: a file, a directory of shards, a `load(paths: _*)` list, or
-    * a trailing-segment glob — all resolved by [[MultiPath]] with
-    * globally contiguous frame ids across files. */
+  /** Plan-time option validation. Paths: a file, a directory of
+    * shards, a `load(paths: _*)` list, or a trailing-segment glob — all
+    * resolved by [[MultiPath]] with globally contiguous frame ids
+    * across files. */
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("xyz", XyzTable.Schema, schema, properties)
+    val o = new ReadOptions("xyz", properties)
     val mode = ParseMode.fromOptions("xyz", properties)
     new XyzTable(o.paths, o.chunks, o.unitScale(1.0), mode)
   }

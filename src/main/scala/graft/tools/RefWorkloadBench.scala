@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * scan by default (seek-addressable and uncompressed), or the XTC the
   * published numbers used through the clean-room codec (`--format
   * xtc`, where the `atom_id < 500` bound stops each frame's decode at
-  * the slice) → per-frame gather of the 500-atom slice →
+  * the slice, and [[graft.sources.FrameGather]] plans the gather as the
+  * XTC frame-wide scan) → per-frame gather of the 500-atom slice →
   * ONE `pair_dist_stats` kernel call per frame (all 124,750 distances
   * in a tight codegen'd JVM loop) → global reduction. The summary
   * aggregation forces every distance to be computed while keeping the

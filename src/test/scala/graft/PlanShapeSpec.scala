@@ -276,4 +276,28 @@ class PlanShapeSpec extends AnyFunSuite {
       }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
+
+  test("traj_ref's op over XTC gathers each frame in the scan: no hash " +
+    "exchange, collect_list or ObjectHashAggregate; only the final " +
+    "reduce's SinglePartition exchange") {
+    import org.apache.spark.sql.functions._
+    // trajbench's traj_ref op (plans/frame_gather/ holds both plans)
+    val frames = spark.read.format("xtc").option("chunks", 1)
+      .load("fixtures/traj_xtc/traj.xtc")
+      .filter(col("atom_id") < 500)
+      .select(col("frame_id"), col("atom_id"), col("x"), col("y"), col("z"))
+      .groupBy("frame_id")
+      .agg(sort_array(collect_list(struct(col("atom_id"), col("x"),
+        col("y"), col("z")))).as("a"))
+    val op = frames.select(expr("pair_dist_stats(transform(a, s -> s.x), " +
+        "transform(a, s -> s.y), transform(a, s -> s.z))").as("st"))
+      .agg(sum(col("st.cnt")), sum(col("st.sum")), min(col("st.mn")),
+        max(col("st.mx")))
+    val plan = op.queryExecution.executedPlan.toString
+    assert(!plan.contains("hashpartitioning") && !plan.contains("collect_list") &&
+      !plan.contains("ObjectHashAggregate"), plan)
+    assert("Exchange".r.findAllIn(plan).length == 1 &&
+      plan.contains("Exchange SinglePartition"), plan)
+    assert(plan.contains("XtcScan gathered(atom_id, x, y, z)"), plan)
+  }
 }

@@ -4,16 +4,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.connector.catalog.TableProvider
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources._
 
-/** The read-option parser all 14 trajectory sources share
-  * ([[graft.sources.ReadOptions]]): a bad `chunks`, a non-numeric
-  * `unit_scale` (where the format takes one) and a user schema that
-  * differs from the source's fixed one are plan-time
-  * IllegalArgumentExceptions naming the format and the option. */
+/** The option parser all 14 trajectory sources share
+  * ([[graft.sources.ReadOptions]]): a bad `chunks` and a non-numeric
+  * `unit_scale` (where the format takes one, on the pdb write path too)
+  * are plan-time IllegalArgumentExceptions naming the format and the
+  * option. A user schema is refused by Spark itself. */
 class ReadOptionsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -35,16 +34,14 @@ class ReadOptionsSpec extends AnyFunSuite {
     ("xyz", new XyzDataSource, true))
 
   /** getTable is where the options are parsed; no file is opened. */
-  private def table(p: TableProvider, schema: StructType,
-      opts: (String, String)*) =
-    p.getTable(schema, Array.empty[Transform],
+  private def table(p: TableProvider, opts: (String, String)*) =
+    p.getTable(null, Array.empty[Transform],
       (Map("path" -> "/nonexistent/traj") ++ opts).asJava)
 
   providers.foreach { case (fmt, p, takesUnitScale) =>
     test(s"$fmt: bad chunks, unit_scale and read schema are rejected " +
       "at plan time, naming the format and the option") {
-      assert(table(p, null).name().startsWith(s"$fmt:"))
-      assert(table(p, p.inferSchema(null)).name().startsWith(s"$fmt:"))
+      assert(table(p).name().startsWith(s"$fmt:"))
       def rejected(key: String, value: String): Unit = {
         val e = intercept[IllegalArgumentException] {
           spark.read.format(fmt).option(key, value).load("/nonexistent/t")
@@ -55,12 +52,26 @@ class ReadOptionsSpec extends AnyFunSuite {
       rejected("chunks", "0")
       rejected("chunks", "abc")
       if (takesUnitScale) rejected("unit_scale", "abc")
-      else assert(table(p, null, "unit_scale" -> "abc") != null)
-      val e = intercept[IllegalArgumentException] {
-        table(p, StructType.fromDDL("frame_id BIGINT, a INT"))
+      else assert(table(p, "unit_scale" -> "abc") != null)
+      // no provider takes external metadata: Spark refuses .schema(...)
+      // before any option is read
+      val e = intercept[UnsupportedOperationException] {
+        spark.read.format(fmt).schema("frame_id BIGINT, a INT")
+          .load("/nonexistent/t")
       }
-      assert(e.getMessage.contains(s"$fmt source has a fixed schema"),
+      assert(e.getMessage.contains("does not support user-specified schema"),
         e.getMessage)
     }
+  }
+
+  test("pdb write: a non-numeric unit_scale is rejected naming the " +
+    "format and the option") {
+    val df = spark.read.format("xtc").load("fixtures/traj_xtc/traj.xtc")
+    val out = java.nio.file.Files.createTempDirectory("pdbopt").toString
+    val e = intercept[IllegalArgumentException] {
+      df.write.format("pdb").option("unit_scale", "abc").mode("overwrite").save(out)
+    }
+    assert(e.getMessage.contains("pdb") && e.getMessage.contains("unit_scale"),
+      e.getMessage)
   }
 }
