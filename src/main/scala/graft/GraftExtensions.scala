@@ -86,6 +86,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(fn("topk_pairs",
       "topk_pairs(v, id, k) - partial-aggregatable per-group top-k of (v, id) pairs",
       es => TopKPairs.build(es).toAggregateExpression()))
-    ext.injectPlannerStrategy(_ => graft.sources.FrameGather.Planning)
+    ext.injectPlannerStrategy(_ => graft.sources.FrameGather)
   }
 }

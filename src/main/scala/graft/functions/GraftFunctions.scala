@@ -1019,7 +1019,8 @@ case class TriclinicMicDist(children: Seq[Expression]) extends Expression {
 }
 
 object GraftFunctions {
-  /** Idempotent per-session registration. */
+  /** Idempotent per-session registration of the functions and the
+    * frame-gather planner strategy ([[graft.sources.FrameGather]]). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("simhash64",
@@ -1088,8 +1089,8 @@ object GraftFunctions {
       es => CosineClosePairs.build(es), "scala_udf")
     reg.createOrReplaceTempFunction("topk_pairs",
       es => TopKPairs.build(es).toAggregateExpression(), "scala_udf")
-    val extra = spark.experimental.extraOptimizations
+    val extra = spark.experimental.extraStrategies
     if (!extra.contains(graft.sources.FrameGather))
-      spark.experimental.extraOptimizations = extra :+ graft.sources.FrameGather
+      spark.experimental.extraStrategies = extra :+ graft.sources.FrameGather
   }
 }

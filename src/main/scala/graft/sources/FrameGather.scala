@@ -3,8 +3,6 @@ package graft.sources
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, BinaryComparison, CreateNamedStruct, EqualNullSafe, Expression, Literal, PredicateHelper, SortArray}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectList, Complete}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.TreePattern.AGGREGATE
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.types.{BooleanType, FloatType, IntegerType}
@@ -18,33 +16,26 @@ import org.apache.spark.sql.types.{BooleanType, FloatType, IntegerType}
   *     DataSourceV2ScanRelation(scan: FrameGatherScan)
   * }}}
   *
-  * becomes `Filter?(DataSourceV2ScanRelation(scan.gathered(f…)))` with
+  * is planned as `Filter?(DataSourceV2ScanRelation(scan.gathered(f…)))` with
   * the same `frame_id` attribute and `a` attribute (name, exprId and
   * type). Conjuncts on `frame_id` alone stay in the Filter. `atom_id`
   * compared (`<`, `<=`, `>`, `>=`, `=`) with an Int literal is dropped:
   * the scan was handed it as a pushed filter, and its atom bound
   * captures exactly that set. Anything else — another predicate, `IN`,
   * a struct not led by `atom_id`, descending order, a DISTINCT or
-  * FILTER clause, another aggregate — leaves the plan as it is.
+  * FILTER clause, another aggregate — keeps the aggregate.
   *
-  * Installed by [[graft.functions.GraftFunctions.register]] (as an
-  * extra optimization, which runs after scan pushdown) and by
-  * [[graft.GraftExtensions]] through [[Planning]]: injected optimizer
-  * rules run before the pushdown builds the scan, so the extension
-  * applies the rewrite when the optimized plan is planned. */
-object FrameGather extends Rule[LogicalPlan] with PredicateHelper {
+  * A planner strategy: it plans the optimized plan, where V2 scan
+  * pushdown has already built the scan and its atom bound (an optimizer
+  * rule injected with `injectOptimizerRule` runs before that pushdown
+  * and never sees the scan). Installed by
+  * [[graft.functions.GraftFunctions.register]] (an extra strategy) and
+  * by [[graft.GraftExtensions]] (`injectPlannerStrategy`). */
+object FrameGather extends SparkStrategy with PredicateHelper {
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformUpWithPruning(_.containsPattern(AGGREGATE)) {
-      case agg: Aggregate => rewrite(agg).getOrElse(agg)
-    }
-
-  /** The physical-planning form of the same rewrite. */
-  object Planning extends SparkStrategy {
-    override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case agg: Aggregate => rewrite(agg).map(planLater).toSeq
-      case _ => Nil
-    }
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case agg: Aggregate => rewrite(agg).map(planLater).toSeq
+    case _ => Nil
   }
 
   private val coordinates = Set("x", "y", "z")

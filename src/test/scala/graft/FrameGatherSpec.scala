@@ -5,7 +5,6 @@ import java.nio.file.Files
 import scala.util.Random
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,17 +15,16 @@ import graft.sources.XtcWrite
   * per-frame `sort_array(collect_list(struct(atom_id, …)))` over an XTC
   * scan is planned as the scan's frame-wide form, and answers exactly
   * as the same query over `localCheckpoint()`ed atom rows, which is no
-  * DSv2 scan, so nothing rewrites it. Every case runs in two sessions:
-  * one with the extension's planning strategy alone, and one where
-  * `GraftFunctions.register` added the optimizer rule. */
+  * DSv2 scan, so nothing rewrites it. The session is registered with
+  * `GraftFunctions.register`, whose extra strategy plans ahead of the
+  * one the extension injects. */
 class FrameGatherSpec extends AnyFunSuite {
-  private lazy val planned: SparkSession = SparkTestBase.spark.newSession()
-  private lazy val optimized: SparkSession = {
+  private lazy val spark: SparkSession = {
     val s = SparkTestBase.spark.newSession()
+    functions.GraftFunctions.register(s)
     functions.GraftFunctions.register(s)
     s
   }
-  private def sessions = Seq("strategy" -> planned, "rule" -> optimized)
 
   /** 3 frames × 400 atoms (graft.tools.XtcFixture). */
   private val fixture = "fixtures/traj_xtc/traj.xtc"
@@ -69,46 +67,40 @@ class FrameGatherSpec extends AnyFunSuite {
     * checkpointed rows: equal frames and pair stats, and the gather
     * planned as the wide scan exactly when `wide`. */
   private def check(load: SparkSession => DataFrame, wide: Boolean)(
-      query: DataFrame => DataFrame): Unit =
-    for ((name, s) <- sessions) {
-      val df = load(s)
-      val got = query(df)
-      val want = query(df.localCheckpoint())
-      val plan = planOf(got)
-      if (wide) {
-        assert(plan.contains("gathered(") && !plan.contains("ObjectHashAggregate"),
-          s"$name: $plan")
-        // the rule rewrites the logical plan; the strategy only the physical
-        val logical = got.queryExecution.optimizedPlan
-        val gatherAgg = logical.exists {
-          case a: Aggregate => a.aggregateExpressions.exists(_.toString.contains("collect_list"))
-          case _ => false
-        }
-        assert(gatherAgg == (name == "strategy"), s"$name: $logical")
-      } else
-        assert(!plan.contains("gathered(") && plan.contains("ObjectHashAggregate"),
-          s"$name: $plan")
-      assert(got.orderBy("frame_id").collect().toSeq ==
-        want.orderBy("frame_id").collect().toSeq, name)
-      val fields = got.schema.find(_.name == "a").map(_.dataType).collect {
-        case ArrayType(st: StructType, _) => st.fieldNames.toSet
-      }.getOrElse(Set.empty[String])
-      if (Set("x", "y", "z").subsetOf(fields)) {
-        // the kernel's input drops frame_id (and, in the negative cases, any
-        // unused extra aggregate, which may then take the wide scan)
-        if (wide) assert(planOf(stats(got)).contains("gathered("), name)
-        val g = stats(got).collect()(0)
-        val w = stats(want).collect()(0)
-        assert(g.get(0) == w.get(0) && g.get(2) == w.get(2) && g.get(3) == w.get(3),
-          s"$name: $g != $w")
-        if (!w.isNullAt(1))
-          assert(math.abs(g.getDouble(1) - w.getDouble(1)) <= 1e-9 * w.getDouble(1),
-            s"$name: $g != $w")
-      }
+      query: DataFrame => DataFrame): Unit = {
+    val df = load(spark)
+    val got = query(df)
+    val want = query(df.localCheckpoint())
+    val plan = planOf(got)
+    if (wide)
+      assert(plan.contains("gathered(") && !plan.contains("ObjectHashAggregate"), plan)
+    else
+      assert(!plan.contains("gathered(") && plan.contains("ObjectHashAggregate"), plan)
+    assert(got.orderBy("frame_id").collect().toSeq ==
+      want.orderBy("frame_id").collect().toSeq)
+    val fields = got.schema.find(_.name == "a").map(_.dataType).collect {
+      case ArrayType(st: StructType, _) => st.fieldNames.toSet
+    }.getOrElse(Set.empty[String])
+    if (Set("x", "y", "z").subsetOf(fields)) {
+      // the kernel's input drops frame_id (and, in the negative cases, any
+      // unused extra aggregate, which may then take the wide scan)
+      if (wide) assert(planOf(stats(got)).contains("gathered("))
+      val g = stats(got).collect()(0)
+      val w = stats(want).collect()(0)
+      assert(g.get(0) == w.get(0) && g.get(2) == w.get(2) && g.get(3) == w.get(3),
+        s"$g != $w")
+      if (!w.isNullAt(1))
+        assert(math.abs(g.getDouble(1) - w.getDouble(1)) <= 1e-9 * w.getDouble(1),
+          s"$g != $w")
     }
+  }
 
   private def xtc(path: String, opts: (String, String)*)(s: SparkSession) =
     s.read.format("xtc").options(opts.toMap).load(path)
+
+  test("register installs the strategy once") {
+    assert(spark.experimental.extraStrategies.count(_ == sources.FrameGather) == 1)
+  }
 
   test("atom_id < k at the frame's edges: k = 0 gathers no frame, " +
     "k past nAtoms gathers them all") {

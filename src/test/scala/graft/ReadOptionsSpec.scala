@@ -12,7 +12,8 @@ import graft.sources._
   * ([[graft.sources.ReadOptions]]): a bad `chunks` and a non-numeric
   * `unit_scale` (where the format takes one, on the pdb write path too)
   * are plan-time IllegalArgumentExceptions naming the format and the
-  * option. A user schema is refused by Spark itself. */
+  * option. A user schema is refused by Spark itself, naming the
+  * provider. */
 class ReadOptionsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -54,12 +55,14 @@ class ReadOptionsSpec extends AnyFunSuite {
       if (takesUnitScale) rejected("unit_scale", "abc")
       else assert(table(p, "unit_scale" -> "abc") != null)
       // no provider takes external metadata: Spark refuses .schema(...)
-      // before any option is read
+      // at load, before any option is read, naming the provider class
       val e = intercept[UnsupportedOperationException] {
         spark.read.format(fmt).schema("frame_id BIGINT, a INT")
           .load("/nonexistent/t")
       }
-      assert(e.getMessage.contains("does not support user-specified schema"),
+      assert(e.getMessage.contains(p.getClass.getSimpleName) &&
+        e.getMessage.toLowerCase.contains(fmt) &&
+        e.getMessage.contains("does not support user-specified schema"),
         e.getMessage)
     }
   }
