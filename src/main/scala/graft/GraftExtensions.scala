@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-extensions entry point (SURVEY §2.9): registers every graft
-  * native function and the frame-gather rewrite
-  * ([[graft.sources.FrameGather]]) at session build time, so a cluster
+  * native function, the frame-gather rewrite
+  * ([[graft.sources.FrameGather]]) and the field-extraction rewrite
+  * ([[graft.functions.ArrayFieldExtract]]) at session build time, so a cluster
   * deployment enables the library with
   *
   *   --conf spark.sql.extensions=graft.GraftExtensions
@@ -87,5 +88,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "topk_pairs(v, id, k) - partial-aggregatable per-group top-k of (v, id) pairs",
       es => TopKPairs.build(es).toAggregateExpression()))
     ext.injectPlannerStrategy(_ => graft.sources.FrameGather)
+    ext.injectOptimizerRule(_ => ArrayFieldExtract)
   }
 }

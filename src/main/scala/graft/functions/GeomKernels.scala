@@ -86,11 +86,28 @@ object GeomKernels {
     * workload (compute_distances over itertools.combinations(500, 2),
     * examples/dask-traj_example.ipynb cell 11) as ONE kernel call per
     * frame: the pair set is the full combination range, so it needs no
-    * materialized pair table at all, and the 124,750 sqrt evaluations
-    * per frame stay in one tight JVM loop inside the codegen'd stage
-    * (the HOF-composed form evaluates interpreted per element).
+    * materialized pair table at all, and the 124,750 distances per
+    * frame stay in one JVM loop inside the codegen'd stage.
     * Returns (sum, min, max, count) — aggregable summaries that force
-    * every distance to be computed without materializing 156M rows. */
+    * every distance to be computed without materializing 156M rows.
+    *
+    * The loop is written so C2 can vectorize it: for each atom `i`,
+    * every statement over `j > i` is element-wise into per-column
+    * accumulators (`lo(j)`/`hi(j)` the least/greatest squared distance
+    * seen in column `j`, `s(j)` the running sum of distances), and one
+    * O(n) pass folds the columns. `java.lang.Math` is called directly:
+    * its min/max/sqrt are C2 intrinsics. Each squared distance is the
+    * same left-to-right `dx*dx + dy*dy + dz*dz` over the floats widened
+    * to double, and `sqrt` is monotone and correctly rounded, so
+    * `sqrt(min d²)` and `sqrt(max d²)` are bit-identical to the min and
+    * max over the per-pair `sqrt(d²)`. Only the summation order of
+    * `sum` differs from a pair-by-pair loop (TrajQueries.trajPairStats
+    * leaves `sum` out of its oracle for that reason).
+    *
+    * With finite coordinates no squared distance is NaN (float inputs
+    * cannot overflow a double square), so min/max never see NaN. A
+    * frame with a NaN or infinite coordinate runs [[pairDistStatsByPair]]
+    * instead, whose `<`/`>` selection skips NaN distances. */
   def pairDistStats(xs: org.apache.spark.sql.catalyst.util.ArrayData,
       ys: org.apache.spark.sql.catalyst.util.ArrayData,
       zs: org.apache.spark.sql.catalyst.util.ArrayData)
@@ -99,22 +116,60 @@ object GeomKernels {
     val x = new Array[Double](n)
     val y = new Array[Double](n)
     val z = new Array[Double](n)
+    var finite = true
     var i = 0
     while (i < n) {
       x(i) = xs.getFloat(i); y(i) = ys.getFloat(i); z(i) = zs.getFloat(i)
+      finite &= java.lang.Double.isFinite(x(i)) &&
+        java.lang.Double.isFinite(y(i)) && java.lang.Double.isFinite(z(i))
       i += 1
     }
+    if (n < 2) return distStatsRow(0.0, 0.0, 0.0, 0L)
+    if (!finite) return pairDistStatsByPair(x, y, z)
+    val lo = new Array[Double](n)
+    java.util.Arrays.fill(lo, Double.PositiveInfinity)
+    val hi = new Array[Double](n) // squared distances are >= +0.0
+    val s = new Array[Double](n)
+    i = 0
+    while (i < n - 1) {
+      val xi = x(i); val yi = y(i); val zi = z(i)
+      var j = i + 1
+      while (j < n) {
+        val dx = x(j) - xi; val dy = y(j) - yi; val dz = z(j) - zi
+        val d2 = dx * dx + dy * dy + dz * dz
+        lo(j) = Math.min(lo(j), d2)
+        hi(j) = Math.max(hi(j), d2)
+        s(j) += Math.sqrt(d2)
+        j += 1
+      }
+      i += 1
+    }
+    var mn2 = lo(1); var mx2 = hi(1); var sum = 0.0
+    var j = 1
+    while (j < n) {
+      mn2 = Math.min(mn2, lo(j)); mx2 = Math.max(mx2, hi(j)); sum += s(j)
+      j += 1
+    }
+    distStatsRow(sum, Math.sqrt(mn2), Math.sqrt(mx2), n.toLong * (n - 1) / 2)
+  }
+
+  /** The pair-by-pair form of [[pairDistStats]] for frames with a NaN
+    * or infinite coordinate: a NaN distance adds to `sum` and `cnt` but
+    * is never selected as min or max. */
+  private def pairDistStatsByPair(x: Array[Double], y: Array[Double],
+      z: Array[Double]): org.apache.spark.sql.catalyst.InternalRow = {
+    val n = x.length
     var sum = 0.0
     var mn = Double.MaxValue
     var mx = Double.MinValue
     var cnt = 0L
-    i = 0
+    var i = 0
     while (i < n) {
       var j = i + 1
       val xi = x(i); val yi = y(i); val zi = z(i)
       while (j < n) {
         val dx = x(j) - xi; val dy = y(j) - yi; val dz = z(j) - zi
-        val d = math.sqrt(dx * dx + dy * dy + dz * dz)
+        val d = Math.sqrt(dx * dx + dy * dy + dz * dz)
         sum += d
         if (d < mn) mn = d
         if (d > mx) mx = d
@@ -123,10 +178,13 @@ object GeomKernels {
       }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](sum, if (cnt == 0) 0.0 else mn,
-        if (cnt == 0) 0.0 else mx, cnt))
+    distStatsRow(sum, mn, mx, cnt)
   }
+
+  private def distStatsRow(sum: Double, mn: Double, mx: Double, cnt: Long)
+      : org.apache.spark.sql.catalyst.InternalRow =
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](sum, mn, mx, cnt))
 
   /** One axis of a wide frame's per-row coordinate sum, accumulated in
     * scaled BIGINT (coordinates are round(·,6), so ×10⁶ is integral):

@@ -1019,8 +1019,9 @@ case class TriclinicMicDist(children: Seq[Expression]) extends Expression {
 }
 
 object GraftFunctions {
-  /** Idempotent per-session registration of the functions and the
-    * frame-gather planner strategy ([[graft.sources.FrameGather]]). */
+  /** Idempotent per-session registration of the functions, the
+    * frame-gather planner strategy ([[graft.sources.FrameGather]]) and
+    * the field-extraction rewrite ([[ArrayFieldExtract]]). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("simhash64",
@@ -1092,5 +1093,8 @@ object GraftFunctions {
     val extra = spark.experimental.extraStrategies
     if (!extra.contains(graft.sources.FrameGather))
       spark.experimental.extraStrategies = extra :+ graft.sources.FrameGather
+    val rules = spark.experimental.extraOptimizations
+    if (!rules.contains(ArrayFieldExtract))
+      spark.experimental.extraOptimizations = rules :+ ArrayFieldExtract
   }
 }

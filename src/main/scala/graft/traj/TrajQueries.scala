@@ -78,10 +78,12 @@ object TrajQueries {
     * via the `pair_dist_stats` kernel (one call evaluates all C(n,2)
     * distances per frame — the RefWorkloadBench hot loop, here under
     * the oracle gate). Emitted columns are the selection/count outputs
-    * (min, max, n_pairs): each candidate distance is computed with the
-    * identical IEEE expression in both engines (floats widened to
-    * double, dx·dx+dy·dy+dz·dz left-to-right, sqrt), so the min/max
-    * SELECTIONS are bit-identical; the kernel's running double SUM is
+    * (min, max, n_pairs): both engines form each squared distance with
+    * the identical IEEE expression (floats widened to double,
+    * dx·dx+dy·dy+dz·dz left-to-right). The oracle takes min/max over
+    * the per-pair sqrt; the kernel selects the least/greatest squared
+    * distance and takes one sqrt, which is the same double because
+    * sqrt is monotone and correctly rounded. The kernel's double SUM is
     * reduction-order-dependent and deliberately not emitted. */
   def trajPairStats(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
@@ -567,7 +569,8 @@ object TrajQueries {
     graft.functions.GraftFunctions.register(s)
     // bounded broadcast: one row, |atoms| doubles (atoms are the
     // physically bounded axis — see TrajModel.positions). The one-row
-    // transform lambda here runs once per dataset, not per frame.
+    // `e -> e.mass` transform runs once per dataset, not per frame, and
+    // is planned as a field extraction (functions.ArrayFieldExtract).
     val massArr = TrajModel.topologyShared(s, d)
       .agg(expr("transform(sort_array(collect_list(struct(atom_id, " +
         "CAST(mass AS DOUBLE) AS mass))), e -> e.mass)").as("masses"))

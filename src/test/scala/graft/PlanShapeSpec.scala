@@ -299,5 +299,13 @@ class PlanShapeSpec extends AnyFunSuite {
     assert("Exchange".r.findAllIn(plan).length == 1 &&
       plan.contains("Exchange SinglePartition"), plan)
     assert(plan.contains("XtcScan gathered(atom_id, x, y, z)"), plan)
+    // the x/y/z extraction is a codegen'd field extractor, not a
+    // lambda, so the kernel's Project joins whole-stage codegen
+    // (plans/pair_kernel/ holds the plans before and after)
+    op.collect()
+    val executed = op.queryExecution.executedPlan.toString
+    assert(!executed.contains("lambdafunction"), executed)
+    assert("""\*\(\d+\) Project \[pair_dist_stats\(""".r.findFirstIn(executed).nonEmpty,
+      executed)
   }
 }
