@@ -201,11 +201,11 @@ object Bench {
       // shared-artifact accounting (VERDICT r20 "what's wrong" #1): the
       // build-once tier artifacts (minhash/ngram-DF pair sets, CC
       // clusters, normalized vectors, k-means fits, PQ training) are
-      // evicted before EVERY pass, so each pass pays each tier build
-      // exactly once and the per-query min keeps the build cost on the
-      // tier's first consumer instead of reporting a warm cache read
-      // (r20: q_dedup_ngram_df measured 0.15 s as a pass-2 cache hit
-      // vs 2.4 s real tier cost). TrajModel's shared positions view is
+      // evicted before EVERY pass and their barrier blocks freed, so
+      // each pass pays each tier build exactly once and the per-query
+      // min keeps the build cost on the tier's first consumer instead
+      // of reporting a warm cache read (r20: q_dedup_ngram_df measured
+      // 0.15 s as a pass-2 cache hit vs 2.4 s real tier cost). TrajModel's shared positions view is
       // NOT evicted: the reference baseline itself reports the (lazy)
       // trajectory load separately from compute (BASELINE.md), and the
       // warm-up above materializes it untimed on purpose.

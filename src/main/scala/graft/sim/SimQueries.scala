@@ -3,7 +3,7 @@ package graft.sim
 import graft.util.Barrier.BarrierOps
 import graft.QueryDef
 import graft.rel.Tables
-import graft.util.Fanout
+import graft.util.{Fanout, SharedArtifacts}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -64,53 +64,22 @@ object SimQueries {
 
   // ------------------------------------------------ shared session state
 
-  /** (session, dir, key) → checkpointed DataFrame state shared across
-    * the similarity queries (the TrajModel.shared / pqTrainShared
-    * idiom): the normalized vector table and the k-means fit are
-    * identical in every query that uses them, so each is computed once
-    * per session+dir. Same lifetime contract as pqCache: first-touch
-    * snapshot of the files, evicted on application end. get +
-    * putIfAbsent (not computeIfAbsent) because builders nest (kmeans →
-    * vecs). */
-  private val simCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), AnyRef]()
-
-  private val simListenerInstalled =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
+  /** (session, dir, key) → state shared across the similarity
+    * queries, built once in [[graft.util.SharedArtifacts]] scope `sim`:
+    * the normalized vector table, the k-means fits, the PQ training run
+    * and the corpus-size scalars are identical in every query that uses
+    * them, so each is computed once per session+dir. */
   private def shared[T <: AnyRef](s: SparkSession, d: String, key: String)
-      (build: => T): T = {
-    val k = (s, d, key)
-    val existing = simCache.get(k)
-    if (existing != null) existing.asInstanceOf[T]
-    else {
-      val built = build
-      val prev = simCache.putIfAbsent(k, built)
-      if (prev == null && simListenerInstalled.add(s)) {
-        s.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                end: org.apache.spark.scheduler
-                  .SparkListenerApplicationEnd): Unit = {
-              simCache.keySet.removeIf(_._1 eq s)
-              simListenerInstalled.remove(s)
-            }
-          })
-      }
-      if (prev != null) prev.asInstanceOf[T] else built
-    }
-  }
+      (build: => T): T =
+    SharedArtifacts.get(s, "sim", s"$d:$key")(build)
 
   /** Bench-pass eviction (VERDICT r20 "what's wrong" #1 — shared-
-    * artifact accounting): drop this session's shared vector table,
-    * k-means fits and PQ training artifacts so the next bench pass
-    * pays each build again (see TextQueries.evictShared). The scalar
-    * plan-dial memos (maxBucketCache) stay: they choose between
-    * output-identical plans, they are not result artifacts. */
-  private[graft] def evictShared(s: SparkSession): Unit = {
-    simCache.keySet.removeIf(_._1 eq s)
-    pqCache.keySet.removeIf(_._1 eq s)
-  }
+    * artifact accounting): drop this session's `sim` entries — vector
+    * table, k-means fits, PQ training, scalars — and free their blocks,
+    * so the next bench pass pays each build again (see
+    * TextQueries.evictShared). */
+  private[graft] def evictShared(s: SparkSession): Unit =
+    SharedArtifacts.evict(s, "sim")
 
   private def vecsShared(s: SparkSession, d: String): DataFrame =
     shared(s, d, "vecs")(withNorm(s, d).graftBarrier)
@@ -1434,48 +1403,16 @@ object SimQueries {
     (vecs, e, c1, codes)
   }
 
-  /** Trained PQ state cached per (session, dir) — the production
+  /** Trained PQ state shared per (session, dir) — the production
     * shape: ADC search reads PERSISTED codebooks and codes (training
     * is an offline job, never re-run per query), so q_emb_pq and
-    * q_sim_ann_pq ride ONE training run. Same get+putIfAbsent pattern
-    * as TrajModel.shared (training is deterministic end to end, so a
-    * benign double-build race is harmless). */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)]()
-
-  private val pqListenerInstalled =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  /** Cached state pins localCheckpoint blocks for the session lifetime
-    * and serves the codebooks trained from the files as they were at
-    * first touch — the offline-training contract (retraining per query
-    * is the bug this cache fixes; if the files under `dir` change
-    * within a session, stop the session to retrain). Entries for a
-    * session are evicted when its application ends, so long-lived
-    * multi-session processes don't accumulate dead block references. */
+    * q_sim_ann_pq ride ONE training run. It serves the codebooks
+    * trained from the files as they were at first touch — the
+    * offline-training contract (retraining per query is the bug this
+    * memo fixes). */
   private def pqTrainShared(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val k = (s, d)
-    val existing = pqCache.get(k)
-    if (existing != null) existing
-    else {
-      val built = pqTrain(s, d)
-      val prev = pqCache.putIfAbsent(k, built)
-      // one eviction listener per SESSION (not per (session, dir))
-      if (prev == null && pqListenerInstalled.add(s)) {
-        s.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                end: org.apache.spark.scheduler
-                  .SparkListenerApplicationEnd): Unit = {
-              pqCache.keySet.removeIf(_._1 eq s)
-              pqListenerInstalled.remove(s)
-            }
-          })
-      }
-      if (prev != null) prev else built
-    }
-  }
+      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+    shared(s, d, "pq")(pqTrain(s, d))
 
   def embPq(s: SparkSession, d: String): DataFrame = {
     val (vecs, e, c1, codes) = pqTrainShared(s, d)

@@ -1,5 +1,9 @@
 package graft.text
 
+import java.util.concurrent.{ExecutionException,
+  ExecutorCompletionService, Executors, Future, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
 import graft.rel.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -60,6 +64,7 @@ import org.apache.spark.sql.functions._
   * real cluster.
   */
 object DedupPipeline {
+  private val calls = new AtomicLong()
 
   /** The registered composed query. */
   def dedupPipeline(s: SparkSession, d: String): DataFrame = {
@@ -87,43 +92,52 @@ object DedupPipeline {
     //    sequentially, those build jobs run one tier after another;
     //    submitted from a 3-thread driver pool, they overlap, and the
     //    next tier's tasks back-fill slots a straggler tail leaves idle
-    //    (FIFO scheduling is exactly the wanted back-fill). Job
-    //    descriptions are thread-local, so each tier stays labeled.
+    //    (FIFO scheduling is exactly the wanted back-fill). All three
+    //    run under one job group per call, labeled per tier. Tiers are
+    //    awaited in completion order: the first failure cancels the
+    //    group (future jobs included), interrupts the siblings and
+    //    waits for them to unwind, so a cancelled build is never left
+    //    half-registered; then the original cause is rethrown.
     //    When the artifacts are already warm (earlier queries in the
     //    same session), each call returns the memoized frame and the
     //    pool is a no-op. Results and plans are unchanged: the threads
     //    only decide WHEN the same build-once jobs run.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    val sc = s.sparkContext
+    val group = s"dedup_pipeline-${calls.incrementAndGet()}"
+    val pool = Executors.newFixedThreadPool(3)
     val (mh, ng, semTier) =
       try {
-        def submit[T](label: String)(f: => T)
-            : java.util.concurrent.Future[T] =
-          pool.submit(new java.util.concurrent.Callable[T] {
-            def call(): T = {
-              // expr()/parser resolution reads the thread-local active
-              // session — pin it in the pool thread
-              SparkSession.setActiveSession(s)
-              s.sparkContext.setJobDescription(s"dedup_pipeline: $label")
-              try f finally s.sparkContext.setJobDescription(null)
-            }
+        val done = new ExecutorCompletionService[DataFrame](pool)
+        def submit(label: String)(f: => DataFrame): Future[DataFrame] =
+          done.submit(() => {
+            // expr()/parser resolution reads the thread-local active
+            // session — pin it in the pool thread
+            SparkSession.setActiveSession(s)
+            sc.setJobGroup(group, s"dedup_pipeline: $label")
+            try f finally sc.clearJobGroup()
           })
-        val fmh = submit("minhash tier")(
-          TextQueries.minhashPairsProbe(s, d).select("d1", "d2"))
-        // the SHARED tier artifact (r20-opt): q_dedup_ngram_df reads
-        // the same build-once pair set, so the pipeline no longer
-        // re-derives the census + two-alphabet gather + pair
-        // enumeration — the minhash-pair sharing contract, extended
-        val fng = submit("ngram-DF tier")(
-          TextQueries.ngramDfPairsShared(s, d).select("d1", "d2"))
-        val fsem = submit("semantic tier")(
-          graft.sim.SimQueries.semPairsScaled(s, d, tau = 0.4))
-        def get[T](fut: java.util.concurrent.Future[T]): T =
-          try fut.get()
+        val tiers = Seq(
+          submit("minhash tier")(
+            TextQueries.minhashPairsProbe(s, d).select("d1", "d2")),
+          // the SHARED tier artifact (r20-opt): q_dedup_ngram_df reads
+          // the same build-once pair set, so the pipeline no longer
+          // re-derives the census + two-alphabet gather + pair
+          // enumeration — the minhash-pair sharing contract, extended
+          submit("ngram-DF tier")(
+            TextQueries.ngramDfPairsShared(s, d).select("d1", "d2")),
+          submit("semantic tier")(
+            graft.sim.SimQueries.semPairsScaled(s, d, tau = 0.4)))
+        tiers.foreach { _ =>
+          try done.take().get()
           catch {
-            case e: java.util.concurrent.ExecutionException =>
+            case e: ExecutionException =>
+              sc.cancelJobGroupAndFutureJobs(group)
+              pool.shutdownNow()
+              pool.awaitTermination(1, TimeUnit.MINUTES)
               throw e.getCause
           }
-        (get(fmh), get(fng), get(fsem))
+        }
+        (tiers(0).get(), tiers(1).get(), tiers(2).get())
       } finally pool.shutdown()
 
     // 3) semantic edges (vec_id ≡ doc_id contract) — over the

@@ -175,25 +175,13 @@ object TrajModel {
     * ~7s/run re-running the two-phase atom rank per invocation because
     * only positions sat behind the barrier. At cluster scale these are
     * persisted/bucketed tables (SCALING.md); executor-local checkpoint
-    * blocks stand in for them here. */
-  private val sharedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  /** NOT computeIfAbsent: builders nest (positions → atom_dim,
-    * topology → atom_dim) and a nested computeIfAbsent on the same map
-    * throws "Recursive update". get + putIfAbsent tolerates the
-    * nesting; the benign race double-builds at worst. */
+    * blocks stand in for them here. Built once in
+    * [[graft.util.SharedArtifacts]] scope `traj`, which lives until the
+    * application ends. */
   private def shared(s: SparkSession, d: String, key: String)
-      (build: => DataFrame): DataFrame = {
-    val k = (s, d, key)
-    val existing = sharedCache.get(k)
-    if (existing != null) existing
-    else {
-      val built = build.graftBarrier
-      val prev = sharedCache.putIfAbsent(k, built)
-      if (prev != null) prev else built
-    }
-  }
+      (build: => DataFrame): DataFrame =
+    graft.util.SharedArtifacts.get(s, "traj", s"$d:$key")(
+      build.graftBarrier)
 
   def positionsShared(s: SparkSession, d: String): DataFrame =
     shared(s, d, "positions")(positions(s, d))

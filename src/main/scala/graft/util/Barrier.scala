@@ -4,10 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** The lineage-barrier primitive behind every shared/memoized build
-  * (TrajModel.shared, SimQueries.shared, the simhash/minhash signature
-  * barriers, the multimodal decode memo): evaluate an expensive
-  * relation ONCE and let many downstream plans consume the
-  * materialized rows instead of re-deriving them.
+  * (the [[SharedArtifacts]] entries of the traj, text, sim and
+  * multimodal families, and the simhash/minhash signature barriers):
+  * evaluate an expensive relation ONCE and let many downstream plans
+  * consume the materialized rows instead of re-deriving them.
+  * [[SharedArtifacts.evict]] unpersists a barrier it drops.
   *
   * Two modes, selected per session via `spark.graft.barrier`
   * (VERDICT r13 ask #6):

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,11 +29,15 @@ class DedupPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val root =
     java.nio.file.Files.createTempDirectory("dedup_pipeline_spec")
 
-  override def afterAll(): Unit = {
-    val walk = java.nio.file.Files.walk(root)
+  private def deleteTree(dir: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(dir)
     try walk.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => java.nio.file.Files.deleteIfExists(p))
     finally walk.close()
+  }
+
+  override def afterAll(): Unit = {
+    deleteTree(root)
     super.afterAll()
   }
 
@@ -47,6 +53,13 @@ class DedupPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .selectExpr("doc_id", "text", "'en' as lang", "'spec' as source",
         "length(text) as n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    writeEmbeddings(dir, docs, sameDir)
+    dir
+  }
+
+  private def writeEmbeddings(dir: String, docs: Seq[(Long, String)],
+      sameDir: Set[Long] = Set.empty): Unit = {
+    import spark.implicits._
     val dim = docs.size + 1
     docs.map { case (id, _) =>
       val hot = if (sameDir.contains(id)) 0 else id.toInt + 1
@@ -54,7 +67,6 @@ class DedupPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         0)
     }.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    dir
   }
 
   private def pipeline(dir: String): Array[org.apache.spark.sql.Row] =
@@ -95,6 +107,48 @@ class DedupPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(byId(id).getLong(5) == byId(id).getLong(4),
         s"doc $id should keep every token")
     }
+  }
+
+  test("a failing tier cancels its siblings and rethrows the original " +
+    "cause; a later run over the completed corpus is unaffected") {
+    val docs = Seq(
+      0L -> (1 to 80).map(i => s"gamma$i").mkString(" "),
+      1L -> (1 to 80).map(i => s"gamma$i").mkString(" "),
+      2L -> (1 to 60).map(i => s"delta$i").mkString(" "))
+    val dir = writeCorpus("cancelled", docs)
+    deleteTree(java.nio.file.Paths.get(dir, "embeddings.parquet"))
+    val sc = spark.sparkContext
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p =>
+              Option(p.getProperty("spark.jobGroup.id")))
+            .exists(_.startsWith("dedup_pipeline")))
+          started.add(e.jobId)
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.add(e.jobId)
+    }
+    sc.addSparkListener(jobs)
+    try {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        pipeline(dir))
+      assert(e.getMessage.contains("embeddings.parquet"))
+      // the missing file usually fails before a sibling tier starts
+      // its first job; the check covers every job the group did start
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def running = started.asScala.count(!ended.contains(_))
+      while (running > 0 && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(running == 0, "a job of the pipeline's group is still running")
+    } finally sc.removeSparkListener(jobs)
+
+    writeEmbeddings(dir, docs)
+    val twin = writeCorpus("cancelled-twin", docs)
+    assert(pipeline(dir).map(_.toString).toSeq ==
+      pipeline(twin).map(_.toString).toSeq)
   }
 
   test("span statistics run on SURVIVORS only: a span whose other " +

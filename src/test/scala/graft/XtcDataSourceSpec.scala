@@ -31,6 +31,11 @@ class XtcDataSourceSpec extends AnyFunSuite {
 
   private val refXtc = "/root/reference/dask_traj/tests/test.xtc"
   private val refPdb = "/root/reference/dask_traj/tests/test.pdb"
+  /** Why a reference pin cancels: names each absent reference file
+    * (mdtraj-written; there is no in-repo twin). */
+  private def refClue: String =
+    "reference files missing: " + Seq(refXtc, refPdb)
+      .filterNot(p => Files.exists(Paths.get(p))).mkString(", ")
   /** 3 frames × 400 atoms with small-delta runs (graft.tools.XtcFixture). */
   private val fixtureXtc = "fixtures/traj_xtc/traj.xtc"
 
@@ -48,7 +53,8 @@ class XtcDataSourceSpec extends AnyFunSuite {
 
   test("reference test.xtc frame 0 decodes to the mdtraj-written PDB " +
     "coordinates (2722 atoms, engine-independent oracle)") {
-    assume(Files.exists(Paths.get(refXtc)) && Files.exists(Paths.get(refPdb)))
+    assume(Files.exists(Paths.get(refXtc)) && Files.exists(Paths.get(refPdb)),
+      refClue)
     // PDB ATOM records: x/y/z in Å at columns 31-54 (0.001 Å grid)
     val pdb = scala.io.Source.fromFile(refPdb)
     val expected =
@@ -86,7 +92,8 @@ class XtcDataSourceSpec extends AnyFunSuite {
 
   test("reference test.xtc box matches the PDB CRYST1 triclinic cell " +
     "on every frame; times/steps are monotonic; all frames decode") {
-    assume(Files.exists(Paths.get(refXtc)) && Files.exists(Paths.get(refPdb)))
+    assume(Files.exists(Paths.get(refXtc)) && Files.exists(Paths.get(refPdb)),
+      refClue)
     val cryst = {
       val src = scala.io.Source.fromFile(refPdb)
       try src.getLines().find(_.startsWith("CRYST1")).map { l =>
@@ -166,7 +173,8 @@ class XtcDataSourceSpec extends AnyFunSuite {
 
   test("TrajLoad dispatches .xtc; top= accepts the matching reference " +
     "topology and rejects a disagreeing one") {
-    assume(Files.exists(Paths.get(refXtc)) && Files.exists(Paths.get(refPdb)))
+    assume(Files.exists(Paths.get(refXtc)) && Files.exists(Paths.get(refPdb)),
+      refClue)
     val df = graft.traj.TrajLoad.load(spark, refXtc,
       options = Map("top" -> refPdb))
     assert(df.filter(col("frame_id") === 0L).count() == 2722)
@@ -186,7 +194,8 @@ class XtcDataSourceSpec extends AnyFunSuite {
   test("the reference's flagship idiom end to end: " +
     "compute_center_of_mass(load(test.xtc, top=test.pdb)) — frame-0 " +
     "COM matches a mass-weighted mean computed from the PDB text") {
-    assume(Files.exists(Paths.get(refXtc)) && Files.exists(Paths.get(refPdb)))
+    assume(Files.exists(Paths.get(refXtc)) && Files.exists(Paths.get(refPdb)),
+      refClue)
     val traj = graft.traj.TrajLoad.load(spark, refXtc,
       options = Map("top" -> refPdb))
     val topo = graft.traj.TrajLoad.topology(spark, refPdb)
