@@ -7,8 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-extensions entry point (SURVEY §2.9): registers every graft
   * native function, the frame-gather rewrite
-  * ([[graft.sources.FrameGather]]) and the field-extraction rewrite
-  * ([[graft.functions.ArrayFieldExtract]]) at session build time, so a cluster
+  * ([[graft.sources.FrameGather]]), the driver merge of ungrouped
+  * aggregates ([[graft.functions.DriverMerge]]) and the field-extraction
+  * rewrite ([[graft.functions.ArrayFieldExtract]]) at session build
+  * time, so a cluster
   * deployment enables the library with
   *
   *   --conf spark.sql.extensions=graft.GraftExtensions
@@ -88,6 +90,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "topk_pairs(v, id, k) - partial-aggregatable per-group top-k of (v, id) pairs",
       es => TopKPairs.build(es).toAggregateExpression()))
     ext.injectPlannerStrategy(_ => graft.sources.FrameGather)
+    ext.injectPlannerStrategy(_ => DriverMerge)
     ext.injectOptimizerRule(_ => ArrayFieldExtract)
   }
 }

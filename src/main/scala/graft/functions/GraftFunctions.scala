@@ -1020,8 +1020,10 @@ case class TriclinicMicDist(children: Seq[Expression]) extends Expression {
 
 object GraftFunctions {
   /** Idempotent per-session registration of the functions, the
-    * frame-gather planner strategy ([[graft.sources.FrameGather]]) and
-    * the field-extraction rewrite ([[ArrayFieldExtract]]). */
+    * frame-gather planner strategy ([[graft.sources.FrameGather]]), the
+    * driver-merge planner strategy for ungrouped aggregates
+    * ([[DriverMerge]]) and the field-extraction rewrite
+    * ([[ArrayFieldExtract]]). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("simhash64",
@@ -1091,8 +1093,8 @@ object GraftFunctions {
     reg.createOrReplaceTempFunction("topk_pairs",
       es => TopKPairs.build(es).toAggregateExpression(), "scala_udf")
     val extra = spark.experimental.extraStrategies
-    if (!extra.contains(graft.sources.FrameGather))
-      spark.experimental.extraStrategies = extra :+ graft.sources.FrameGather
+    spark.experimental.extraStrategies = extra ++
+      Seq(graft.sources.FrameGather, DriverMerge).filterNot(extra.contains)
     val rules = spark.experimental.extraOptimizations
     if (!rules.contains(ArrayFieldExtract))
       spark.experimental.extraOptimizations = rules :+ ArrayFieldExtract

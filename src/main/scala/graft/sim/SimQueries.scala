@@ -662,7 +662,7 @@ object SimQueries {
   private[graft] def simAnnIvfAt(s: SparkSession, d: String,
       nprobe: Int): DataFrame = {
     val (c2, asg) = kmeansShared(s, d)
-    ivfSearch(vecsShared(s, d), c2, asg, nprobe)
+    ivfSearch(s, d, "kmeans", c2, asg, nprobe)
   }
 
   /** Occupancy-scaled IVF (closes the r15 loose end): the fixed
@@ -696,7 +696,7 @@ object SimQueries {
   private[graft] def simAnnIvfScaledAt(s: SparkSession, d: String,
       nprobeOf: Int => Int): DataFrame = {
     val (k, c2, asg) = kmeansScaledShared(s, d)
-    ivfSearch(vecsShared(s, d), c2, asg, nprobe = nprobeOf(k))
+    ivfSearch(s, d, kmeansKey(k), c2, asg, nprobe = nprobeOf(k))
   }
 
   /** The shared OCCUPANCY-SCALED fit: (K, centroids, checkpointed
@@ -715,12 +715,15 @@ object SimQueries {
     val k = ivfK(n)
     val (c2, asg) =
       if (k == 16) kmeansShared(s, d)
-      else shared(s, d, s"kmeans-k$k") {
+      else shared(s, d, kmeansKey(k)) {
         val (c, a) = kmeansFitAt(vecsShared(s, d), seedMax = 25L * k)
         (c, a.graftBarrier)
       }
     (k, c2, asg)
   }
+
+  /** The `sim` key of the K-cell fit: the fixed fit's at K = 16. */
+  private def kmeansKey(k: Int): String = if (k == 16) "kmeans" else s"kmeans-k$k"
 
   /** `max(16, ⌈√n / 2⌉)` — the occupancy-scaled cell count. */
   def ivfK(n: Long): Int =
@@ -751,13 +754,19 @@ object SimQueries {
     math.ceil(math.sqrt(2.0 * k)).toInt
 
   /** The IVF search tail shared by the fixed and scaled quantizers:
-    * probe the nprobe nearest cells, exact-cosine rank within them. */
-  private def ivfSearch(vecs: DataFrame, c2: DataFrame, asg: DataFrame,
-      nprobe: Int): DataFrame = {
+    * probe the nprobe nearest cells, exact-cosine rank within them.
+    * The inverted lists of the fit under `sim` key `fit` are built once
+    * per session+dir, like the fit itself, so repeated searches reuse
+    * them and [[evictShared]] frees them. */
+  private def ivfSearch(s: SparkSession, d: String, fit: String,
+      c2: DataFrame, asg: DataFrame, nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"sim_ann_ivf: nprobe must be >= 1, got $nprobe")
-    val lists = vecs.join(asg, "vec_id")
-      .select(col("vec_id"), col("cluster"), col("emb"), col("nrm"))
-      .graftBarrier
+    val vecs = vecsShared(s, d)
+    val lists = shared(s, d, s"$fit:lists") {
+      vecs.join(asg, "vec_id")
+        .select(col("vec_id"), col("cluster"), col("emb"), col("nrm"))
+        .graftBarrier
+    }
 
     // probe: each query searches its nprobe nearest cells only
     val qs = queryVecFilter(vecs)

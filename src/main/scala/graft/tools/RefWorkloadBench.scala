@@ -183,7 +183,8 @@ object RefWorkloadBench {
     val loadSec = (System.nanoTime() - t0) / 1e9
 
     // "compute_distances": full file parse, 500-atom slice, all
-    // C(500,2) distances per frame, global reduction
+    // C(500,2) distances per frame, global reduction (a driver merge
+    // of the tasks' partial rows: graft.functions.DriverMerge)
     val t1 = System.nanoTime()
     val row = df.filter(col("atom_id") < 500)
       .select(col("frame_id"), col("atom_id"), col("x"), col("y"),

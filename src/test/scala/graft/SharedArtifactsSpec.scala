@@ -158,4 +158,22 @@ class SharedArtifactsSpec extends AnyFunSuite {
     assert(builds.get == 2)
     assert(second.collect().toSeq == rows)
   }
+
+  test("repeated IVF searches reuse one lists barrier, and the sim " +
+    "eviction frees it") {
+    val s = session()
+    val d = SparkTestBase.sf
+    def search(): Seq[String] =
+      SparkEntry.queries("q_sim_ann_ivf")(s, d).collect().map(_.toString).toSeq
+    val first = search()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(search() == first)
+    // entries may only leave the weak-valued map, never join it
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    val lists = barrierRdd(SharedArtifacts.get[DataFrame](s, "sim",
+      s"$d:kmeans:lists")(fail("the lists barrier was not built")))
+    assert(persisted(lists))
+    sim.SimQueries.evictShared(s)
+    assert(!persisted(lists))
+  }
 }
