@@ -3,12 +3,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the driver's local[32] contract — a bench run
-    // that silently fell back to local[4] produced plausible-looking
-    // sf0.1 totals while understating kernel-stage parallelism 8x at
-    // the replicas (r14: two hours of launcher-blaming before the
-    // 4-thread jstack gave it away)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // cluster-idiom barrier mode (VERDICT r14 next #4): a persist-mode
     // suite run prices the executor-loss-safe barriers so a cluster
     // operator knows the cost of the safe mode before choosing it.
@@ -73,29 +67,8 @@ object Bench {
     }
     val gatePost = loadavgNow().orElse(gateT0)
     val gateTimedOut = gatePost.flatMap(oneMin).exists(_ > gateMax)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE's byte-based coalescing floor: the 1m default collapsed
-      // every kernel tier's post-shuffle stages to ONE task at bench
-      // scale (15 MB of sf0.1 text / 32 < 1 MB), serializing ~20M-op
-      // kernel stages — the k2 minhash tier measured 13.9 s where the
-      // DuckDB oracle needs 0.2 s, all in tasks=1 stages (r20 stage
-      // listener). 16k keeps parallelism-first coalescing honest for
-      // compute-heavy narrow rows; at replica/cluster byte sizes the
-      // floor is never the binding constraint.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "16k"))
+    val spark = GraftSession.builder()
       .config("spark.graft.barrier", barrier)
-      // the fixed-fit SemDeDup reference twin is registered and
-      // benched DELIBERATELY (oracle-pinned; its scaled production
-      // twin runs alongside) — opt in past the quadratic guard
-      // (SimQueries.quadraticGuard)
-      .config("spark.graft.allowQuadratic", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // persist mode must price the deployment it advertises: the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. An optional
@@ -16,23 +15,7 @@ object Verify {
       require(unknown.isEmpty,
         s"Verify: unknown queries ${unknown.mkString(", ")}")
     }
-    // default matches the driver's local[32] contract (see Bench.scala)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep kernel stages parallel under AQE coalescing at fixture
-      // byte sizes (rationale in Bench.scala — same session contract)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "16k")
-      // the driver gate verifies the oracle-pinned fixed-fit
-      // reference twin on purpose — opt in past the quadratic
-      // guard (SimQueries.quadraticGuard)
-      .config("spark.graft.allowQuadratic", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

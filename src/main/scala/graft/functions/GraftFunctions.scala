@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -1019,79 +1019,147 @@ case class TriclinicMicDist(children: Seq[Expression]) extends Expression {
 }
 
 object GraftFunctions {
-  /** Idempotent per-session registration of the functions, the
+  /** One function-table entry: the SQL name, the usage line that
+    * `DESCRIBE FUNCTION` prints, and the expression builder. */
+  final case class Fn(name: String, usage: String,
+      builder: Seq[Expression] => Expression) {
+    def id: FunctionIdentifier = FunctionIdentifier(name)
+    def info: ExpressionInfo =
+      new ExpressionInfo("graft.functions", null, name, usage,
+        "", "", "", "", "", "", "scala_udf")
+  }
+
+  /** Every graft native function. [[graft.GraftExtensions]] injects
+    * this table at session build and [[register]] registers it into an
+    * existing session; neither keeps a list of its own. */
+  val table: Seq[Fn] = Seq(
+    Fn("simhash64",
+      "simhash64(text) - 64-bit frequency-weighted SimHash as (sim_lo, sim_hi)",
+      es => SimHash64(es.head)),
+    Fn("minhash_doc",
+      "minhash_doc(text) - word-3-gram shingles + 8-hash MinHash " +
+        "signature + 4 LSH band keys",
+      es => MinHashDoc(es.head)),
+    Fn("minhash_doc_banded",
+      "minhash_doc_banded(text, seeds, rows_per_band[, shingle_k]) - " +
+        "banded minhash signature",
+      es => MinHashDocBanded.build(es)),
+    Fn("shingles_k",
+      "shingles_k(text, k) - distinct word-k-gram shingles in " +
+        "first-occurrence order",
+      es => ShinglesK(es.head, LiteralArg.int("shingles_k", es(1), "k"))),
+    Fn("minhash_banded_from",
+      "minhash_banded_from(shingles, seeds, rows_per_band) - banded " +
+        "minhash signature over a given shingle array",
+      es => MinHashBandedFrom(es.head,
+        LiteralArg.int("minhash_banded_from", es(1), "seeds"),
+        LiteralArg.int("minhash_banded_from", es(2), "rows_per_band"))),
+    Fn("min_fingerprint",
+      "min_fingerprint(text) - lexicographic-min md5 over all char 8-grams",
+      es => MinFingerprint(es.head)),
+    Fn("ngram5_count",
+      "ngram5_count(text) - number of distinct char 5-grams",
+      es => Ngram5Count(es.head)),
+    Fn("ngram5_packed",
+      "ngram5_packed(text) - sorted distinct char 5-grams as packed longs",
+      es => Ngram5Packed(es.head)),
+    Fn("ngram8_packed",
+      "ngram8_packed(text) - sorted distinct char 8-grams as packed longs",
+      es => Ngram8Packed(es.head)),
+    Fn("ngram3_set",
+      "ngram3_set(text) - distinct char 3-grams in first-occurrence order",
+      es => Ngram3Set(es.head)),
+    Fn("sorted_intersect_count",
+      "sorted_intersect_count(a, b) - |A intersect B| of two sorted long arrays",
+      es => SortedIntersectCount(es(0), es(1))),
+    Fn("dot_scaled",
+      "dot_scaled(a, b) - exact sum of round(a_i*b_i*1e12) as bigint",
+      es => DotScaled(es(0), es(1))),
+    Fn("dot_floor_scaled",
+      "dot_floor_scaled(a, b) - exact sum of floor(a_i*b_i*1e12 + 0.5) as bigint",
+      es => DotFloorScaled(es(0), es(1))),
+    Fn("xyz_sum_scaled",
+      "xyz_sum_scaled(xyz, axis) - scaled-bigint sum of one coordinate " +
+        "axis over a wide frame",
+      es => XyzSumScaled.build(es)),
+    Fn("com_sums_scaled",
+      "com_sums_scaled(atoms, masses) - mass-weighted centre-of-mass sums " +
+        "as scaled bigints (sxm, sym, szm, sm)",
+      es => ComSumsScaled(es(0), es(1))),
+    Fn("cog_sums_scaled",
+      "cog_sums_scaled(atoms) - centre-of-geometry sums as scaled bigints " +
+        "plus the member count (sx, sy, sz, n)",
+      es => CogSumsScaled(es.head)),
+    Fn("span_clean",
+      "span_clean(arr, rm) - a document's tokens without the covered " +
+        "positions, as (n_kept, clean)",
+      es => SpanClean(es(0), es(1))),
+    Fn("span_gram_hashes",
+      "span_gram_hashes(arr, span) - 128-bit fingerprint of every " +
+        "span-token window",
+      es => SpanGramHashes.build(es)),
+    Fn("ngram_close_pairs",
+      "ngram_close_pairs(members) - n-gram Jaccard verify of the pairs " +
+        "in one block, as (d1, d2, ni, den)",
+      es => NgramClosePairs(es.head)),
+    Fn("ngram_close_pairs_x",
+      "ngram_close_pairs_x(members_a, members_b, same) - the two-list " +
+        "segment variant of ngram_close_pairs",
+      es => NgramClosePairsX(es(0), es(1), es(2))),
+    Fn("lsh16_code",
+      "lsh16_code(v) - 16-bit sign-LSH hyperplane code",
+      es => Lsh16Code(es.head)),
+    Fn("lsh_code",
+      "lsh_code(v, bits) - width-parameterized sign-LSH hyperplane code",
+      es => LshCode.build(es)),
+    Fn("tri_mic",
+      "tri_mic(dx, dy, dz, ax, bx, by, cx, cy, cz) - triclinic " +
+        "minimum-image distance",
+      es => TriclinicMicDist(es)),
+    Fn("rep_stats",
+      "rep_stats(text) - (n_words, n_distinct, top_word, top_bigram) " +
+        "repetition counters",
+      es => RepStats(es.head)),
+    Fn("quality_stats",
+      "quality_stats(text) - (nw, nu, ncl, nsw, npunct) one-pass " +
+        "quality counters",
+      es => QualityStats(es.head)),
+    Fn("token_stats",
+      "token_stats(text) - (ws_tokens, bpeish_tokens, n_chars) " +
+        "one-pass token counters",
+      es => TokenStats(es.head)),
+    Fn("pair_dist_stats",
+      "pair_dist_stats(xs, ys, zs) - all-pairs C(n,2) distance " +
+        "sum/min/max/count per frame",
+      es => PairDistStats(es)),
+    Fn("simhash_close_pairs",
+      "simhash_close_pairs(members, max_hamming) - Hamming verify of " +
+        "the pairs in one LSH bucket, as (d1, d2, hamming)",
+      es => SimhashClosePairs.build(es)),
+    Fn("simhash_close_pairs_x",
+      "simhash_close_pairs_x(members_a, members_b, same_segment, " +
+        "max_hamming) - the two-list segment variant of simhash_close_pairs",
+      es => SimhashClosePairsX.build(es)),
+    Fn("cosine_close_pairs",
+      "cosine_close_pairs(members_a, members_b, same_bucket, threshold) " +
+        "- exact-cosine verify of two LSH buckets, as (v1, v2, cos_sim)",
+      es => CosineClosePairs.build(es)),
+    Fn("topk_pairs",
+      "topk_pairs(v, id, k) - partial-aggregatable per-group top-k of " +
+        "(v, id) pairs",
+      es => TopKPairs.build(es).toAggregateExpression()))
+
+  /** Idempotent per-session registration of the function table, the
     * frame-gather planner strategy ([[graft.sources.FrameGather]]), the
     * driver-merge planner strategy for ungrouped aggregates
     * ([[DriverMerge]]) and the field-extraction rewrite
-    * ([[ArrayFieldExtract]]). */
+    * ([[ArrayFieldExtract]]). Only names the session does not resolve
+    * yet are registered, so a session built with the extensions, or
+    * registered before, keeps its functions: nothing is replaced. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64",
-      es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_doc",
-      es => MinHashDoc(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_doc_banded",
-      es => MinHashDocBanded.build(es), "scala_udf")
-    reg.createOrReplaceTempFunction("shingles_k",
-      es => ShinglesK(es.head,
-        LiteralArg.int("shingles_k", es(1), "k")), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_banded_from",
-      es => MinHashBandedFrom(es.head,
-        LiteralArg.int("minhash_banded_from", es(1), "seeds"),
-        LiteralArg.int("minhash_banded_from", es(2), "rows_per_band")),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("min_fingerprint",
-      es => MinFingerprint(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("ngram5_count",
-      es => Ngram5Count(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("ngram5_packed",
-      es => Ngram5Packed(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("ngram8_packed",
-      es => Ngram8Packed(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("ngram3_set",
-      es => Ngram3Set(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_intersect_count",
-      es => SortedIntersectCount(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_scaled",
-      es => DotScaled(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_floor_scaled",
-      es => DotFloorScaled(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("xyz_sum_scaled",
-      es => XyzSumScaled.build(es), "scala_udf")
-    reg.createOrReplaceTempFunction("com_sums_scaled",
-      es => ComSumsScaled(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("cog_sums_scaled",
-      es => CogSumsScaled(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("span_clean",
-      es => SpanClean(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("span_gram_hashes",
-      es => SpanGramHashes.build(es), "scala_udf")
-    reg.createOrReplaceTempFunction("ngram_close_pairs",
-      es => NgramClosePairs(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("ngram_close_pairs_x",
-      es => NgramClosePairsX(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("lsh16_code",
-      es => Lsh16Code(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("lsh_code",
-      es => LshCode.build(es), "scala_udf")
-    reg.createOrReplaceTempFunction("tri_mic",
-      es => TriclinicMicDist(es), "scala_udf")
-    reg.createOrReplaceTempFunction("rep_stats",
-      es => RepStats(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("quality_stats",
-      es => QualityStats(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("token_stats",
-      es => TokenStats(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("pair_dist_stats",
-      es => PairDistStats(es), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash_close_pairs",
-      es => SimhashClosePairs.build(es), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash_close_pairs_x",
-      es => SimhashClosePairsX.build(es), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_close_pairs",
-      es => CosineClosePairs.build(es), "scala_udf")
-    reg.createOrReplaceTempFunction("topk_pairs",
-      es => TopKPairs.build(es).toAggregateExpression(), "scala_udf")
+    table.filterNot(f => reg.functionExists(f.id))
+      .foreach(f => reg.registerFunction(f.id, f.info, f.builder))
     val extra = spark.experimental.extraStrategies
     spark.experimental.extraStrategies = extra ++
       Seq(graft.sources.FrameGather, DriverMerge).filterNot(extra.contains)

@@ -99,16 +99,17 @@ object TextQueries {
       .orderBy("d1", "d2")
   }
 
-  /** Package access to the shared verified pair set (tools/CcProbe and
-    * the composed [[DedupPipeline]]). */
+  /** Package access to the shared verified pair set (the composed
+    * [[DedupPipeline]] and the benchmark's connected-components
+    * probe). */
   private[graft] def minhashPairsProbe(s: SparkSession, d: String): DataFrame =
     minhashPairsShared(s, d)
 
   /** (session, dir, key) → shared state for the dedup pipeline, built
-    * once in [[graft.util.SharedArtifacts]] scope `text`: the verified
-    * (8, 2) pair set — shared by q_dedup_minhash and q_dedup_cluster —
-    * the cluster-assignment table built from it, and the ngram-DF pair
-    * set. */
+    * once in [[graft.util.SharedArtifacts]] scope `text`: the minhash
+    * signature barriers, the verified (8, 2) pair set — shared by
+    * q_dedup_minhash and q_dedup_cluster — the cluster-assignment table
+    * built from it, and the ngram-DF pair set. */
   private def textShared(s: SparkSession, d: String, key: String)
       (build: => DataFrame): DataFrame =
     SharedArtifacts.get(s, "text", s"$d:$key")(build)
@@ -146,10 +147,13 @@ object TextQueries {
     // Jaccard filter into the self-join condition and the optimizer
     // re-derives the shingle/signature arrays per candidate PAIR
     // (interpreted HOFs, O(pairs × doc_len)). The barrier pins one
-    // evaluation per doc. At cluster scale this would be a persisted
-    // signature table instead of RDD-local blocks.
+    // evaluation per doc. It is a `text` artifact, so every build at
+    // one (seeds, rowsPerBand, shingleK) reads one set of blocks and
+    // the tier eviction frees them. At cluster scale this would be a
+    // persisted signature table instead of RDD-local blocks.
     minhashPairsFromDs(
-      docShinglesAt(s, d, seeds, rowsPerBand, shingleK).graftBarrier)
+      textShared(s, d, s"signatures:$seeds:$rowsPerBand:$shingleK")(
+        docShinglesAt(s, d, seeds, rowsPerBand, shingleK).graftBarrier))
 
   /** The band-join + exact-Jaccard-verify tail shared by the fused
     * tiers and the DF-filtered tier: `ds` must carry (doc_id,

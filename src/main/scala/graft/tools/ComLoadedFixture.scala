@@ -86,12 +86,7 @@ object ComLoadedFixture {
   def main(args: Array[String]): Unit = {
     val out = args.headOption
       .getOrElse("/root/repo/fixtures/traj_com_loaded")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     generate(spark, out)
     graft.traj.TrajQueries.trajComLoaded(spark, "unused").show(5)

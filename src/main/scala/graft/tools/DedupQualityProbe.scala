@@ -621,6 +621,9 @@ object DedupQualityProbe {
   def minhashDial(s: SparkSession, scratch: String,
       plants: DataFrame): Seq[DialLine] =
     for (shingleK <- Seq(2, 3); seeds <- Seq(8, 16)) yield {
+      // the signature barrier is a shared artifact: evict it so every
+      // point pays its own signature build
+      graft.text.TextQueries.evictShared(s)
       val t0 = System.nanoTime()
       val pairs = graft.text.TextQueries
         .minhashPairsAt(s, scratch, seeds, 2, shingleK)
@@ -633,16 +636,7 @@ object DedupQualityProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // probes measure the fixed-fit reference twin deliberately
-      .config("spark.graft.allowQuadratic", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sections = dirs.map { d =>
       val name = new java.io.File(d).getName

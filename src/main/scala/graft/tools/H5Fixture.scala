@@ -118,12 +118,7 @@ object H5Fixture {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/root/repo/fixtures/traj_h5")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     generate(spark, out)
     graft.traj.TrajQueries.trajH5Scan(spark, "unused").show(3)

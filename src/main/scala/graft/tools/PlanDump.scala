@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `.explain("formatted")` for named registered queries into
   * per-query text files — the round's plan-evidence artifacts
@@ -8,10 +7,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: `runMain graft.tools.PlanDump <outDir> <suffix> q_a [q_b ...]`
   * (suffix is `before` / `after`). Env: `SPARK_GRAFT_SF_DIR` (default
-  * sf0.1), `SPARK_GRAFT_CPUS` (default 32). The session mirrors
-  * Bench's config (shuffle partitions = cpus, AQE on with the 16k
-  * coalesce floor, quadratic opt-in) so the dumped initial plans are
-  * the ones the bench actually executes. */
+  * sf0.1), `SPARK_GRAFT_CPUS` (default 32). The session is Bench's
+  * ([[graft.GraftSession]]), so the dumped initial plans are the ones
+  * the bench actually executes. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
@@ -20,18 +18,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "16k"))
-      .config("spark.graft.allowQuadratic", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty,

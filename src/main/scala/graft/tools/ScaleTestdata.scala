@@ -36,14 +36,7 @@ object ScaleTestdata {
       .getOrElse(Set.empty[String])
     val alpha = args.lift(4).getOrElse("etaoinshrdlu")
     val skew = args.lift(5).contains("skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     generate(spark, src, dst, copies, tables, alpha, skew)
     spark.stop()

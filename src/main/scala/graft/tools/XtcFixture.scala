@@ -76,12 +76,7 @@ object XtcFixture {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/root/repo/fixtures/traj_xtc")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     generate(spark, out)
     graft.traj.TrajQueries.trajXtcScan(spark, "unused").show(3)

@@ -1,6 +1,10 @@
 package graft
 
+import graft.functions.GraftFunctions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** The session in SparkTestBase is built with
   * spark.sql.extensions=graft.GraftExtensions and no explicit
@@ -48,5 +52,52 @@ class GraftExtensionsSpec extends AnyFunSuite {
       "SELECT min_fingerprint('abcdefghij') AS a").collect()(0)
     assert(r.getAs[String]("a") ==
       graft.functions.HashKernels.fingerprint("abcdefghij"))
+  }
+
+  test("every function-table entry resolves with usage text in an " +
+    "extension-only session") {
+    // a new session carries the extensions and was never registered
+    val fresh = spark.newSession()
+    GraftFunctions.table.foreach { f =>
+      assert(fresh.sessionState.functionRegistry.functionExists(f.id),
+        s"${f.name} is not injected")
+      assert(fresh.sessionState.catalog.lookupFunctionInfo(f.id)
+        .getUsage.nonEmpty, s"${f.name} has no usage text")
+    }
+    assert(GraftFunctions.table.map(_.name).distinct.size ==
+      GraftFunctions.table.size)
+  }
+
+  test("register does not replace functions a session already has") {
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    val id = FunctionIdentifier("shingles_k")
+    // with one name missing, register fills the table in
+    reg.dropFunction(id)
+    GraftFunctions.register(s)
+    // a builder lambda is one shared instance per call site, so the
+    // entry's ExpressionInfo (new per registration) shows a replace
+    val first = (reg.lookupFunction(id), reg.lookupFunctionBuilder(id))
+    assert(first._1.isDefined && first._2.isDefined)
+    GraftFunctions.register(s)
+    assert(reg.lookupFunction(id).exists(_ eq first._1.get))
+    assert(reg.lookupFunctionBuilder(id).exists(_ eq first._2.get))
+  }
+
+  test("only GraftSession builds a SparkSession under src/main") {
+    val base = java.nio.file.Paths.get(
+      sys.props.getOrElse("graft.base", sys.props("user.dir")))
+    val files = java.nio.file.Files.walk(base.resolve("src/main"))
+    val offenders =
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filterNot(_.getFileName.toString == "GraftSession.scala")
+        .filter(p => java.nio.file.Files.readString(p)
+          .contains("SparkSession.builder"))
+        .map(p => base.relativize(p).toString).toList
+      finally files.close()
+    assert(offenders.isEmpty,
+      s"use graft.GraftSession.builder() instead in: " +
+        offenders.mkString(", "))
   }
 }

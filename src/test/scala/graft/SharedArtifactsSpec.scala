@@ -176,4 +176,21 @@ class SharedArtifactsSpec extends AnyFunSuite {
     sim.SimQueries.evictShared(s)
     assert(!persisted(lists))
   }
+
+  test("repeated minhash builds reuse one signature barrier, and the " +
+    "text eviction frees it") {
+    val s = session()
+    val d = SparkTestBase.sf
+    def pairs(): Seq[String] = SparkEntry.queries("q_dedup_minhash_k2")(s, d)
+      .collect().map(_.toString).toSeq
+    def ids(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = ids()
+    val first = pairs()
+    val built = ids() -- before
+    assert(built.nonEmpty)
+    assert(pairs() == first)
+    assert(ids() -- before == built)
+    text.TextQueries.evictShared(s)
+    assert(!built.exists(persisted))
+  }
 }

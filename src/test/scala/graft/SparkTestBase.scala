@@ -2,19 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for all suites (forked test JVM). */
+/** One shared local SparkSession for all suites (forked test JVM):
+  * Bench's session config ([[GraftSession]]) plus the extensions. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder()
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // the cluster-deployment surface: functions injected at session
       // build (GraftExtensionsSpec asserts they resolve unregistered)
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
