@@ -1,16 +1,10 @@
 package graft.sources
 
-
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSourceV2 connector for the Scripps/AMBER binpos binary format
   * (`.binpos`, reference registry `file_returns[".binpos"]` = xyz
@@ -26,19 +20,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * shards (name order, globally contiguous frame ids). Frames whose
   * natoms field disagrees with the first frame fail the task (variable
   * atom counts are not supported, matching the other sources). */
-class BinposDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "binpos"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    BinposTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("binpos", properties)
-    val expectAtoms = Option(properties.get("top"))
-      .map(PdbTopology.atomCount).getOrElse(-1)
-    new BinposTable(o.paths, o.chunks, o.unitScale(0.1), expectAtoms)
-  }
+class BinposDataSource extends FrameSource("binpos", BinposTable.Schema) {
+  override protected def codec(o: ReadOptions,
+      props: util.Map[String, String]): FrameCodec =
+    new BinposCodec(o.unitScale(0.1), o.topAtoms)
 }
 
 object BinposTable {
@@ -78,137 +63,42 @@ object BinposTable {
   }
 }
 
-class BinposTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    expectAtoms: Int = -1)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"binpos:${paths.mkString(",")}"
-  override def schema(): StructType = BinposTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new BinposScanBuilder(paths, chunks, unitScale, expectAtoms)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new BinposWriteBuilder(MultiPath.single("binpos", paths, "write"), unitScale, info)
-}
+/** Index: a header read + length arithmetic ([[BinposTable.probe]]);
+  * partitions seek by the fixed frame stride. */
+final class BinposCodec(unitScale: Double, override val expectAtoms: Int)
+    extends FrameCodec {
+  override def name: String = "binpos"
+  override def schema: StructType = BinposTable.Schema
+  override def extensions: Seq[String] = Seq(".binpos")
 
-class BinposScanBuilder(paths: Seq[String], chunks: Int,
-    unitScale: Double, expectAtoms: Int = -1)
-    extends FrameScanBuilder(BinposTable.Schema) {
-  override def build(): Scan =
-    new BinposScan(paths, chunks, unitScale, required, frameLo, frameHi,
-      limit, expectAtoms)
-}
-
-case class BinposFrameRange(startFrame: Long, endFrame: Long,
-    nAtoms: Int, filePath: String, frameOffset: Long)
-    extends InputPartition
-
-class BinposScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    expectAtoms: Int = -1)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin (see BinposMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new BinposMicroBatchStream(
-      MultiPath.single("binpos", paths, "streaming read"),
-      chunks, unitScale, required)
-
-  private def planFile(p: String, nAtoms: Int, nFrames: Long, off: Long,
-      rowBudget: Long): (Seq[InputPartition], Long) = {
-    var lo = math.max(off, frameLo)
-    var hi = math.min(off + nFrames, frameHi)
-    if (rowBudget != Long.MaxValue && nAtoms > 0) {
-      val needed = (rowBudget + nAtoms - 1) / nAtoms
-      hi = math.min(hi, lo + math.max(needed, 1L))
-    }
-    if (lo >= hi || nAtoms <= 0) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      BinposFrameRange(start - off, math.min(start + chunks, hi) - off,
-        nAtoms, p, off): InputPartition
-    }
-    (parts, (hi - lo) * nAtoms)
+  override def index(path: String, frameHi: Long): FrameIndex = {
+    val (nAtoms, nFrames) = BinposTable.probe(path)
+    new FrameIndex(nFrames, nAtoms)
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs -> one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath); the
-    // per-file probe is a header read + length arithmetic
-    val files = MultiPath.expandAll("binpos", paths, Seq(".binpos"))
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      val wantPlan = budget > 0 && off < frameHi
-      // binpos carries natoms in its header; `top` is a plan-time
-      // cross-check against the topology's first-model atom count.
-      // The check covers EVERY file the load names — including files
-      // limit/frame pruning will never read (same contract as inpcrd,
-      // which validates per file read): a trailing shard whose header
-      // disagrees with the topology is a corrupt dataset, and hiding
-      // that behind a small limit would let it surface only in the
-      // one query that happens to read far enough. The probe is a
-      // header read + length arithmetic, so validating pruned files
-      // costs one 8-byte read each, only when `top` is given.
-      if (wantPlan || expectAtoms > 0) {
-        val (nAtoms, nFrames) = BinposTable.probe(p)
-        if (expectAtoms > 0 && nAtoms != expectAtoms)
-          throw new IllegalArgumentException(
-            s"binpos $p: natoms $nAtoms disagrees with the topology " +
-              s"atom count $expectAtoms (option 'top')")
-        if (wantPlan) {
-          val (parts, rows) = planFile(p, nAtoms, nFrames, off, budget)
-          out ++= parts
-          if (budget != Long.MaxValue)
-            budget = math.max(0L, budget - rows)
-        }
-        off += nFrames
-      }
-    }
-    out.toArray
-  }
+  override def open(part: FramePartition, need: Set[String],
+      atomHi: Int): FrameReader = new BinposFrameReader(unitScale, part)
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BinposReaderFactory(unitScale, required)
-}
-
-class BinposReaderFactory(unitScale: Double, required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new BinposPartitionReader(unitScale, required,
-      partition.asInstanceOf[BinposFrameRange])
+  override def writes: Boolean = true
+  override def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
+    new BinposWriteBuilder(path, unitScale, info)
 }
 
 /** Seeks to the partition's first frame by stride arithmetic, then
   * reads whole frames into a buffer. */
-class BinposPartitionReader(unitScale: Double, required: StructType,
-    range: BinposFrameRange) extends PartitionReader[InternalRow] {
+private final class BinposFrameReader(unitScale: Double,
+    part: FramePartition) extends FrameReader("binpos", ParseMode.FailFast, part) {
 
-  private val stride = 4L + 12L * range.nAtoms
-  private val raf = FsIO.openRandom(range.filePath)
-  raf.seek(4L + range.startFrame * stride)
+  private val raf = FsIO.openRandom(part.path)
+  private val planned =
+    try BinposTable.probe(part.path)._1
+    catch { case e: Throwable => raf.close(); throw e }
+  private val stride = 4L + 12L * planned
+  private val buf = new Array[Byte](stride.toInt)
+  raf.seek(4L + part.startFrame * stride)
 
-  private var frame = range.startFrame
-  private var atom = range.nAtoms
-  private var coords: ByteBuffer = _
-  private var current: InternalRow = _
-
-  private val ordinals: Array[Int] = {
-    val canon = BinposTable.Schema.fieldNames.zipWithIndex.toMap
-    required.fieldNames.map(canon)
-  }
-
-  private def readFrame(): Boolean = {
+  override def next(): Boolean = {
+    if (frame + 1 >= part.endFrame) return false
     // readFully, not read(): a single read() may legitimately return
     // fewer bytes than requested (large frames, network filesystems),
     // and treating that as EOF would silently drop the rest of the
@@ -216,49 +106,27 @@ class BinposPartitionReader(unitScale: Double, required: StructType,
     // PARTIAL trailing frame is a truncated file and errors.
     val remaining = raf.length() - raf.getFilePointer
     if (remaining <= 0) return false
+    frame += 1
     if (remaining < stride)
       throw new IllegalStateException(
-        s"binpos ${range.filePath}: truncated trailing frame " +
+        s"binpos ${part.path}: truncated trailing frame " +
           s"($remaining of $stride bytes)")
-    val buf = new Array[Byte](stride.toInt)
     raf.readFully(buf)
     val bb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
     val n = bb.getInt
-    if (n != range.nAtoms)
+    if (n != planned)
       throw new IllegalStateException(
-        s"binpos ${range.filePath} frame ${frame + range.frameOffset}: " +
-          s"natoms $n != planned ${range.nAtoms} (variable atom counts " +
+        s"binpos ${part.path} frame ${frame + part.frameOffset}: " +
+          s"natoms $n != planned $planned (variable atom counts " +
           "are not supported)")
-    coords = bb
-    atom = 0
-    true
-  }
-
-  override def next(): Boolean = {
-    if (frame >= range.endFrame) return false
-    if (atom >= range.nAtoms && !readFrame()) return false
-    val a = atom
-    val base = a * 12
-    val row = new Array[Any](ordinals.length)
+    nAtoms = n
+    val xs = coords(3 * n)
     var i = 0
-    while (i < ordinals.length) {
-      row(i) = ordinals(i) match {
-        case 0 => frame + range.frameOffset
-        case 1 => (frame + range.frameOffset).toDouble
-        case 2 => a
-        case 3 => (coords.getFloat(4 + base) * unitScale).toFloat
-        case 4 => (coords.getFloat(4 + base + 4) * unitScale).toFloat
-        case 5 => (coords.getFloat(4 + base + 8) * unitScale).toFloat
-      }
-      i += 1
-    }
-    current = InternalRow.fromSeq(row.toIndexedSeq)
-    atom += 1
-    if (atom >= range.nAtoms) frame += 1
+    while (i < 3 * n) { xs(i) = (bb.getFloat * unitScale).toFloat; i += 1 }
     true
   }
 
-  override def get(): InternalRow = current
+  override def frameValue(ord: Int): Any = (part.frameOffset + frame).toDouble
 
   override def close(): Unit = raf.close()
 }

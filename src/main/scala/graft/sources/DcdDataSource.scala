@@ -1,16 +1,9 @@
 package graft.sources
 
-
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Parsed DCD file header — everything the planner needs to turn the
   * file into seek-addressable fixed-size frame records. Parsed ONCE on
@@ -153,19 +146,11 @@ private[sources] object DcdHeader {
   *
   * Usage: `spark.read.format("dcd").option("chunks", 100).load(path)`.
   */
-class DcdDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "dcd"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    DcdTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("dcd", properties)
-    val mode = ParseMode.fromOptions("dcd", properties)
-    // Å→nm, the reference's in_units_of default
-    new DcdTable(o.paths, o.chunks, o.unitScale(0.1), mode)
-  }
+class DcdDataSource extends FrameSource("dcd", DcdTable.Schema) {
+  // Å→nm, the reference's in_units_of default
+  override protected def codec(o: ReadOptions,
+      props: util.Map[String, String]): FrameCodec =
+    new DcdCodec(o.unitScale(0.1), o.mode)
 }
 
 object DcdTable {
@@ -186,101 +171,22 @@ object DcdTable {
     StructField("box_gamma", FloatType, nullable = true)))
 }
 
-class DcdTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String)
-    extends Table with SupportsRead {
-  override def name(): String = s"dcd:${paths.mkString(",")}"
-  override def schema(): StructType = DcdTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new DcdScanBuilder(paths, chunks, unitScale, mode)
-}
+/** Index: one ~200-byte header parse per file ([[DcdHeader.parse]]); a
+  * partition is a pure frame range the reader turns into a byte
+  * offset. */
+final class DcdCodec(unitScale: Double, override val mode: String)
+    extends FrameCodec {
+  override def name: String = "dcd"
+  override def schema: StructType = DcdTable.Schema
+  override def extensions: Seq[String] = Seq(".dcd")
 
-class DcdScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String)
-    extends FrameScanBuilder(DcdTable.Schema) {
-  override def build(): Scan =
-    new DcdScan(paths, chunks, unitScale, required, frameLo, frameHi, limit,
-      mode)
-}
-
-/** startFrame/endFrame are LOCAL to the file; `filePath` (when
-  * non-null) overrides the scan path (directory-of-shards mode) and
-  * `frameOffset` is the global frame id of the file's frame 0. */
-case class DcdFrameRange(startFrame: Long, endFrame: Long,
-    filePath: String = null, frameOffset: Long = 0L) extends InputPartition
-
-class DcdScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    mode: String)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin: the (single) path is a directory that `*.dcd`
-    * shard files appear in (see DcdMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new DcdMicroBatchStream(
-      MultiPath.single("dcd", paths, "streaming read"),
-      chunks, unitScale, required, mode)
-
-  private def planFile(p: String, nAtoms: Int, nFrames: Long, off: Long,
-      rowBudget: Long): (Seq[InputPartition], Long) = {
-    var lo = math.max(off, frameLo)
-    var hi = math.min(off + nFrames, frameHi)
-    if (rowBudget != Long.MaxValue && nAtoms > 0) {
-      val needed = (rowBudget + nAtoms - 1) / nAtoms
-      hi = math.min(hi, lo + math.max(needed, 1L))
-    }
-    if (lo >= hi || nAtoms <= 0) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      DcdFrameRange(start - off, math.min(start + chunks, hi) - off,
-        p, off): InputPartition
-    }
-    (parts, (hi - lo) * nAtoms)
+  override def index(path: String, frameHi: Long): FrameIndex = {
+    val h = DcdHeader.parse(path)
+    new FrameIndex(h.nFrames, h.nAtoms)
   }
 
-  /** One driver-side header parse per file plans every partition (a
-    * ~200-byte read — the binary format's probe is far cheaper than the
-    * text sources' line counts); each partition is a pure frame range
-    * that the reader converts to a byte offset. A directory plans its
-    * `*.dcd` shards in name order with globally contiguous frame ids
-    * (see XyzScan). */
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs → one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath); the
-    // per-file probe is a ~200-byte header parse
-    val files = MultiPath.expandAll("dcd", paths, Seq(".dcd"))
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val h = DcdHeader.parse(p)
-        val (parts, rows) = planFile(p, h.nAtoms, h.nFrames, off, budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += h.nFrames
-      }
-    }
-    out.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new DcdReaderFactory(paths.head, unitScale, required, mode)
-}
-
-class DcdReaderFactory(path: String, unitScale: Double,
-    required: StructType, mode: String)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new DcdPartitionReader(path, unitScale, required,
-      partition.asInstanceOf[DcdFrameRange], mode)
+  override def open(part: FramePartition, need: Set[String],
+      atomHi: Int): FrameReader = new DcdFrameReader(unitScale, mode, part)
 }
 
 /** Positioned binary read: seek to `dataStart + startFrame × frameBytes`
@@ -290,55 +196,34 @@ class DcdReaderFactory(path: String, unitScale: Double,
   * validated; a torn or corrupt frame FAILFASTs with file/frame context
   * or, under DROPMALFORMED, drops that frame (all of its rows) and
   * warns — the ensure_type warn-and-continue analog. */
-class DcdPartitionReader(path: String, unitScale: Double,
-    required: StructType, range: DcdFrameRange, mode: String)
-    extends PartitionReader[InternalRow] {
+private final class DcdFrameReader(unitScale: Double, mode: String,
+    part: FramePartition) extends FrameReader("dcd", mode, part) {
 
-  private val dropMalformed = mode == ParseMode.DropMalformed
-  private var dropped = 0L
-
-  // directory-of-shards partitions carry their own file path
-  private val file = if (range.filePath != null) range.filePath else path
   // header re-parse per task is one 200-byte read; it keeps the
-  // InputPartition serializable-small and the reader self-contained
-  private val header = DcdHeader.parse(file)
-  private val raf = FsIO.openRandom(file)
-  raf.seek(header.dataStart + range.startFrame * header.frameBytes)
+  // partition small and the reader self-contained
+  private val header = DcdHeader.parse(part.path)
+  private val raf = FsIO.openRandom(part.path)
+  raf.seek(header.dataStart + part.startFrame * header.frameBytes)
 
   private val frameBuf = new Array[Byte](header.frameBytes.toInt)
-  private val xs = new Array[Float](header.nAtoms)
-  private val ys = new Array[Float](header.nAtoms)
-  private val zs = new Array[Float](header.nAtoms)
   // box: a, b, c, alpha, beta, gamma — null when the file has no cell
   private val box = new Array[Float](6)
   private var haveBox = false
   private var time = 0.0
 
-  private var frame = range.startFrame - 1 // advanced by loadFrame
-  private var emit = header.nAtoms // exhausted → load next frame
-  private var current: InternalRow = _
-
-  private val ordinals: Array[Int] = {
-    val canon = DcdTable.Schema.fieldNames.zipWithIndex.toMap
-    required.fieldNames.map(canon)
-  }
-
-  private def parseFail(what: String): Nothing =
-    throw new IllegalStateException(
-      s"dcd parse error in $file at frame ${frame + range.frameOffset}: " +
-        what)
-
   /** Reads one whole frame record into the buffers; false at range end.
     * The coordinate record markers double as a consistency check that
     * the seek arithmetic and the file agree. */
-  private def loadFrame(): Boolean = {
-    while (frame + 1 < range.endFrame) {
+  override def next(): Boolean = {
+    val n = header.nAtoms
+    val xs = coords(3 * n)
+    while (frame + 1 < part.endFrame) {
       frame += 1
       raf.readFully(frameBuf)
       val bb = ByteBuffer.wrap(frameBuf).order(header.endian)
       try {
         if (header.hasCell) {
-          if (bb.getInt != 48) parseFail("unitcell record marker is not 48")
+          if (bb.getInt != 48) fail("unitcell record marker is not 48")
           // CHARMM XTL slot order: A, gamma, B, beta, alpha, C; angle
           // slots are cos(angle) in modern files, degrees in old ones
           val a = bb.getDouble; val g = bb.getDouble
@@ -353,58 +238,38 @@ class DcdPartitionReader(path: String, unitScale: Double,
           box(2) = (c * unitScale).toFloat
           box(3) = angle(al); box(4) = angle(be); box(5) = angle(g)
           haveBox = true
-          if (bb.getInt != 48)
-            parseFail("unitcell record markers disagree")
+          if (bb.getInt != 48) fail("unitcell record markers disagree")
         } else haveBox = false
-        val coordBytes = 4 * header.nAtoms
-        def coordRecord(dst: Array[Float], axis: String): Unit = {
+        val coordBytes = 4 * n
+        var axis = 0
+        while (axis < 3) {
+          val label = "xyz".substring(axis, axis + 1)
           if (bb.getInt != coordBytes)
-            parseFail(s"$axis record marker is not $coordBytes")
+            fail(s"$label record marker is not $coordBytes")
           var i = 0
-          while (i < header.nAtoms) {
-            dst(i) = (bb.getFloat * unitScale).toFloat
+          while (i < n) {
+            xs(3 * i + axis) = (bb.getFloat * unitScale).toFloat
             i += 1
           }
           if (bb.getInt != coordBytes)
-            parseFail(s"$axis record markers disagree")
+            fail(s"$label record markers disagree")
+          axis += 1
         }
-        coordRecord(xs, "x"); coordRecord(ys, "y"); coordRecord(zs, "z")
         time = header.delta * (header.istart + frame * header.nsavc.toLong)
-        emit = 0
+        nAtoms = n
         return true
       } catch {
         case _: IllegalStateException if dropMalformed =>
-          dropped += header.nAtoms // the whole frame's rows are dropped
+          dropped += n // the whole frame's rows are dropped
       }
     }
     false
   }
 
-  override def next(): Boolean = {
-    if (emit >= header.nAtoms && !loadFrame()) return false
-    val a = emit
-    emit += 1
-    val row = new Array[Any](ordinals.length)
-    var i = 0
-    while (i < ordinals.length) {
-      row(i) = ordinals(i) match {
-        case 0 => frame + range.frameOffset
-        case 1 => time
-        case 2 => a
-        case 3 => xs(a)
-        case 4 => ys(a)
-        case 5 => zs(a)
-        case n => if (haveBox) box(n - 6) else null
-      }
-      i += 1
-    }
-    current = InternalRow.fromSeq(row.toIndexedSeq)
-    true
+  override def frameValue(ord: Int): Any = ord match {
+    case 1 => time
+    case n => if (haveBox) box(n - 6) else null
   }
 
-  override def get(): InternalRow = current
-  override def close(): Unit = {
-    ParseMode.warnDropped("dcd", file, dropped)
-    raf.close()
-  }
+  override def close(): Unit = raf.close()
 }

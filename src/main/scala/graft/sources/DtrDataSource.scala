@@ -3,13 +3,8 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Desmond frame-set ("dtr") layout: a trajectory is a DIRECTORY of
   * fixed-layout binary files — a `metadata` header, a `timekeys` index
@@ -267,17 +262,11 @@ object DtrFormat {
   }
 }
 
-class DtrDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "dtr"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    DtrTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("dtr", properties)
-    new DtrTable(o.paths, o.chunks, o.unitScale(0.1)) // Å→nm, as dcd/pdb
-  }
+class DtrDataSource extends FrameSource("dtr", DtrTable.Schema) {
+  // Å→nm, as dcd/pdb
+  override protected def codec(o: ReadOptions,
+      props: util.Map[String, String]): FrameCodec =
+    new DtrCodec(o.unitScale(0.1))
 }
 
 object DtrTable {
@@ -296,166 +285,93 @@ object DtrTable {
     StructField("box_gamma", FloatType, nullable = true)))
 }
 
-class DtrTable(paths: Seq[String], chunks: Int, unitScale: Double)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"dtr:${paths.mkString(",")}"
-  override def schema(): StructType = DtrTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new DtrScanBuilder(paths, chunks, unitScale)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new DtrWriteBuilder(MultiPath.single("dtr", paths, "write"),
-      unitScale, info)
-}
+/** What a partition of one frameset needs: the profile, and its frames'
+  * times from the driver index, so the reader never re-reads
+  * timekeys. */
+final case class DtrAt(nAtoms: Int, hasBox: Boolean, framesPerFile: Int,
+    times: Array[Double], setFrames: Long)
 
-class DtrScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double)
-    extends FrameScanBuilder(DtrTable.Schema) {
-  override def build(): Scan =
-    new DtrScan(paths, chunks, unitScale, required, frameLo, frameHi,
-      limit)
-}
+/** Framesets are directories: `expand` resolves framesets, `.stk` lists
+  * and collections ([[DtrFormat.framesets]]), and a streamed collection's
+  * shard is a `*.dtr` directory whose `timekeys` exists — a frameset is
+  * complete exactly then (the write path publishes by atomic rename,
+  * timekeys written first). Index: one ~16-byte metadata read, one
+  * timekeys read and an O(1) file-size check per frameset. */
+final class DtrCodec(unitScale: Double) extends FrameCodec {
+  override def name: String = "dtr"
+  override def schema: StructType = DtrTable.Schema
+  override def extensions: Seq[String] = Seq(".dtr")
 
-/** One chunk of frames within ONE frameset. `times` carries the chunk's
-  * per-frame times from the driver index (bounded by `chunks`), so the
-  * reader never re-reads timekeys. */
-case class DtrFrameRange(dir: String, startFrame: Long, endFrame: Long,
-    nAtoms: Int, hasBox: Boolean, framesPerFile: Int,
-    times: Array[Double], frameOffset: Long,
-    setFrames: Long) extends InputPartition
+  override def expand(paths: Seq[String]): Seq[String] =
+    paths.flatMap(DtrFormat.framesets)
 
-class DtrScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+  override def isShard(e: FsIO.Entry): Boolean =
+    !e.isFile && e.name.endsWith(".dtr") &&
+      FsIO.isFile(FsIO.child(e.path, "timekeys"))
 
-  /** Streaming twin: the (single) path is a COLLECTION directory that
-    * completed framesets appear in (see DtrMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new DtrMicroBatchStream(
-      MultiPath.single("dtr", paths, "streaming read"),
-      chunks, unitScale, required)
-
-  private def planSet(dir: String, fpf: Int, times: Array[Double],
-      meta: DtrFormat.Meta, off: Long, rowBudget: Long)
-      : (Seq[InputPartition], Long) = {
-    var lo = math.max(off, frameLo)
-    var hi = math.min(off + times.length, frameHi)
-    if (rowBudget != Long.MaxValue) {
-      val needed = (rowBudget + meta.nAtoms - 1) / meta.nAtoms
-      hi = math.min(hi, lo + math.max(needed, 1L))
+  override def index(dir: String, frameHi: Long): FrameIndex = {
+    val meta = DtrFormat.readMeta(dir)
+    val (fpf, times) = DtrFormat.readTimekeys(dir)
+    DtrFormat.validateSetSizes(dir, meta, fpf, times.length.toLong)
+    new FrameIndex(times.length, meta.nAtoms) {
+      override def at(start: Long, end: Long): Any =
+        DtrAt(meta.nAtoms, meta.hasBox, fpf,
+          times.slice(start.toInt, end.toInt), times.length.toLong)
     }
-    if (lo >= hi) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      val end = math.min(start + chunks, hi)
-      DtrFrameRange(dir, start - off, end - off, meta.nAtoms,
-        meta.hasBox, fpf,
-        times.slice((start - off).toInt, (end - off).toInt), off,
-        times.length.toLong)
-        : InputPartition
-    }
-    (parts, (hi - lo) * meta.nAtoms)
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // one ~16-byte metadata read + one index read per frameset; the
-    // stk list / multi-path order assigns globally contiguous frame
-    // ids (same contract as the shard sources)
-    val sets = paths.flatMap(DtrFormat.framesets)
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    sets.foreach { dir =>
-      if (budget > 0 && off < frameHi) {
-        val meta = DtrFormat.readMeta(dir)
-        val (fpf, times) = DtrFormat.readTimekeys(dir)
-        DtrFormat.validateSetSizes(dir, meta, fpf, times.length.toLong)
-        val (parts, rows) = planSet(dir, fpf, times, meta, off, budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += times.length
-      }
-    }
-    out.toArray
-  }
+  override def open(part: FramePartition, need: Set[String],
+      atomHi: Int): FrameReader = new DtrFrameReader(unitScale, part)
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new DtrReaderFactory(unitScale, required)
-}
-
-class DtrReaderFactory(unitScale: Double, required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new DtrPartitionReader(unitScale, required,
-      partition.asInstanceOf[DtrFrameRange])
+  override def writes: Boolean = true
+  override def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
+    new DtrWriteBuilder(path, unitScale, info)
 }
 
 /** Pure-arithmetic positioned read: frame f lives in file
   * `frame(f / framesPerFile)` at offset `(f % framesPerFile) ×
   * frameBytes` — no scanning, no index on the executor. */
-class DtrPartitionReader(unitScale: Double, required: StructType,
-    range: DtrFrameRange) extends PartitionReader[InternalRow] {
+private final class DtrFrameReader(unitScale: Double, part: FramePartition)
+    extends FrameReader("dtr", ParseMode.FailFast, part) {
 
-  private val meta = DtrFormat.Meta(range.nAtoms, range.hasBox)
+  private val at = part.at.asInstanceOf[DtrAt]
+  private val meta = DtrFormat.Meta(at.nAtoms, at.hasBox)
   private val frameBytes = DtrFormat.frameBytes(meta)
   private val buf = new Array[Byte](frameBytes.toInt)
 
   private var raf: FsRandom = _
   private var openFileIdx = -1L
-
-  private val xs = new Array[Float](range.nAtoms)
-  private val ys = new Array[Float](range.nAtoms)
-  private val zs = new Array[Float](range.nAtoms)
   private val box = new Array[Float](6)
-  private var time = 0.0
 
-  private var frame = range.startFrame - 1 // advanced by loadFrame
-  private var emit = range.nAtoms
-  private var current: InternalRow = _
-
-  private val ordinals: Array[Int] = {
-    val canon = DtrTable.Schema.fieldNames.zipWithIndex.toMap
-    required.fieldNames.map(canon)
-  }
-
-  private def loadFrame(): Boolean = {
-    if (frame + 1 >= range.endFrame) return false
+  override def next(): Boolean = {
+    if (frame + 1 >= part.endFrame) return false
     frame += 1
-    val fileIdx = frame / range.framesPerFile
+    val fileIdx = frame / at.framesPerFile
     if (fileIdx != openFileIdx) {
       if (raf != null) raf.close()
-      val f = FsIO.child(range.dir, DtrFormat.frameFileName(fileIdx))
+      val f = FsIO.child(part.path, DtrFormat.frameFileName(fileIdx))
       if (!FsIO.isFile(f)) throw new IllegalStateException(
-        s"dtr: ${range.dir} is missing ${FsIO.fileName(f)} (frame " +
-          s"${frame + range.frameOffset}) — truncated frameset")
+        s"dtr: ${part.path} is missing ${FsIO.fileName(f)} (frame " +
+          s"${frame + part.frameOffset}) — truncated frameset")
       raf = FsIO.openRandom(f)
       // exact per-open size check: the plan validated first/last files
       // in O(1); this closes the mid-set case without driver-side
       // stats scaling with file count (a larger-than-expected file
       // means the payload layout disagrees with the metadata profile
       // and positioned reads would silently mis-decode)
-      DtrFormat.checkFileSize(range.dir, meta, range.framesPerFile,
-        range.setFrames, fileIdx, raf.length())
+      DtrFormat.checkFileSize(part.path, meta, at.framesPerFile,
+        at.setFrames, fileIdx, raf.length())
       openFileIdx = fileIdx
     }
-    raf.seek((frame % range.framesPerFile) * frameBytes)
+    raf.seek((frame % at.framesPerFile) * frameBytes)
     try raf.readFully(buf)
     catch { case _: java.io.EOFException =>
       throw new IllegalStateException(
-        s"dtr: short read in ${range.dir} frame " +
-          s"${frame + range.frameOffset} — truncated frame file")
+        s"dtr: short read in ${part.path} frame " +
+          s"${frame + part.frameOffset} — truncated frame file")
     }
     val bb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
-    if (range.hasBox) {
+    if (at.hasBox) {
       var i = 0
       while (i < 6) {
         val v = bb.getDouble()
@@ -464,41 +380,20 @@ class DtrPartitionReader(unitScale: Double, required: StructType,
         i += 1
       }
     }
-    var a = 0
-    while (a < range.nAtoms) {
-      xs(a) = (bb.getFloat() * unitScale).toFloat
-      ys(a) = (bb.getFloat() * unitScale).toFloat
-      zs(a) = (bb.getFloat() * unitScale).toFloat
-      a += 1
-    }
-    time = range.times((frame - range.startFrame).toInt)
-    emit = 0
-    true
-  }
-
-  override def next(): Boolean = {
-    if (emit >= range.nAtoms && !loadFrame()) return false
-    val a = emit
-    val row = new Array[Any](ordinals.length)
+    nAtoms = at.nAtoms
+    val xs = coords(3 * nAtoms)
     var i = 0
-    while (i < ordinals.length) {
-      row(i) = ordinals(i) match {
-        case 0 => frame + range.frameOffset
-        case 1 => time
-        case 2 => a
-        case 3 => xs(a)
-        case 4 => ys(a)
-        case 5 => zs(a)
-        case b => if (range.hasBox) box(b - 6) else null
-      }
+    while (i < 3 * nAtoms) {
+      xs(i) = (bb.getFloat() * unitScale).toFloat
       i += 1
     }
-    current = InternalRow.fromSeq(row.toIndexedSeq)
-    emit += 1
     true
   }
 
-  override def get(): InternalRow = current
+  override def frameValue(ord: Int): Any = ord match {
+    case 1 => at.times((frame - part.startFrame).toInt)
+    case n => if (at.hasBox) box(n - 6) else null
+  }
 
   override def close(): Unit = if (raf != null) raf.close()
 }

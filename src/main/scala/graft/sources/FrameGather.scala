@@ -103,7 +103,7 @@ object FrameGather extends SparkStrategy with PredicateHelper {
       case Literal(_: Int, IntegerType) => true
       case _ => false
     }
-    // the comparisons XTC's scan builder pushes: all but <=>
+    // the comparisons the shell's scan builder pushes: all but <=>
     def atomBound(c: Expression): Boolean = c match {
       case _: EqualNullSafe => false
       case b: BinaryComparison =>

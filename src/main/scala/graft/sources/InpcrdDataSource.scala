@@ -2,13 +2,7 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSourceV2 connector for the AMBER ASCII restart format
   * (`.inpcrd` / `.rst7` / `.restrt`, reference registry
@@ -40,24 +34,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * load(..., top=...) shape validation). Velocity blocks are parsed
   * past, not emitted — the reference's column registry for this
   * format carries coordinates only. */
-class InpcrdDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "inpcrd"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    InpcrdTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("inpcrd", properties)
-    val vel = Option(properties.get("velocities")).map(_.toLowerCase)
+class InpcrdDataSource extends FrameSource("inpcrd", InpcrdTable.Schema) {
+  override protected def codec(o: ReadOptions,
+      props: util.Map[String, String]): FrameCodec = {
+    val vel = Option(props.get("velocities")).map(_.toLowerCase)
       .getOrElse("auto")
     if (!Seq("auto", "true", "false").contains(vel))
       throw new IllegalArgumentException(
         s"inpcrd option 'velocities' must be auto, true or false, got " +
           s"'$vel'")
-    val expectAtoms = Option(properties.get("top"))
-      .map(PdbTopology.atomCount).getOrElse(-1)
-    new InpcrdTable(o.paths, o.chunks, o.unitScale(0.1), vel, expectAtoms)
+    new InpcrdCodec(o.unitScale(0.1), vel, o.topAtoms)
   }
 }
 
@@ -75,105 +61,73 @@ object InpcrdTable {
     StructField("box_alpha", FloatType, nullable = true),
     StructField("box_beta", FloatType, nullable = true),
     StructField("box_gamma", FloatType, nullable = true)))
-
-  val Extensions: Seq[String] =
-    Seq(".inpcrd", ".rst7", ".restrt", ".inpcrd.gz", ".rst7.gz",
-      ".restrt.gz")
 }
 
-class InpcrdTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    vel: String, expectAtoms: Int = -1) extends Table with SupportsRead {
-  override def name(): String = s"inpcrd:${paths.mkString(",")}"
-  override def schema(): StructType = InpcrdTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new InpcrdScanBuilder(paths, chunks, unitScale, vel, expectAtoms)
-}
+/** One frame per file. `plan` is overridden: planning needs NO file
+  * probe — the frame axis IS the shard list, so frame_id pushdown
+  * prunes files before any I/O, and a partition is a run of `chunks`
+  * files (its `at`). The index (the `top=` probe, and a recovered
+  * stream's predecessor count) reads the header line only. */
+final class InpcrdCodec(unitScale: Double, vel: String,
+    override val expectAtoms: Int) extends FrameCodec {
+  override def name: String = "inpcrd"
+  override def schema: StructType = InpcrdTable.Schema
+  override def extensions: Seq[String] = Seq(".inpcrd", ".rst7",
+    ".restrt", ".inpcrd.gz", ".rst7.gz", ".restrt.gz")
 
-class InpcrdScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    vel: String, expectAtoms: Int = -1)
-    extends FrameScanBuilder(InpcrdTable.Schema) {
-  override def build(): Scan =
-    new InpcrdScan(paths, chunks, unitScale, vel, required, frameLo,
-      frameHi, limit, expectAtoms)
-}
-
-/** A run of consecutive shard FILES; each file is one frame. */
-case class InpcrdFileRange(files: Seq[String], firstFrame: Long)
-    extends InputPartition
-
-class InpcrdScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    vel: String, required: StructType, frameLo: Long, frameHi: Long,
-    limit: Int, expectAtoms: Int = -1) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin: the (single) path is a directory that restart
-    * files appear in (see InpcrdMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new InpcrdMicroBatchStream(
-      MultiPath.single("inpcrd", paths, "streaming read"),
-      chunks, unitScale, required, vel, expectAtoms)
-
-  /** One frame per file: planning needs NO file probe at all — the
-    * frame axis IS the shard list, so frame_id pushdown prunes files
-    * before any I/O (cheaper than every multi-frame source, which must
-    * at least line-count each shard). */
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs -> one ordered file list; the
-    // frame axis IS the file list (see MultiPath)
-    val files: Seq[String] =
-      MultiPath.expandAll("inpcrd", paths, InpcrdTable.Extensions)
-    var lo = math.max(0L, frameLo)
-    var hi = math.min(files.length.toLong, frameHi)
-    if (limit >= 0) hi = math.min(hi, lo + math.max(limit, 1))
-    if (lo >= hi) return Array.empty
-    files.slice(lo.toInt, hi.toInt)
-      .grouped(chunks)
-      .zipWithIndex
-      .map { case (group, gi) =>
-        InpcrdFileRange(group, lo + gi.toLong * chunks): InputPartition
-      }
-      .toArray
+  override def index(path: String, frameHi: Long): FrameIndex = {
+    val src = XyzLines.open(path)
+    val natoms =
+      try {
+        val it = src.getLines()
+        if (it.hasNext) it.next()
+        if (!it.hasNext) InpcrdCodec.bad(path, "truncated restart (no header)")
+        InpcrdCodec.natoms(path, it.next())
+      } finally src.close()
+    new FrameIndex(1L, natoms)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new InpcrdReaderFactory(unitScale, vel, required, expectAtoms)
-}
-
-class InpcrdReaderFactory(unitScale: Double, vel: String,
-    required: StructType, expectAtoms: Int = -1)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new InpcrdPartitionReader(unitScale, vel,
-      required, partition.asInstanceOf[InpcrdFileRange], expectAtoms)
-}
-
-class InpcrdPartitionReader(unitScale: Double, vel: String,
-    required: StructType, range: InpcrdFileRange, expectAtoms: Int = -1)
-    extends PartitionReader[InternalRow] {
-
-  private val ordinals: Array[Int] = {
-    val canon = InpcrdTable.Schema.fieldNames.zipWithIndex.toMap
-    required.fieldNames.map(canon)
+  override def plan(files: Seq[String], base: Long, lo: Long, hi: Long,
+      budget: Long, chunks: Int): (Seq[FramePartition], Seq[Long]) = {
+    val f0 = math.max(base, lo) - base
+    var f1 = math.min(base + files.length, hi) - base
+    if (budget != Long.MaxValue) f1 = math.min(f1, f0 + math.max(budget, 1L))
+    val parts = if (f0 >= f1) Nil else (f0 until f1 by chunks.toLong).map { s =>
+      val e = math.min(s + chunks, f1)
+      FramePartition(files(s.toInt), 0L, e - s, base + s,
+        files.slice(s.toInt, e.toInt))
+    }
+    (parts, files.map(_ => 1L))
   }
 
-  private var fileIdx = 0
-  private var atom = 0
-  private var natoms = 0
+  override def open(part: FramePartition, need: Set[String],
+      atomHi: Int): FrameReader = new InpcrdFrameReader(unitScale, vel, part)
+}
+
+private object InpcrdCodec {
+  def bad(file: String, what: String): Nothing =
+    throw new IllegalStateException(s"inpcrd parse error in $file: $what")
+
+  /** natoms from the header line (natoms [time]). */
+  def natoms(file: String, header: String): Int = {
+    val tok = header.trim.split("\\s+")(0)
+    val n =
+      try tok.toInt
+      catch { case _: NumberFormatException =>
+        bad(file, s"non-integer natoms '$tok'") }
+    if (n <= 0) bad(file, s"natoms must be > 0, got $n")
+    n
+  }
+}
+
+/** Reads the partition's files in order, one frame each. Velocity
+  * blocks are parsed past, not emitted. */
+private final class InpcrdFrameReader(unitScale: Double, vel: String,
+    part: FramePartition) extends FrameReader("inpcrd", ParseMode.FailFast, part) {
+
+  private val files = part.at.asInstanceOf[Seq[String]]
   private var time = 0.0
-  private var coords: Array[Double] = _
   private var box: Array[Float] = _
-  private var current: InternalRow = _
-
-  private def parseFail(file: String, what: String): Nothing =
-    throw new IllegalStateException(
-      s"inpcrd parse error in $file: $what")
 
   /** 12-char fixed-width slices. */
   private def slice12(line: String, out: Array[Double], from: Int,
@@ -186,7 +140,7 @@ class InpcrdPartitionReader(unitScale: Double, vel: String,
         out(i) =
           try tok.toDouble
           catch { case _: NumberFormatException =>
-            parseFail(file, s"non-numeric field '$tok'") }
+            InpcrdCodec.bad(file, s"non-numeric field '$tok'") }
         i += 1
       }
       c += 12
@@ -194,27 +148,23 @@ class InpcrdPartitionReader(unitScale: Double, vel: String,
     i
   }
 
-  private def loadFile(p: String): Unit = {
+  override def next(): Boolean = {
+    if (frame + 1 >= part.endFrame) return false
+    frame += 1
+    val p = files(frame.toInt)
     val src = XyzLines.open(p)
     try {
       val all = src.getLines().toArray
-      if (all.length < 2) parseFail(p, "truncated restart (no header)")
+      if (all.length < 2) InpcrdCodec.bad(p, "truncated restart (no header)")
       val header = all(1).trim.split("\\s+")
-      natoms =
-        try header(0).toInt
-        catch { case _: NumberFormatException =>
-          parseFail(p, s"non-integer natoms '${header(0)}'") }
-      if (natoms <= 0) parseFail(p, s"natoms must be > 0, got $natoms")
-      if (expectAtoms > 0 && natoms != expectAtoms)
-        parseFail(p, s"natoms $natoms disagrees with the topology " +
-          s"atom count $expectAtoms (option 'top')")
+      nAtoms = InpcrdCodec.natoms(p, all(1))
       time =
         if (header.length > 1)
           try header(1).toDouble
           catch { case _: NumberFormatException =>
-            parseFail(p, s"non-numeric time '${header(1)}'") }
-        else (range.firstFrame + fileIdx).toDouble
-      val coordLines = (3 * natoms + 5) / 6
+            InpcrdCodec.bad(p, s"non-numeric time '${header(1)}'") }
+        else (part.frameOffset + frame).toDouble
+      val coordLines = (3 * nAtoms + 5) / 6
       val rest = all.length - 2
       // decide optional blocks from the line count (see class doc)
       val hasVel = vel match {
@@ -224,63 +174,39 @@ class InpcrdPartitionReader(unitScale: Double, vel: String,
       }
       val hasBox = rest == coordLines + (if (hasVel) coordLines else 0) + 1
       if (rest < coordLines + (if (hasVel) coordLines else 0))
-        parseFail(p, s"expected at least ${coordLines} coordinate " +
+        InpcrdCodec.bad(p, s"expected at least ${coordLines} coordinate " +
           s"line(s)${if (hasVel) " + velocity block" else ""}, found " +
           s"$rest")
-      coords = new Array[Double](3 * natoms)
+      val d = new Array[Double](3 * nAtoms)
       var filled = 0
       var l = 0
       while (l < coordLines) {
-        filled = slice12(all(2 + l), coords, filled, p)
+        filled = slice12(all(2 + l), d, filled, p)
         l += 1
       }
-      if (filled != 3 * natoms)
-        parseFail(p, s"frame has $filled coordinates, expected " +
-          s"${3 * natoms}")
+      if (filled != 3 * nAtoms)
+        InpcrdCodec.bad(p, s"frame has $filled coordinates, expected " +
+          s"${3 * nAtoms}")
+      val xs = coords(3 * nAtoms)
+      var i = 0
+      while (i < 3 * nAtoms) { xs(i) = (d(i) * unitScale).toFloat; i += 1 }
       box =
         if (hasBox) {
           val b = new Array[Double](6)
           if (slice12(all(all.length - 1), b, 0, p) != 6)
-            parseFail(p, "box line needs 3 lengths + 3 angles")
+            InpcrdCodec.bad(p, "box line needs 3 lengths + 3 angles")
           Array((b(0) * unitScale).toFloat, (b(1) * unitScale).toFloat,
             (b(2) * unitScale).toFloat,
             b(3).toFloat, b(4).toFloat, b(5).toFloat)
         } else null
-      atom = 0
     } finally src.close()
+    true
   }
 
-  override def next(): Boolean = {
-    // advance to the next unread file when none is loaded or the
-    // current one is exhausted (one frame per file)
-    while (coords == null || atom >= natoms) {
-      if (coords != null) fileIdx += 1
-      if (fileIdx >= range.files.length) return false
-      loadFile(range.files(fileIdx))
-    }
-    {
-      val a = atom
-      val row = new Array[Any](ordinals.length)
-      var i = 0
-      while (i < ordinals.length) {
-        row(i) = ordinals(i) match {
-          case 0 => range.firstFrame + fileIdx
-          case 1 => time
-          case 2 => a
-          case 3 => (coords(3 * a) * unitScale).toFloat
-          case 4 => (coords(3 * a + 1) * unitScale).toFloat
-          case 5 => (coords(3 * a + 2) * unitScale).toFloat
-          case k => if (box == null) null else box(k - 6)
-        }
-        i += 1
-      }
-      current = InternalRow.fromSeq(row.toIndexedSeq)
-      atom += 1
-      true
-    }
+  override def frameValue(ord: Int): Any = ord match {
+    case 1 => time
+    case n => if (box == null) null else box(n - 6)
   }
-
-  override def get(): InternalRow = current
 
   override def close(): Unit = ()
 }

@@ -2,13 +2,8 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 connector for the LAMMPS dump text format
@@ -49,18 +44,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * or a directory of `*.lammpstrj[.gz]` shards read in name order with
   * globally contiguous frame ids.
   */
-class LammpstrjDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "lammpstrj"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    LammpstrjTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("lammpstrj", properties)
-    val mode = ParseMode.fromOptions("lammpstrj", properties)
-    new LammpstrjTable(o.paths, o.chunks, o.unitScale(1.0), mode)
-  }
+class LammpstrjDataSource extends FrameSource("lammpstrj",
+    LammpstrjTable.Schema) {
+  override protected def codec(o: ReadOptions,
+      props: util.Map[String, String]): FrameCodec =
+    new LammpstrjCodec(o.unitScale(1.0), o.mode)
 }
 
 object LammpstrjTable {
@@ -106,62 +94,22 @@ object LammpstrjTable {
   }
 }
 
-class LammpstrjTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String) extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"lammpstrj:${paths.mkString(",")}"
-  override def schema(): StructType = LammpstrjTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new LammpstrjScanBuilder(paths, chunks, unitScale, mode)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new LammpstrjWriteBuilder(
-      MultiPath.single("lammpstrj", paths, "write"), unitScale, info)
-}
+/** Index: the first-frame header gives natoms + the ATOMS column
+  * layout (a partition's seek state); a line count gives the frame count
+  * (9 header lines + natoms data lines per frame). Atom ids are the
+  * dump's `id` column, not the atom ordinal. */
+final class LammpstrjCodec(unitScale: Double, override val mode: String)
+    extends FrameCodec {
+  override def name: String = "lammpstrj"
+  override def schema: StructType = LammpstrjTable.Schema
+  override def extensions: Seq[String] = Seq(".lammpstrj", ".lammpstrj.gz")
+  override def perAtom: Set[String] = Set("element")
 
-class LammpstrjScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String)
-    extends FrameScanBuilder(LammpstrjTable.Schema) {
-  override def build(): Scan =
-    new LammpstrjScan(paths, chunks, unitScale, required, frameLo, frameHi,
-      limit, mode)
-}
-
-case class LammpstrjFrameRange(startFrame: Long, endFrame: Long,
-    nAtoms: Int, layout: LammpstrjTable.AtomLayout,
-    filePath: String = null, frameOffset: Long = 0L)
-    extends InputPartition
-
-class LammpstrjScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    mode: String) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin (see LammpstrjMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new LammpstrjMicroBatchStream(
-      MultiPath.single("lammpstrj", paths, "streaming read"),
-      chunks, unitScale, required, mode)
-
-  /** Frame count of one file (streaming offset bookkeeping). */
-  private[sources] def planFrameCount(p: String): Long = probe(p)._2
-
-  /** Driver-side probe: first-frame header gives natoms + the ATOMS
-    * column layout; a line count gives the frame count (9 header lines
-    * + natoms data lines per frame). */
-  private def probe(p: String)
-      : (Int, Long, LammpstrjTable.AtomLayout) = {
+  override def index(p: String, frameHi: Long): FrameIndex = {
     val src = XyzLines.open(p)
     try {
       val it = src.getLines()
-      if (!it.hasNext) return (0, 0L, null)
+      if (!it.hasNext) return new FrameIndex(0L, 0)
       def expect(prefix: String): String = {
         if (!it.hasNext) throw new IllegalArgumentException(
           s"lammpstrj $p: truncated header, expected '$prefix'")
@@ -179,117 +127,46 @@ class LammpstrjScan(paths: Seq[String], chunks: Int, unitScale: Double,
       // 9 header lines already consumed; count the rest → total lines
       var lines = 9L
       while (it.hasNext) { it.next(); lines += 1 }
-      (nAtoms, lines / (nAtoms + 9), layout)
+      new FrameIndex(lines / (nAtoms + 9), nAtoms) {
+        override def at(start: Long, end: Long): Any = (nAtoms, layout)
+      }
     } finally src.close()
   }
 
-  private def planFile(p: String, nAtoms: Int, nFrames: Long,
-      layout: LammpstrjTable.AtomLayout, off: Long, rowBudget: Long)
-      : (Seq[InputPartition], Long) = {
-    var lo = math.max(off, frameLo)
-    var hi = math.min(off + nFrames, frameHi)
-    if (rowBudget != Long.MaxValue && nAtoms > 0) {
-      val needed = (rowBudget + nAtoms - 1) / nAtoms
-      hi = math.min(hi, lo + math.max(needed, 1L))
-    }
-    if (lo >= hi || nAtoms <= 0) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      LammpstrjFrameRange(start - off, math.min(start + chunks, hi) - off,
-        nAtoms, layout, p, off): InputPartition
-    }
-    (parts, (hi - lo) * nAtoms)
-  }
+  override def open(part: FramePartition, need: Set[String],
+      atomHi: Int): FrameReader =
+    new LammpstrjFrameReader(unitScale, mode, part, need)
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs -> one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath)
-    val files = MultiPath.expandAll("lammpstrj", paths,
-      Seq(".lammpstrj", ".lammpstrj.gz"))
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val (nAtoms, nFrames, layout) = probe(p)
-        val (parts, rows) =
-          planFile(p, nAtoms, nFrames, layout, off, budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += nFrames
-      }
-    }
-    out.toArray
-  }
-
-  override def supportedCustomMetrics()
-      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    ParseMode.scanMetrics
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new LammpstrjReaderFactory(paths.head, unitScale, required, mode)
-}
-
-class LammpstrjReaderFactory(path: String, unitScale: Double,
-    required: StructType, mode: String) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new LammpstrjPartitionReader(path, unitScale, required,
-      partition.asInstanceOf[LammpstrjFrameRange], mode)
+  override def writes: Boolean = true
+  override def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
+    new LammpstrjWriteBuilder(path, unitScale, info)
 }
 
 /** Positioned chunk read: skip whole frames by line arithmetic, then
   * parse the 9-line header + natoms data lines per frame. */
-class LammpstrjPartitionReader(path: String, unitScale: Double,
-    required: StructType, range: LammpstrjFrameRange, mode: String)
-    extends PartitionReader[InternalRow] {
+private final class LammpstrjFrameReader(unitScale: Double, mode: String,
+    part: FramePartition, need: Set[String])
+    extends TextFrameReader("lammpstrj", mode, part, part.startFrame *
+      (part.at.asInstanceOf[(Int, LammpstrjTable.AtomLayout)]._1 + 9)) {
 
-  private val dropMalformed = mode == ParseMode.DropMalformed
-  private val coerceWarn = mode == ParseMode.CoerceWarn
-  private var dropped = 0L
-  private var coerced = 0L
+  private val (n, lay) =
+    part.at.asInstanceOf[(Int, LammpstrjTable.AtomLayout)]
+  private val axes = Array(need("x"), need("y"), need("z"))
+    .map(_ || dropMalformed)
+  private val cols = Array(lay.x, lay.y, lay.z)
 
-  private val file = if (range.filePath != null) range.filePath else path
-  private val src = XyzLines.open(file)
-  private val lines = src.getLines()
-  private val frameLines = range.nAtoms + 9
-  (0L until range.startFrame * frameLines).foreach { _ =>
-    if (lines.hasNext) lines.next()
-  }
-
-  private var frame = range.startFrame
-  private var atomInFrame = range.nAtoms // force header read first
   private var time = 0.0
   // box as (a, b, c, alpha, beta, gamma); null when bounds malformed
   // under DROPMALFORMED
   private var box: Array[Float] = _
-  private var current: InternalRow = _
-
-  private val ordinals: Array[Int] = {
-    val canon = LammpstrjTable.Schema.fieldNames.zipWithIndex.toMap
-    required.fieldNames.map(canon)
-  }
-
-  private def parseFail(what: String, content: String): Nothing =
-    throw new IllegalStateException(
-      s"lammpstrj parse error in $file at frame " +
-        s"${frame + range.frameOffset}: $what " +
-        s"(line: '${content.take(120)}')")
-
-  private def numOrFail(tok: String, what: String, line: String): Double =
-    try tok.toDouble catch {
-      case _: NumberFormatException =>
-        if (coerceWarn) ParseMode.coerce(tok) match {
-          case Some(v) => coerced += 1; v
-          case None => parseFail(s"non-numeric $what '$tok'", line)
-        } else parseFail(s"non-numeric $what '$tok'", line)
-    }
+  private val elems = if (need("element")) new Array[String](n) else null
+  if (need("atom_id")) ids = new Array[Int](n)
+  if (dropMalformed) ok = new Array[Boolean](n)
 
   private def headerLine(prefix: String): String = {
-    if (!lines.hasNext) parseFail(s"truncated frame, expected $prefix", "")
+    if (!lines.hasNext) fail(s"truncated frame, expected $prefix", "")
     val l = lines.next()
-    if (!l.startsWith(prefix))
-      parseFail(s"expected '$prefix'", l)
+    if (!l.startsWith(prefix)) fail(s"expected '$prefix'", l)
     l
   }
 
@@ -297,14 +174,14 @@ class LammpstrjPartitionReader(path: String, unitScale: Double,
     * public LAMMPS bound-adjustment formulas. Orthogonal dumps (2
     * tokens per bounds line) get angles of exactly 90. */
   private def readBox(): Array[Float] = {
-    val l1 = if (lines.hasNext) lines.next() else parseFail("no bounds", "")
-    val l2 = if (lines.hasNext) lines.next() else parseFail("no bounds", "")
-    val l3 = if (lines.hasNext) lines.next() else parseFail("no bounds", "")
+    val l1 = if (lines.hasNext) lines.next() else fail("no bounds", "")
+    val l2 = if (lines.hasNext) lines.next() else fail("no bounds", "")
+    val l3 = if (lines.hasNext) lines.next() else fail("no bounds", "")
     def parse(l: String): Array[Double] =
-      l.trim.split("\\s+").map(numOrFail(_, "box bound", l))
+      l.trim.split("\\s+").map(num(_, "box bound", l))
     val b1 = parse(l1); val b2 = parse(l2); val b3 = parse(l3)
     if (b1.length < 2 || b2.length < 2 || b3.length < 2)
-      parseFail("bounds line needs at least lo hi", l1)
+      fail("bounds line needs at least lo hi", l1)
     if (b1.length >= 3 || b2.length >= 3 || b3.length >= 3) {
       // triclinic: bounds carry tilt factors xy xz yz
       val xy = if (b1.length >= 3) b1(2) else 0.0
@@ -335,85 +212,63 @@ class LammpstrjPartitionReader(path: String, unitScale: Double,
   }
 
   override def next(): Boolean = {
-    while (true) {
-      if (frame >= range.endFrame) return false
-      if (atomInFrame == range.nAtoms) {
-        if (!lines.hasNext) return false
-        headerLine("ITEM: TIMESTEP")
-        val tsLine = if (lines.hasNext) lines.next() else ""
-        time = numOrFail(tsLine.trim, "TIMESTEP", tsLine)
-        headerLine("ITEM: NUMBER OF ATOMS")
-        val nLine = if (lines.hasNext) lines.next() else ""
-        val n = numOrFail(nLine.trim, "NUMBER OF ATOMS", nLine).toInt
-        if (n != range.nAtoms)
-          parseFail(s"frame declares $n atoms, planned ${range.nAtoms} " +
-            "(variable atom counts are not supported)", nLine)
-        headerLine("ITEM: BOX BOUNDS")
-        box =
-          try readBox()
-          catch {
-            case _: IllegalStateException if dropMalformed =>
-              dropped += 1; null
-          }
-        headerLine("ITEM: ATOMS")
-        atomInFrame = 0
+    if (frame + 1 >= part.endFrame || !lines.hasNext) return false
+    frame += 1
+    headerLine("ITEM: TIMESTEP")
+    val tsLine = if (lines.hasNext) lines.next() else ""
+    time = num(tsLine.trim, "TIMESTEP", tsLine)
+    headerLine("ITEM: NUMBER OF ATOMS")
+    val nLine = if (lines.hasNext) lines.next() else ""
+    val declared = num(nLine.trim, "NUMBER OF ATOMS", nLine).toInt
+    if (declared != n)
+      fail(s"frame declares $declared atoms, planned $n " +
+        "(variable atom counts are not supported)", nLine)
+    headerLine("ITEM: BOX BOUNDS")
+    box =
+      try readBox()
+      catch {
+        case _: IllegalStateException if dropMalformed =>
+          dropped += 1; null
       }
-      if (!lines.hasNext) return false
+    headerLine("ITEM: ATOMS")
+    val xs = coords(3 * n)
+    var a = 0
+    while (a < n && lines.hasNext) {
       val line = lines.next()
       try {
         val parts = line.trim.split("\\s+")
-        val lay = range.layout
         if (parts.length < lay.width)
-          parseFail(s"atom line has ${parts.length} fields, header " +
+          fail(s"atom line has ${parts.length} fields, header " +
             s"declared ${lay.width}", line)
-        if (dropMalformed) {
-          numOrFail(parts(lay.id), "id", line)
-          numOrFail(parts(lay.x), "x", line)
-          numOrFail(parts(lay.y), "y", line)
-          numOrFail(parts(lay.z), "z", line)
+        if (ids != null || dropMalformed) {
+          val id = num(parts(lay.id), "id", line).toInt
+          if (ids != null) ids(a) = id
         }
-        val row = new Array[Any](ordinals.length)
-        var i = 0
-        while (i < ordinals.length) {
-          row(i) = ordinals(i) match {
-            case 0 => frame + range.frameOffset
-            case 1 => time
-            case 2 => numOrFail(parts(lay.id), "id", line).toInt
-            case 3 => UTF8String.fromString(
-              if (lay.elem >= 0) parts(lay.elem) else "X")
-            case 4 => (numOrFail(parts(lay.x), "x", line) * unitScale)
-              .toFloat
-            case 5 => (numOrFail(parts(lay.y), "y", line) * unitScale)
-              .toFloat
-            case 6 => (numOrFail(parts(lay.z), "z", line) * unitScale)
-              .toFloat
-            case k => if (box == null) null else box(k - 7)
-          }
-          i += 1
+        if (elems != null)
+          elems(a) = if (lay.elem >= 0) parts(lay.elem) else "X"
+        var k = 0
+        while (k < 3) {
+          if (axes(k)) xs(3 * a + k) = (num(parts(cols(k)),
+            "xyz".substring(k, k + 1), line) * unitScale).toFloat
+          k += 1
         }
-        current = InternalRow.fromSeq(row.toIndexedSeq)
-        atomInFrame += 1
-        if (atomInFrame == range.nAtoms) frame += 1
-        return true
+        if (ok != null) ok(a) = true
       } catch {
         case _: IllegalStateException if dropMalformed =>
+          ok(a) = false
           dropped += 1
-          atomInFrame += 1
-          if (atomInFrame == range.nAtoms) frame += 1
       }
+      a += 1
     }
-    false // unreachable
+    nAtoms = a
+    true
   }
 
-  override def get(): InternalRow = current
-
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    ParseMode.taskMetrics(dropped, coerced)
-
-  override def close(): Unit = {
-    ParseMode.warnDropped("lammpstrj", file, dropped)
-    ParseMode.warnCoerced("lammpstrj", file, coerced)
-    src.close()
+  override def frameValue(ord: Int): Any = ord match {
+    case 1 => time
+    case k => if (box == null) null else box(k - 7)
   }
+
+  override def atomValue(ord: Int, a: Int): Any =
+    UTF8String.fromString(elems(a))
 }

@@ -3,13 +3,7 @@ package graft.sources
 import java.nio.ByteBuffer
 import java.util
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** One variable of a parsed netCDF-classic header. `isRecord` means the
   * first dimension is the unlimited (record) dimension; `begin` is the
@@ -260,20 +254,11 @@ private[sources] object AmberProfile {
   *
   * Usage: `spark.read.format("netcdf").option("chunks", 100)
   * .load(path)`. */
-class NetcdfDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "netcdf"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    NetcdfTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("netcdf", properties)
-    val expectAtoms = Option(properties.get("top"))
-      .map(PdbTopology.atomCount).getOrElse(-1)
-    // file is already Å (AMBER native units)
-    new NetcdfTable(o.paths, o.chunks, o.unitScale(1.0), expectAtoms)
-  }
+class NetcdfDataSource extends FrameSource("netcdf", NetcdfTable.Schema) {
+  // file is already Å (AMBER native units)
+  override protected def codec(o: ReadOptions,
+      props: util.Map[String, String]): FrameCodec =
+    new NetcdfCodec(o.unitScale(1.0), o.topAtoms)
 }
 
 object NetcdfTable {
@@ -294,143 +279,50 @@ object NetcdfTable {
     StructField("box_alpha", FloatType, nullable = true),
     StructField("box_beta", FloatType, nullable = true),
     StructField("box_gamma", FloatType, nullable = true)))
-
-  val Extensions = Seq(".nc", ".ncdf", ".netcdf", ".ncrst")
 }
 
-class NetcdfTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    expectAtoms: Int = -1)
-    extends Table with SupportsRead {
-  override def name(): String = s"netcdf:${paths.mkString(",")}"
-  override def schema(): StructType = NetcdfTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new NetcdfScanBuilder(paths, chunks, unitScale, expectAtoms)
-}
+/** Index: one header read per file gives (natoms, frames) — O(1)
+  * planning per shard, the DCD/binpos shape (no index walk). Slab
+  * addressing needs no seek state: the reader re-reads the (small)
+  * header and seeks by arithmetic. */
+final class NetcdfCodec(unitScale: Double, override val expectAtoms: Int)
+    extends FrameCodec {
+  override def name: String = "netcdf"
+  override def schema: StructType = NetcdfTable.Schema
+  override def extensions: Seq[String] =
+    Seq(".nc", ".ncdf", ".netcdf", ".ncrst")
 
-class NetcdfScanBuilder(paths: Seq[String], chunks: Int,
-    unitScale: Double, expectAtoms: Int)
-    extends FrameScanBuilder(NetcdfTable.Schema) {
-  override def build(): Scan =
-    new NetcdfScan(paths, chunks, unitScale, required, frameLo, frameHi,
-      limit, expectAtoms)
-}
-
-/** startFrame/endFrame are LOCAL to `filePath`; `frameOffset` is the
-  * global frame id of the file's frame 0. Slab addressing needs no
-  * byte offset: the executor re-reads the (small) header and seeks by
-  * arithmetic. */
-case class NetcdfFrameRange(startFrame: Long, endFrame: Long,
-    filePath: String, frameOffset: Long) extends InputPartition
-
-class NetcdfScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    expectAtoms: Int)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new NetcdfMicroBatchStream(
-      MultiPath.single("netcdf", paths, "streaming read"),
-      chunks, unitScale, required)
-
-  /** One header read per file gives (natoms, frames) — O(1) planning
-    * per shard, the DCD/binpos shape (no index walk). */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = MultiPath.expandAll("netcdf", paths,
-      NetcdfTable.Extensions)
-    if (expectAtoms > 0) files.foreach { p =>
-      val raf = FsIO.openRandom(p)
-      try {
-        val prof = AmberProfile.of(NetcdfFormat.readHeader(raf, p), p)
-        if (prof.nAtoms != expectAtoms)
-          throw new IllegalArgumentException(
-            s"netcdf $p: file declares ${prof.nAtoms} atoms but the " +
-              s"topology declares atom count $expectAtoms (option 'top')")
-      } finally raf.close()
-    }
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val raf = FsIO.openRandom(p)
-        val prof =
-          try AmberProfile.of(NetcdfFormat.readHeader(raf, p), p)
-          finally raf.close()
-        val lo = math.max(off, frameLo) - off
-        var hi = math.min(off + prof.frames, frameHi) - off
-        // a 0-atom file is format-legal but contributes no rows: plan
-        // nothing (also keeps the limit arithmetic division-safe)
-        if (prof.nAtoms == 0) hi = lo
-        if (lo < hi && budget != Long.MaxValue) {
-          val maxFrames = (budget + prof.nAtoms - 1) / prof.nAtoms
-          hi = math.min(hi, lo + maxFrames)
-        }
-        if (lo < hi) {
-          (lo until hi by chunks.toLong).foreach { start =>
-            out += NetcdfFrameRange(start,
-              math.min(start + chunks, hi), p, off)
-          }
-          if (budget != Long.MaxValue)
-            budget = math.max(0L, budget - (hi - lo) * prof.nAtoms)
-        }
-        off += prof.frames
-      }
-    }
-    out.toArray
+  override def index(path: String, frameHi: Long): FrameIndex = {
+    val raf = FsIO.openRandom(path)
+    val prof =
+      try AmberProfile.of(NetcdfFormat.readHeader(raf, path), path)
+      finally raf.close()
+    new FrameIndex(prof.frames, prof.nAtoms)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new NetcdfReaderFactory(unitScale, required)
-}
-
-class NetcdfReaderFactory(unitScale: Double, required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new NetcdfPartitionReader(unitScale, required,
-      partition.asInstanceOf[NetcdfFrameRange])
+  override def open(part: FramePartition, need: Set[String],
+      atomHi: Int): FrameReader =
+    new NetcdfFrameReader(unitScale, part, need("x") || need("y") || need("z"),
+      Set("box_a", "box_b", "box_c", "box_alpha", "box_beta", "box_gamma")
+        .exists(need))
 }
 
 /** Arithmetic positioned reads: coordinates slab at
   * `begin + frame × recSize`, one read per referenced variable per
   * frame. When x/y/z are pruned the coordinate slab is never read. */
-class NetcdfPartitionReader(unitScale: Double, required: StructType,
-    range: NetcdfFrameRange)
-    extends PartitionReader[InternalRow] {
+private final class NetcdfFrameReader(unitScale: Double,
+    part: FramePartition, needXyz: Boolean, needCell: Boolean)
+    extends FrameReader("netcdf", ParseMode.FailFast, part) {
 
-  private val raf = FsIO.openRandom(range.filePath)
+  private val raf = FsIO.openRandom(part.path)
   private val prof =
-    AmberProfile.of(NetcdfFormat.readHeader(raf, range.filePath),
-      range.filePath)
+    try AmberProfile.of(NetcdfFormat.readHeader(raf, part.path), part.path)
+    catch { case e: Throwable => raf.close(); throw e }
   private val recSize = prof.header.recSize
 
-  private val needXyz =
-    required.fieldNames.exists(Set("x", "y", "z"))
-  private val needCell = required.fieldNames.exists(
-    Set("box_a", "box_b", "box_c", "box_alpha", "box_beta", "box_gamma"))
-
-  private var xs: Array[Float] = Array.empty
   private val cells = new Array[Float](6)
   private var haveCell = false
   private var time = 0.0
-  private var frame = range.startFrame - 1
-  // start "exhausted" so the first next() loads frame 0 (also makes
-  // the 0-atom case loop through frames without emitting)
-  private var emit = prof.nAtoms
-  private var current: InternalRow = _
-
-  private val ordinals: Array[Int] = {
-    val canon = NetcdfTable.Schema.fieldNames.zipWithIndex.toMap
-    required.fieldNames.map(canon)
-  }
 
   /** Reads `n` reals of `v` for this frame into doubles, applying the
     * variable's scale_factor. */
@@ -449,19 +341,20 @@ class NetcdfPartitionReader(unitScale: Double, required: StructType,
     out
   }
 
-  private def loadFrame(): Boolean = {
-    if (frame + 1 >= range.endFrame) return false
+  override def next(): Boolean = {
+    if (frame + 1 >= part.endFrame) return false
     frame += 1
     val f = frame
+    nAtoms = prof.nAtoms
     if (needXyz) {
       val n = 3 * prof.nAtoms
       val d = readVar(prof.coords, f, n)
-      if (xs.length < n) xs = new Array[Float](n)
+      val xs = coords(n)
       var i = 0
       while (i < n) { xs(i) = (d(i) * unitScale).toFloat; i += 1 }
     }
     time = prof.time.map(v => readVar(v, f, 1)(0))
-      .getOrElse((range.frameOffset + f).toDouble)
+      .getOrElse((part.frameOffset + f).toDouble)
     haveCell = false
     if (needCell) (prof.cellLen, prof.cellAng) match {
       case (Some(cl), Some(ca)) =>
@@ -475,36 +368,13 @@ class NetcdfPartitionReader(unitScale: Double, required: StructType,
         haveCell = true
       case _ => ()
     }
-    emit = 0
     true
   }
 
-  override def next(): Boolean = {
-    // loop form: 0-atom frames yield no rows (the planner already
-    // skips 0-atom files; this keeps the reader safe regardless)
-    while (emit >= prof.nAtoms) {
-      if (!loadFrame()) return false
-    }
-    val a = emit
-    emit += 1
-    val row = new Array[Any](ordinals.length)
-    var i = 0
-    while (i < ordinals.length) {
-      row(i) = ordinals(i) match {
-        case 0 => frame + range.frameOffset
-        case 1 => time
-        case 2 => a // 0-based file-order ordinal (topology join key)
-        case 3 => xs(3 * a)
-        case 4 => xs(3 * a + 1)
-        case 5 => xs(3 * a + 2)
-        case n => if (haveCell) cells(n - 6) else null
-      }
-      i += 1
-    }
-    current = InternalRow.fromSeq(row.toIndexedSeq)
-    true
+  override def frameValue(ord: Int): Any = ord match {
+    case 1 => time
+    case n => if (haveCell) cells(n - 6) else null
   }
 
-  override def get(): InternalRow = current
   override def close(): Unit = raf.close()
 }

@@ -3,14 +3,9 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 connector for the PDB text format — the third entry of
@@ -43,19 +38,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * `.pdb.gz` is read transparently (same [[XyzLines]] machinery as xyz
   * and gro).
   */
-class PdbDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "pdb"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    PdbTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("pdb", properties)
-    val mode = ParseMode.fromOptions("pdb", properties)
-    // Å → nm, the PDB distance_unit
-    new PdbTable(o.paths, o.chunks, o.unitScale(0.1), mode)
-  }
+class PdbDataSource extends FrameSource("pdb", PdbTable.Schema) {
+  // Å → nm, the PDB distance_unit
+  override protected def codec(o: ReadOptions,
+      props: util.Map[String, String]): FrameCodec =
+    new PdbCodec(o.unitScale(0.1), o.mode)
 }
 
 object PdbTable {
@@ -80,76 +67,29 @@ object PdbTable {
     StructField("box_gamma", FloatType, nullable = true)))
 }
 
-class PdbTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String = ParseMode.FailFast)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"pdb:${paths.mkString(",")}"
-  override def schema(): StructType = PdbTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new PdbScanBuilder(paths, chunks, unitScale, mode)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new PdbWriteBuilder(MultiPath.single("pdb", paths, "write"), info)
-}
+/** A pdb partition's seek state: the absolute line index of its first
+  * MODEL record (0 for the whole body of a MODEL-less file) and the
+  * file's CRYST1 box (null when absent). */
+final case class PdbAt(startLine: Long, box: Array[Float])
 
-class PdbScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String = ParseMode.FailFast)
-    extends FrameScanBuilder(PdbTable.Schema) {
-  override def build(): Scan =
-    new PdbScan(paths, chunks, unitScale, required, mode, frameLo, frameHi)
-}
+/** Index: one pass records the CRYST1 box and the line index of every
+  * MODEL record — PDB frames are delimited, not fixed-length, so the
+  * chunk plan carries explicit line offsets (the shape of the
+  * reference's load_chunks dict, core/dask_traj.py:103-140, with byte
+  * seeks replaced by line seeks). Frames may differ in atom count, so
+  * no limit budget applies. ATOM-less files contribute no frames. */
+final class PdbCodec(unitScale: Double, override val mode: String)
+    extends FrameCodec {
+  override def name: String = "pdb"
+  override def schema: StructType = PdbTable.Schema
+  override def extensions: Seq[String] = Seq(".pdb", ".pdb.gz")
+  override def perAtom: Set[String] =
+    Set("serial", "name", "res_name", "chain", "res_seq", "element")
 
-/** One partition = a run of whole models; startLine is the absolute
-  * line index of the partition's first MODEL record (0 for the whole
-  * body of a MODEL-less file), so the reader seeks by line skip exactly
-  * like the xyz/gro positioned reads. */
-case class PdbFrameRange(startFrame: Long, endFrame: Long, startLine: Long,
-    boxA: Float, boxB: Float, boxC: Float,
-    boxAlpha: Float, boxBeta: Float, boxGamma: Float, hasBox: Boolean,
-    // startFrame/endFrame are LOCAL to the file; filePath (when
-    // non-null) overrides the scan path (directory-of-shards mode) and
-    // frameOffset is the global frame id of the file's frame 0
-    filePath: String = null, frameOffset: Long = 0L)
-    extends InputPartition
-
-class PdbScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, mode: String = ParseMode.FailFast,
-    frameLo: Long = 0L, frameHi: Long = Long.MaxValue)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin (see PdbMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new PdbMicroBatchStream(
-      MultiPath.single("pdb", paths, "streaming read"),
-      chunks, unitScale, required, mode)
-
-  /** Frame count of one file (streaming offset bookkeeping). */
-  private[sources] def planFrameCount(p: String): Long = {
-    val (starts, _, sawAtom) = probe(p)
-    if (sawAtom) starts.length.toLong else 0L
-  }
-
-  /** Driver-side probe: one pass records the CRYST1 box and the line
-    * index of every MODEL record — PDB frames are delimited, not
-    * fixed-length, so the chunk plan carries explicit line offsets
-    * (the shape of the reference's load_chunks dict,
-    * core/dask_traj.py:103-140, with byte seeks replaced by line
-    * seeks). */
-  /** Per-file probe: CRYST1 box + the line index of every MODEL record
-    * + whether any ATOM exists. */
-  private def probe(p: String): (IndexedSeq[Long],
-      Option[(Float, Float, Float, Float, Float, Float)], Boolean) = {
-    val src = XyzLines.open(p)
+  override def index(path: String, frameHi: Long): FrameIndex = {
+    val src = XyzLines.open(path)
     try {
-      var box: Option[(Float, Float, Float, Float, Float, Float)] = None
+      var box: Array[Float] = null
       val modelLines = scala.collection.mutable.ArrayBuffer.empty[Long]
       var sawAtom = false
       var lineNo = 0L
@@ -157,19 +97,19 @@ class PdbScan(paths: Seq[String], chunks: Int, unitScale: Double,
       while (it.hasNext) {
         val line = it.next()
         if (line.startsWith("MODEL")) modelLines += lineNo
-        else if (line.startsWith("CRYST1") && box.isEmpty) {
+        else if (line.startsWith("CRYST1") && box == null) {
           def f(lo: Int, hi: Int, scale: Double): Float = {
             val tok = line.substring(math.min(lo, line.length),
               math.min(hi, line.length)).trim
             try (tok.toDouble * scale).toFloat catch {
               case _: NumberFormatException => throw new IllegalStateException(
-                s"pdb parse error in $p: non-numeric CRYST1 field " +
+                s"pdb parse error in $path: non-numeric CRYST1 field " +
                   s"'$tok' (line: '${line.take(120)}')")
             }
           }
-          box = Some((f(6, 15, unitScale), f(15, 24, unitScale),
+          box = Array(f(6, 15, unitScale), f(15, 24, unitScale),
             f(24, 33, unitScale), f(33, 40, 1.0), f(40, 47, 1.0),
-            f(47, 54, 1.0)))
+            f(47, 54, 1.0))
         } else if (line.startsWith("ATOM") || line.startsWith("HETATM")) {
           sawAtom = true
         }
@@ -178,111 +118,41 @@ class PdbScan(paths: Seq[String], chunks: Int, unitScale: Double,
       // a MODEL-less file is one frame starting at line 0
       val starts: IndexedSeq[Long] =
         if (modelLines.isEmpty) IndexedSeq(0L) else modelLines.toIndexedSeq
-      (starts, box, sawAtom)
+      new FrameIndex(if (sawAtom) starts.length else 0L, -1) {
+        override def at(start: Long, end: Long): Any =
+          PdbAt(starts(start.toInt), box)
+      }
     } finally src.close()
   }
 
-  private def planFile(p: String, starts: IndexedSeq[Long],
-      box: Option[(Float, Float, Float, Float, Float, Float)],
-      off: Long): Seq[InputPartition] = {
-    val (ba, bb, bc, bal, bbe, bga) =
-      box.getOrElse((0f, 0f, 0f, 0f, 0f, 0f))
-    val lo0 = math.max(off, frameLo) - off
-    val hi0 = math.min(off + starts.length, frameHi) - off
-    if (lo0 >= hi0) return Nil
-    val (lo, hi) = (lo0.toInt, hi0.toInt)
-    (lo until hi by chunks).map { s =>
-      PdbFrameRange(s.toLong, math.min(s + chunks, hi).toLong,
-        starts(s), ba, bb, bc, bal, bbe, bga, box.isDefined, p, off)
-        : InputPartition
-    }
-  }
+  override def open(part: FramePartition, need: Set[String],
+      atomHi: Int): FrameReader =
+    new PdbFrameReader(unitScale, mode, part, need)
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs -> one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath);
-    // ATOM-less files contribute no frames
-    val files = MultiPath.expandAll("pdb", paths, Seq(".pdb", ".pdb.gz"))
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    files.foreach { p =>
-      if (off < frameHi) {
-        val (starts, box, sawAtom) = probe(p)
-        if (sawAtom) {
-          out ++= planFile(p, starts, box, off)
-          off += starts.length
-        }
-      }
-    }
-    out.toArray
-  }
-
-  override def supportedCustomMetrics()
-      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    ParseMode.scanMetrics
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PdbReaderFactory(paths.head, unitScale, required, mode)
-}
-
-class PdbReaderFactory(path: String, unitScale: Double,
-    required: StructType, mode: String = ParseMode.FailFast)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new PdbPartitionReader(path, unitScale, required,
-      partition.asInstanceOf[PdbFrameRange], mode)
+  override def writes: Boolean = true
+  override def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
+    new PdbWriteBuilder(path, info)
 }
 
 /** Positioned chunk read: skip to the partition's first MODEL line,
-  * then stream ATOM/HETATM records, closing frames at ENDMDL (or EOF
-  * for MODEL-less files). */
-class PdbPartitionReader(path: String, unitScale: Double,
-    required: StructType, range: PdbFrameRange,
-    mode: String = ParseMode.FailFast)
-    extends PartitionReader[InternalRow] {
+  * then collect ATOM/HETATM records per frame, closing frames at ENDMDL
+  * (or EOF for MODEL-less files). Coordinates parse only when read and
+  * the element only when read (deriving it can fail) — except under
+  * DROPMALFORMED, which validates the coordinates of every record. */
+private final class PdbFrameReader(unitScale: Double, mode: String,
+    part: FramePartition, need: Set[String])
+    extends TextFrameReader("pdb", mode, part,
+      part.at.asInstanceOf[PdbAt].startLine) {
 
-  private val dropMalformed = mode == ParseMode.DropMalformed
-  private val coerceWarn = mode == ParseMode.CoerceWarn
-  private var dropped = 0L
-  private var coerced = 0L
-
-  // directory-of-shards partitions carry their own file path
-  private val file = if (range.filePath != null) range.filePath else path
-  private val src = XyzLines.open(file)
-  private val lines = src.getLines()
-  (0L until range.startLine).foreach { _ =>
-    if (lines.hasNext) lines.next()
-  }
-
-  private var frame = range.startFrame
-  private var framesDone = false
-  private var atomInFrame = 0
-  private var current: InternalRow = _
-
-  private val ordinals: Array[Int] = {
-    val canon = PdbTable.Schema.fieldNames.zipWithIndex.toMap
-    required.fieldNames.map(canon)
-  }
-
-  private def parseFail(what: String, content: String): Nothing =
-    throw new IllegalStateException(
-      s"pdb parse error in $file at frame ${frame + range.frameOffset}: " +
-        s"$what (line: '${content.take(120)}')")
+  private val axes = Array(need("x"), need("y"), need("z"))
+    .map(_ || dropMalformed)
+  private val at = part.at.asInstanceOf[PdbAt]
+  private var records = new Array[String](16)
+  private var elems = new Array[String](16)
+  private var done = false
 
   private def slice(line: String, lo: Int, hi: Int): String =
     line.substring(math.min(lo, line.length), math.min(hi, line.length))
-
-  private def numOrFail(tok: String, what: String, line: String): Double =
-    try tok.trim.toDouble catch {
-      case _: NumberFormatException =>
-        // COERCEWARN: accept a convertible-but-mistyped token with a
-        // counted warning (ensure_type's warn-and-cast half)
-        if (coerceWarn) ParseMode.coerce(tok) match {
-          case Some(v) => coerced += 1; v
-          case None => parseFail(s"non-numeric $what '${tok.trim}'", line)
-        } else parseFail(s"non-numeric $what '${tok.trim}'", line)
-    }
 
   private def intOr(tok: String, fallback: Int): Int =
     try tok.trim.toInt catch { case _: NumberFormatException => fallback }
@@ -290,85 +160,73 @@ class PdbPartitionReader(path: String, unitScale: Double,
   /** Element symbol: columns 77-78 when present, else derived from the
     * first alphabetic character of the atom name (the PDB convention
     * for files written without the element field). */
-  private def element(line: String, name: String): String = {
+  private def element(line: String): String = {
     val e = slice(line, 76, 78).trim
+    val name = slice(line, 12, 16).trim
     if (e.nonEmpty) e
     else name.find(_.isLetter).map(_.toString.toUpperCase)
-      .getOrElse(parseFail(s"cannot derive element from name '$name'", line))
+      .getOrElse(fail(s"cannot derive element from name '$name'", line))
+  }
+
+  private def atom(a: Int, line: String): Unit = {
+    if (a == records.length) {
+      records = java.util.Arrays.copyOf(records, 2 * a)
+      elems = java.util.Arrays.copyOf(elems, 2 * a)
+      if (ok != null) ok = java.util.Arrays.copyOf(ok, 2 * a)
+    }
+    records(a) = line
+    val xs = coords(3 * (a + 1))
+    try {
+      if (line.length < 54)
+        fail(s"atom record too short (${line.length} chars, need 54)", line)
+      var k = 0
+      while (k < 3) {
+        if (axes(k)) xs(3 * a + k) = (num(slice(line, 30 + 8 * k, 38 + 8 * k),
+          "xyz".substring(k, k + 1), line) * unitScale).toFloat
+        k += 1
+      }
+      if (need("element")) elems(a) = element(line)
+      if (ok != null) ok(a) = true
+    } catch {
+      // ensure_type warn-don't-fail analog: drop the record, keep the
+      // ordinal arithmetic stable
+      case _: IllegalStateException if dropMalformed =>
+        ok(a) = false
+        dropped += 1
+    }
   }
 
   override def next(): Boolean = {
-    if (framesDone) return false
-    while (lines.hasNext) {
+    if (done || frame + 1 >= part.endFrame) return false
+    frame += 1
+    if (dropMalformed && ok == null) ok = new Array[Boolean](records.length)
+    var a = 0
+    var closed = false
+    while (!closed && lines.hasNext) {
       val line = lines.next()
       if (line.startsWith("ATOM") || line.startsWith("HETATM")) {
-        try {
-          if (line.length < 54)
-            parseFail(s"atom record too short (${line.length} chars, need 54)",
-              line)
-          if (dropMalformed) {
-            // drop decisions must not depend on column pruning (see
-            // XyzPartitionReader): validate coords even when pruned
-            numOrFail(slice(line, 30, 38), "x", line)
-            numOrFail(slice(line, 38, 46), "y", line)
-            numOrFail(slice(line, 46, 54), "z", line)
-          }
-          val name = slice(line, 12, 16).trim
-          val row = new Array[Any](ordinals.length)
-          var i = 0
-          while (i < ordinals.length) {
-            row(i) = ordinals(i) match {
-              case 0 => frame + range.frameOffset
-              case 1 => atomInFrame
-              case 2 => intOr(slice(line, 6, 11), atomInFrame + 1)
-              case 3 => UTF8String.fromString(name)
-              case 4 => UTF8String.fromString(slice(line, 17, 20).trim)
-              case 5 => UTF8String.fromString(slice(line, 21, 22).trim)
-              case 6 => intOr(slice(line, 22, 26), 0)
-              case 7 => UTF8String.fromString(element(line, name))
-              case 8 => (numOrFail(slice(line, 30, 38), "x", line) * unitScale).toFloat
-              case 9 => (numOrFail(slice(line, 38, 46), "y", line) * unitScale).toFloat
-              case 10 => (numOrFail(slice(line, 46, 54), "z", line) * unitScale).toFloat
-              case 11 => if (range.hasBox) range.boxA else null
-              case 12 => if (range.hasBox) range.boxB else null
-              case 13 => if (range.hasBox) range.boxC else null
-              case 14 => if (range.hasBox) range.boxAlpha else null
-              case 15 => if (range.hasBox) range.boxBeta else null
-              case n => if (range.hasBox) range.boxGamma else null
-            }
-            i += 1
-          }
-          current = InternalRow.fromSeq(row.toIndexedSeq)
-          atomInFrame += 1
-          return true
-        } catch {
-          // ensure_type warn-don't-fail analog: drop the record, keep
-          // the ordinal arithmetic stable
-          case _: IllegalStateException if dropMalformed =>
-            dropped += 1
-            atomInFrame += 1
-        }
-      } else if (line.startsWith("ENDMDL")) {
-        frame += 1
-        atomInFrame = 0
-        if (frame >= range.endFrame) { framesDone = true; return false }
-      }
+        atom(a, line); a += 1
+      } else if (line.startsWith("ENDMDL")) closed = true
       // anything else: REMARK/TER/CONECT/CRYST1/MODEL/… — skip
     }
-    framesDone = true
-    false
+    if (!closed) done = true
+    nAtoms = a
+    closed || a > 0
   }
 
-  override def get(): InternalRow = current
+  override def frameValue(ord: Int): Any =
+    if (at.box == null) null else at.box(ord - 11)
 
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    ParseMode.taskMetrics(dropped, coerced)
-
-  override def close(): Unit = {
-    ParseMode.warnDropped("pdb", file, dropped)
-    ParseMode.warnCoerced("pdb", file, coerced)
-    src.close()
+  override def atomValue(ord: Int, a: Int): Any = {
+    val line = records(a)
+    ord match {
+      case 2 => intOr(slice(line, 6, 11), a + 1)
+      case 3 => UTF8String.fromString(slice(line, 12, 16).trim)
+      case 4 => UTF8String.fromString(slice(line, 17, 20).trim)
+      case 5 => UTF8String.fromString(slice(line, 21, 22).trim)
+      case 6 => intOr(slice(line, 22, 26), 0)
+      case _ => UTF8String.fromString(elems(a))
+    }
   }
 }
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
   * `part-NNNNN.pdb` file per task). Emits PDB v3.3 fixed-column records:
   * one CRYST1 header per shard (from the first row's box columns, when
   * present), then MODEL / ATOM… / ENDMDL per frame — exactly the record
-  * set [[PdbPartitionReader]] consumes, so read → write → read is the
+  * set [[PdbFrameReader]] consumes, so read → write → read is the
   * identity on the scan schema. Coordinates and box lengths are stored
   * in Å (divided by `unit_scale`, default 0.1) so a default-option read
   * recovers the written nm values — the write-side inverse of the

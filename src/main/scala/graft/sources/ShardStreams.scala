@@ -1,24 +1,21 @@
 package graft.sources
 
-import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
+import org.apache.spark.sql.types.StructType
 
-/** Session-conf plumbing shared by the shard-directory streams
-  * (public: the conf key is user-facing surface, and the bench/spec
-  * reference it by name). */
+/** Session-conf plumbing of the shard-directory stream (public: the conf
+  * key is user-facing surface, and the bench/spec reference it by
+  * name). */
 object ShardStreams {
   val MaxShardsKey = "spark.graft.stream.maxShardsPerTrigger"
 
-  /** Backlog admission knob (VERDICT r15 next #4): the number of new
-    * shards (framesets for dtr) one micro-batch may admit; 0 =
-    * unbounded (the r15 behavior). Without it, a restart against a
-    * large backlog — the 100 TB shard directories will not arrive
-    * empty — plans ONE batch over every outstanding shard: no
-    * checkpoint progress until the whole backlog commits, and a
-    * mid-drain failure re-reads all of it. Read from the session conf
-    * at stream construction (the options map is not threaded through
-    * the 14 format scans; a session-wide knob is how a deployment
-    * would set it anyway), validated fail-fast. */
+  /** Backlog admission knob: the number of new shards (framesets for
+    * dtr) one micro-batch may admit; 0 = unbounded. Without it, a
+    * restart against a large backlog plans ONE batch over every
+    * outstanding shard: no checkpoint progress until the whole backlog
+    * commits, and a mid-drain failure re-reads all of it. Read from the
+    * session conf at stream construction, validated fail-fast. */
   def maxShardsPerTrigger(): Int = {
     val v = org.apache.spark.sql.SparkSession.active.conf
       .get(MaxShardsKey, "0")
@@ -31,13 +28,12 @@ object ShardStreams {
     n
   }
 
-  /** The admission arithmetic shared by both offset shapes. Honors
-    * the ENGINE-passed limit only (ADVICE r16): the configured knob
-    * already reaches the engine via `getDefaultReadLimit`, and the
-    * engine deliberately overrides it — `Trigger.Once` passes
-    * `ReadLimit.allAvailable()` to mean "one batch containing
-    * everything". Capping that batch at the configured size would
-    * make a Trigger.Once run terminate "successfully" with most of
+  /** The admission arithmetic. Honors the ENGINE-passed limit only: the
+    * configured knob already reaches the engine via
+    * `getDefaultReadLimit`, and the engine deliberately overrides it —
+    * `Trigger.Once` passes `ReadLimit.allAvailable()` to mean "one batch
+    * containing everything". Capping that batch at the configured size
+    * would make a Trigger.Once run terminate "successfully" with most of
     * the backlog silently unread. */
   def admit(start: Int, total: Int, limit: ReadLimit): Int =
     limit match {
@@ -46,20 +42,27 @@ object ShardStreams {
     }
 }
 
-/** Shared skeleton for the micro-batch shard-directory streams
-  * (SURVEY §2.8): offsets are file counts over the name-sorted listing
-  * of a directory of immutable shard files; each micro-batch plans the
-  * new shards with the format's own batch planner, re-based so global
-  * frame ids continue across shards and micro-batches. Per-shard frame
-  * counts are cached per path (files are immutable), so consumed
-  * shards are never re-probed. Formats supply the extension filter,
-  * the frame-count probe, and the per-shard partition planner. */
+/** Offsets are shard counts over the name-sorted listing. */
 case class ShardFileOffset(fileCount: Int) extends Offset {
   override def json(): String = fileCount.toString
 }
 
-private[sources] abstract class ShardDirMicroBatchStream(
-    dir: String, exts: Seq[String])
+/** The one micro-batch stream of every frame source (SURVEY §2.8): a
+  * directory that immutable shards appear in — files with the codec's
+  * extensions, or for dtr frameset directories whose `timekeys` exists
+  * ([[FrameCodec.isShard]]). Offsets are shard counts over the
+  * name-sorted listing, so shards must arrive in ascending name order
+  * (true for the write paths' zero-padded `part-NNNNN` names). Each
+  * micro-batch plans its new shards with the codec's batch planner,
+  * re-based so global frame ids continue across shards and
+  * micro-batches; the `top=` check covers every shard a batch admits.
+  * Per-shard frame counts are cached per path (shards are immutable):
+  * freshly planned shards record the count their plan indexed, and only
+  * the predecessors of a recovered offset are probed again.
+  *
+  * Usage: `spark.readStream.format(fmt).load(dir)`. */
+private[sources] final class ShardStream(codec: FrameCodec, dir: String,
+    chunks: Int, schema: StructType)
     extends MicroBatchStream with SupportsAdmissionControl {
 
   /** Captured at construction (driver-side, active session present). */
@@ -77,33 +80,14 @@ private[sources] abstract class ShardDirMicroBatchStream(
   override def reportLatestOffset(): Offset =
     ShardFileOffset(listShards().length)
 
-  /** Frames in one shard (driver-side probe; cached). Only consulted
-    * for PREDECESSOR shards whose count is not yet cached — i.e. after
-    * an offset-recovery restart; freshly planned shards derive their
-    * count from the partitions the scan just planned (one probe per
-    * new shard, not two). */
-  protected def probeFrames(path: String): Long
-
-  /** Batch partitions for one shard whose frame 0 has global id
-    * `base`. */
-  protected def planShard(path: String, base: Long): Array[InputPartition]
-
-  /** Shard-LOCAL end frame of one planned partition (streams plan the
-    * full shard — no pushdown — so the max over partitions IS the
-    * shard's frame count). */
-  protected def partitionLocalEnd(p: InputPartition): Long
-
-  private def listShards(): Seq[String] = {
+  private def listShards(): Seq[String] =
     if (!FsIO.isDirectory(dir)) Nil
-    else FsIO.list(dir)
-      .filter(e => e.isFile && exts.exists(e.name.endsWith))
-      .map(_.path)
-  }
+    else FsIO.list(dir).filter(codec.isShard).map(_.path)
 
   private val frameCache =
     scala.collection.mutable.HashMap.empty[String, Long]
   private def frames(p: String): Long =
-    frameCache.getOrElseUpdate(p, probeFrames(p))
+    frameCache.getOrElseUpdate(p, codec.index(p, Long.MaxValue).frames)
 
   override def initialOffset(): Offset = ShardFileOffset(0)
   override def latestOffset(): Offset =
@@ -116,158 +100,19 @@ private[sources] abstract class ShardDirMicroBatchStream(
     val s = start.asInstanceOf[ShardFileOffset].fileCount
     val e = end.asInstanceOf[ShardFileOffset].fileCount
     val shards = listShards()
-    var base = (0 until math.min(s, shards.length))
+    val base = (0 until math.min(s, shards.length))
       .map(i => frames(shards(i))).sum
-    (s until math.min(e, shards.length)).flatMap { i =>
-      val p = shards(i)
-      val parts = planShard(p, base)
-      val n = if (parts.isEmpty) 0L else parts.map(partitionLocalEnd).max
-      frameCache.put(p, n)
-      base += n
-      parts
-    }.toArray
+    val batch = shards.slice(s, math.min(e, shards.length))
+    codec.checkTop(batch)
+    val (parts, counts) =
+      codec.plan(batch, base, 0L, Long.MaxValue, Long.MaxValue, chunks)
+    batch.zip(counts).foreach { case (p, n) => frameCache.put(p, n) }
+    parts.toArray
   }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    new FrameReaderFactory(codec, schema, 0, Int.MaxValue, None)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-/** pdb: delimited MODEL/ENDMDL frames — the probe is the batch scan's
-  * per-file pass (line offsets of every MODEL record). */
-class PdbMicroBatchStream(dir: String, chunks: Int, unitScale: Double,
-    schema: org.apache.spark.sql.types.StructType, mode: String)
-    extends ShardDirMicroBatchStream(dir, Seq(".pdb", ".pdb.gz")) {
-
-  private def scanFor(path: String) =
-    new PdbScan(Seq(path), chunks, unitScale, schema, mode)
-
-  override protected def probeFrames(path: String): Long =
-    scanFor(path).planFrameCount(path)
-
-  override protected def planShard(path: String, base: Long)
-      : Array[InputPartition] =
-    scanFor(path).planInputPartitions().map { p =>
-      val r = p.asInstanceOf[PdbFrameRange]
-      r.copy(frameOffset = base + r.frameOffset): InputPartition
-    }
-
-  override protected def partitionLocalEnd(p: InputPartition): Long =
-    p.asInstanceOf[PdbFrameRange].endFrame
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new PdbReaderFactory(dir, unitScale, schema, mode)
-}
-
-/** lammpstrj: self-describing dump — probe reads the first-frame
-  * header and line-counts. */
-class LammpstrjMicroBatchStream(dir: String, chunks: Int,
-    unitScale: Double, schema: org.apache.spark.sql.types.StructType,
-    mode: String)
-    extends ShardDirMicroBatchStream(dir,
-      Seq(".lammpstrj", ".lammpstrj.gz")) {
-
-  private def scanFor(path: String) =
-    new LammpstrjScan(Seq(path), chunks, unitScale, schema, 0L,
-      Long.MaxValue, -1, mode)
-
-  override protected def probeFrames(path: String): Long =
-    scanFor(path).planFrameCount(path)
-
-  override protected def planShard(path: String, base: Long)
-      : Array[InputPartition] =
-    scanFor(path).planInputPartitions().map { p =>
-      val r = p.asInstanceOf[LammpstrjFrameRange]
-      r.copy(frameOffset = base + r.frameOffset): InputPartition
-    }
-
-  override protected def partitionLocalEnd(p: InputPartition): Long =
-    p.asInstanceOf[LammpstrjFrameRange].endFrame
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new LammpstrjReaderFactory(dir, unitScale, schema, mode)
-}
-
-/** arc: Tinker archive — probe is the batch header+line-count pass. */
-class ArcMicroBatchStream(dir: String, chunks: Int, unitScale: Double,
-    schema: org.apache.spark.sql.types.StructType, mode: String)
-    extends ShardDirMicroBatchStream(dir, Seq(".arc", ".arc.gz")) {
-
-  private def scanFor(path: String) =
-    new ArcScan(Seq(path), chunks, unitScale, schema, 0L,
-      Long.MaxValue, -1, mode)
-
-  override protected def probeFrames(path: String): Long =
-    scanFor(path).planFrameCount(path)
-
-  override protected def planShard(path: String, base: Long)
-      : Array[InputPartition] =
-    scanFor(path).planInputPartitions().map { p =>
-      val r = p.asInstanceOf[ArcFrameRange]
-      r.copy(frameOffset = base + r.frameOffset): InputPartition
-    }
-
-  override protected def partitionLocalEnd(p: InputPartition): Long =
-    p.asInstanceOf[ArcFrameRange].endFrame
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new ArcReaderFactory(unitScale, schema, mode)
-}
-
-/** mdcrd: AMBER fixed-width text — the natoms/box shape options ride
-  * the stream exactly as they ride the batch scan. */
-class MdcrdMicroBatchStream(dir: String, natoms: Int, box: Boolean,
-    chunks: Int, unitScale: Double,
-    schema: org.apache.spark.sql.types.StructType, mode: String)
-    extends ShardDirMicroBatchStream(dir,
-      Seq(".crd", ".mdcrd", ".crd.gz", ".mdcrd.gz")) {
-
-  private def scanFor(path: String) =
-    new MdcrdScan(Seq(path), natoms, box, chunks, unitScale, schema,
-      0L, Long.MaxValue, -1, mode)
-
-  override protected def probeFrames(path: String): Long =
-    scanFor(path).planFrameCount(path)
-
-  override protected def planShard(path: String, base: Long)
-      : Array[InputPartition] =
-    scanFor(path).planInputPartitions().map { p =>
-      val r = p.asInstanceOf[MdcrdFrameRange]
-      r.copy(frameOffset = base + r.frameOffset): InputPartition
-    }
-
-  override protected def partitionLocalEnd(p: InputPartition): Long =
-    p.asInstanceOf[MdcrdFrameRange].endFrame
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new MdcrdReaderFactory(dir, natoms, box, unitScale, schema, mode)
-}
-
-/** binpos: fixed-stride binary — the probe is a header read + length
-  * arithmetic. */
-class BinposMicroBatchStream(dir: String, chunks: Int,
-    unitScale: Double, schema: org.apache.spark.sql.types.StructType)
-    extends ShardDirMicroBatchStream(dir, Seq(".binpos")) {
-
-  override protected def probeFrames(path: String): Long =
-    BinposTable.probe(path)._2
-
-  override protected def planShard(path: String, base: Long)
-      : Array[InputPartition] =
-    new BinposScan(Seq(path), chunks, unitScale, schema, 0L,
-      Long.MaxValue, -1)
-      .planInputPartitions().map { p =>
-        val r = p.asInstanceOf[BinposFrameRange]
-        r.copy(frameOffset = base + r.frameOffset): InputPartition
-      }
-
-  override protected def partitionLocalEnd(p: InputPartition): Long =
-    p.asInstanceOf[BinposFrameRange].endFrame
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new BinposReaderFactory(unitScale, schema)
 }

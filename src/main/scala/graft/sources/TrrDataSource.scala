@@ -1,16 +1,9 @@
 package graft.sources
 
-
 import java.nio.ByteBuffer
 import java.util
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** One parsed TRR frame header: the 13 XDR size/count ints plus the
   * derived real width and byte extents. `headerBytes` + `payloadBytes`
@@ -198,19 +191,11 @@ private[sources] object TrrFormat {
   *
   * Usage: `spark.read.format("trr").option("chunks", 100).load(path)`.
   */
-class TrrDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "trr"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TrrTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("trr", properties)
-    val mode = ParseMode.fromOptions("trr", properties)
-    // file is already nm (GROMACS native units)
-    new TrrTable(o.paths, o.chunks, o.unitScale(1.0), mode)
-  }
+class TrrDataSource extends FrameSource("trr", TrrTable.Schema) {
+  // file is already nm (GROMACS native units)
+  override protected def codec(o: ReadOptions,
+      props: util.Map[String, String]): FrameCodec =
+    new TrrCodec(o.unitScale(1.0), o.mode)
 }
 
 object TrrTable {
@@ -243,111 +228,31 @@ object TrrTable {
     StructField("bv3z", FloatType, nullable = true)))
 }
 
-class TrrTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String)
-    extends Table with SupportsRead {
-  override def name(): String = s"trr:${paths.mkString(",")}"
-  override def schema(): StructType = TrrTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new TrrScanBuilder(paths, chunks, unitScale, mode)
-}
+/** Index: [[TrrFormat.indexCached]]; a partition seeks to its first
+  * frame's byte offset, and frames without a coordinate block count no
+  * rows. */
+final class TrrCodec(unitScale: Double, override val mode: String)
+    extends FrameCodec {
+  override def name: String = "trr"
+  override def schema: StructType = TrrTable.Schema
+  override def extensions: Seq[String] = Seq(".trr")
+  override def perAtom: Set[String] = Set("vx", "vy", "vz", "fx", "fy", "fz")
 
-class TrrScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String)
-    extends FrameScanBuilder(TrrTable.Schema) {
-  override def build(): Scan =
-    new TrrScan(paths, chunks, unitScale, required, frameLo, frameHi, limit,
-      mode)
-}
-
-/** startFrame/endFrame are LOCAL to `filePath`; `startByte` is the
-  * exact offset of startFrame's header (from the driver index) and
-  * `frameOffset` the global frame id of the file's frame 0. */
-case class TrrFrameRange(startFrame: Long, endFrame: Long, startByte: Long,
-    filePath: String, frameOffset: Long) extends InputPartition
-
-class TrrScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    mode: String)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin: the (single) path is a directory that `*.trr`
-    * shard files appear in (see TrrMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new TrrMicroBatchStream(
-      MultiPath.single("trr", paths, "streaming read"),
-      chunks, unitScale, required, mode)
-
-  /** Plans one file from its frame index: clamp to the pushed frame
-    * range, honor a pushed limit via the index's cumulative row counts,
-    * and cut `chunks`-frame partitions each carrying its own byte
-    * offset. Returns the planned partitions and the rows they cover. */
-  private def planFile(p: String,
-      idx: IndexedSeq[(Long, Long, TrrFrameHeader)], off: Long,
-      rowBudget: Long): (Seq[InputPartition], Long) = {
-    val lo = math.max(off, frameLo) - off
-    var hi = math.min(off + idx.length, frameHi) - off
-    if (lo >= hi) return (Nil, 0L)
-    if (rowBudget != Long.MaxValue) {
-      val base = idx(lo.toInt)._2
-      var h = lo
-      while (h < hi && idx(h.toInt)._2 - base < rowBudget) h += 1
-      hi = h
+  override def index(path: String, frameHi: Long): FrameIndex = {
+    val idx = TrrFormat.indexCached(path, mode, frameHi)
+    new FrameIndex(idx.length, -1) {
+      override def rowsBefore(f: Long): Long =
+        if (f < idx.length) idx(f.toInt)._2
+        else idx.lastOption.fold(0L)(l =>
+          l._2 + (if (l._3.xSize > 0) l._3.nAtoms else 0))
+      override def at(start: Long, end: Long): Any = idx(start.toInt)._1
     }
-    if (lo >= hi) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      TrrFrameRange(start, math.min(start + chunks, hi),
-        idx(start.toInt)._1, p, off): InputPartition
-    }
-    val rows = idx(hi.toInt - 1)._2 - idx(lo.toInt)._2 +
-      (if (idx(hi.toInt - 1)._3.xSize > 0) idx(hi.toInt - 1)._3.nAtoms
-       else 0)
-    (parts, rows)
   }
 
-  /** One driver-side index walk per file plans every partition; a
-    * directory plans its `*.trr` shards in name order with globally
-    * contiguous frame ids (see XyzScan). Pushed frame/limit bounds
-    * stop the walk early — the last shard the bound reaches is the
-    * last one indexed. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs -> one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath)
-    val files = MultiPath.expandAll("trr", paths, Seq(".trr"))
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val idx = TrrFormat.indexCached(p, mode,
-          if (frameHi == Long.MaxValue) Long.MaxValue else frameHi - off)
-        val (parts, rows) = planFile(p, idx, off, budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += idx.length
-      }
-    }
-    out.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TrrReaderFactory(unitScale, required, mode)
-}
-
-class TrrReaderFactory(unitScale: Double, required: StructType,
-    mode: String)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new TrrPartitionReader(unitScale, required,
-      partition.asInstanceOf[TrrFrameRange], mode)
+  override def open(part: FramePartition, need: Set[String],
+      atomHi: Int): FrameReader =
+    new TrrFrameReader(unitScale, mode, part,
+      need.exists(Set("vx", "vy", "vz")), need.exists(Set("fx", "fy", "fz")))
 }
 
 /** Positioned read of a variable-record range: one seek to the
@@ -356,45 +261,28 @@ class TrrReaderFactory(unitScale: Double, required: StructType,
   * re-walk of preceding frames ever happens (S3,
   * core/dask_traj.py:329-361). Unreferenced payload blocks (virial,
   * pressure — and velocity/force when those columns are pruned) are
-  * skipped, not read. */
-class TrrPartitionReader(unitScale: Double, required: StructType,
-    range: TrrFrameRange, mode: String)
-    extends PartitionReader[InternalRow] {
+  * skipped, not read; frames without a coordinate block yield no rows. */
+private final class TrrFrameReader(unitScale: Double, mode: String,
+    part: FramePartition, needV: Boolean, needF: Boolean)
+    extends FrameReader("trr", mode, part) {
 
-  private val raf = FsIO.openRandom(range.filePath)
-  raf.seek(range.startByte)
-
-  private val needV = required.fieldNames.exists(Set("vx", "vy", "vz"))
-  private val needF = required.fieldNames.exists(Set("fx", "fy", "fz"))
+  private val raf = FsIO.openRandom(part.path)
+  raf.seek(part.at.asInstanceOf[Long])
 
   private var hdr: TrrFrameHeader = _
-  private var xs: Array[Float] = Array.empty
   private var vs: Array[Float] = Array.empty
   private var fs: Array[Float] = Array.empty
   private val box = new Array[Float](9)
   private var haveBox = false
   private var haveV = false
   private var haveF = false
+  private var skipped = 0L
 
-  private var frame = range.startFrame - 1 // advanced by loadFrame
-  private var emit = 0
-  private var nAtoms = 0
-  private var current: InternalRow = _
-  private var dropped = 0L
-
-  private val ordinals: Array[Int] = {
-    val canon = TrrTable.Schema.fieldNames.zipWithIndex.toMap
-    required.fieldNames.map(canon)
-  }
-
-  /** Reads one frame's referenced blocks into the buffers; false at
-    * range end. Frames without a coordinate block yield no rows but
-    * still advance the cursor. */
-  private def loadFrame(): Boolean = {
-    while (frame + 1 < range.endFrame) {
+  override def next(): Boolean = {
+    while (frame + 1 < part.endFrame) {
       frame += 1
-      val h = TrrFormat.readHeader(raf, range.filePath,
-        frame + range.frameOffset).getOrElse(return false)
+      val h = TrrFormat.readHeader(raf, part.path,
+        frame + part.frameOffset).getOrElse(return false)
       hdr = h
       // absolute offsets of each payload block: box, vir, pres, x, v, f
       val payloadStart = raf.getFilePointer
@@ -406,7 +294,7 @@ class TrrPartitionReader(unitScale: Double, required: StructType,
         val buf = new Array[Byte](size)
         raf.readFully(buf)
         val bb = ByteBuffer.wrap(buf)
-        val out = if (dst.length == n) dst else new Array[Float](n)
+        val out = if (dst.length >= n) dst else new Array[Float](n)
         var i = 0
         if (h.realSize == 8) while (i < n) {
           out(i) = (bb.getDouble * scale).toFloat; i += 1
@@ -420,7 +308,7 @@ class TrrPartitionReader(unitScale: Double, required: StructType,
       } else haveBox = false
       if (h.xSize > 0) {
         nAtoms = h.nAtoms
-        xs = block(xOff, h.xSize, 3 * nAtoms, xs, unitScale)
+        xyz = block(xOff, h.xSize, 3 * nAtoms, xyz, unitScale)
         haveV = h.vSize > 0 && needV
         if (haveV) vs = block(xOff + h.xSize, h.vSize, 3 * nAtoms, vs, 1.0)
         haveF = h.fSize > 0 && needF
@@ -428,52 +316,32 @@ class TrrPartitionReader(unitScale: Double, required: StructType,
           fs = block(xOff + h.xSize + h.vSize, h.fSize, 3 * nAtoms, fs, 1.0)
         // land exactly at the next frame regardless of what was read
         raf.seek(frameEnd)
-        emit = 0
         return true
       } else {
         // no coordinates (energy-only frame): skip payload, no rows
         raf.seek(frameEnd)
-        dropped += 1
+        skipped += 1
       }
     }
     false
   }
 
-  override def next(): Boolean = {
-    if (current == null || emit >= nAtoms) {
-      if (!loadFrame()) return false
-    }
-    val a = emit
-    emit += 1
-    val row = new Array[Any](ordinals.length)
-    var i = 0
-    while (i < ordinals.length) {
-      row(i) = ordinals(i) match {
-        case 0 => frame + range.frameOffset
-        case 1 => hdr.time
-        case 2 => hdr.step
-        case 3 => hdr.lambda.toFloat
-        case 4 => a // 0-based file-order ordinal — the topology join key
-        // contract every trajectory source shares (TrajLoad.topology)
-        case 5 => xs(3 * a)
-        case 6 => xs(3 * a + 1)
-        case 7 => xs(3 * a + 2)
-        case n if n <= 10 => if (haveV) vs(3 * a + (n - 8)) else null
-        case n if n <= 13 => if (haveF) fs(3 * a + (n - 11)) else null
-        case n => if (haveBox) box(n - 14) else null
-      }
-      i += 1
-    }
-    current = InternalRow.fromSeq(row.toIndexedSeq)
-    true
+  override def frameValue(ord: Int): Any = ord match {
+    case 1 => hdr.time
+    case 2 => hdr.step
+    case 3 => hdr.lambda.toFloat
+    case n => if (haveBox) box(n - 14) else null
   }
 
-  override def get(): InternalRow = current
+  override def atomValue(ord: Int, a: Int): Any =
+    if (ord <= 10) { if (haveV) vs(3 * a + (ord - 8)) else null }
+    else if (haveF) fs(3 * a + (ord - 11)) else null
+
   override def close(): Unit = {
-    if (dropped > 0)
+    if (skipped > 0)
       org.slf4j.LoggerFactory.getLogger("graft.sources.trr").info(
-        s"trr reader skipped $dropped coordinate-less frame(s) in " +
-          range.filePath)
+        s"trr reader skipped $skipped coordinate-less frame(s) in " +
+          part.path)
     raf.close()
   }
 }

@@ -3,14 +3,7 @@ package graft.sources
 import java.nio.ByteBuffer
 import java.util
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, DataSourceRegister}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** One parsed XTC frame: header fields plus the byte extents needed to
   * seek to the next frame without decoding the payload. For compressed
@@ -577,31 +570,17 @@ object XtcFormat {
   * contract of the header-only scan, which skips the decode when x/y/z
   * are pruned. Spark re-checks every pushed filter after the scan.
   *
-  * Frame-wide scan: [[XtcScan]] is a [[FrameGatherScan]] (partitions
-  * are frame ranges, atoms come out in file order). The [[FrameGather]]
-  * rewrite plans `groupBy(frame_id).agg(sort_array(collect_list(
-  * struct(atom_id, x, y, z))))` over it as [[XtcScan.gathered]]: one
-  * `(frame_id, a)` row per frame, built from the decode buffer, with no
-  * atom rows, shuffle or sort in between (`explain` shows `XtcScan
+  * The shell's gathered reader builds each frame's `(frame_id, a)` row
+  * straight from the decode buffer (`explain` shows `XtcScan
   * gathered(atom_id, …)`).
   *
   * Usage: `spark.read.format("xtc").option("chunks", 100).load(path)`.
   */
-class XtcDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "xtc"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    XtcTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val o = new ReadOptions("xtc", properties)
-    val mode = ParseMode.fromOptions("xtc", properties)
-    val expectAtoms = Option(properties.get("top"))
-      .map(PdbTopology.atomCount).getOrElse(-1)
-    // file is already nm (GROMACS native units)
-    new XtcTable(o.paths, o.chunks, o.unitScale(1.0), mode, expectAtoms)
-  }
+class XtcDataSource extends FrameSource("xtc", XtcTable.Schema) {
+  // file is already nm (GROMACS native units)
+  override protected def codec(o: ReadOptions,
+      props: util.Map[String, String]): FrameCodec =
+    new XtcCodec(o.unitScale(1.0), o.mode, o.topAtoms)
 }
 
 object XtcTable {
@@ -625,213 +604,66 @@ object XtcTable {
     StructField("bv3x", FloatType, nullable = true),
     StructField("bv3y", FloatType, nullable = true),
     StructField("bv3z", FloatType, nullable = true)))
-
-  /** [[XtcScan.gathered]]'s rows: the frame and its atoms' fields. */
-  def gatheredSchema(fields: Seq[String]): StructType = StructType(Seq(
-    StructField("frame_id", LongType, nullable = false),
-    StructField("a", ArrayType(StructType(("atom_id" +: fields).map(f =>
-      StructField(f, Schema(f).dataType, nullable = false))),
-      containsNull = false), nullable = false)))
 }
 
-class XtcTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String, expectAtoms: Int = -1)
-    extends Table with SupportsRead {
-  override def name(): String = s"xtc:${paths.mkString(",")}"
-  override def schema(): StructType = XtcTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new XtcScanBuilder(paths, chunks, unitScale, mode, expectAtoms)
-}
+/** Index: [[XtcFormat.indexCached]]; a partition seeks to its first
+  * frame's byte offset. `top=` uses the 8-byte [[XtcFormat.probeNatoms]]. */
+final class XtcCodec(unitScale: Double, override val mode: String,
+    override val expectAtoms: Int = -1) extends FrameCodec {
+  override def name: String = "xtc"
+  override def schema: StructType = XtcTable.Schema
+  override def extensions: Seq[String] = Seq(".xtc")
 
-class XtcScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String, expectAtoms: Int = -1)
-    extends FrameScanBuilder(XtcTable.Schema) {
-  private var atomLo: Int = 0
-  private var atomHi: Int = Int.MaxValue // exclusive
+  override def probeAtoms(path: String): Int = XtcFormat.probeNatoms(path)
 
-  private def atomBound(v: Long): Int =
-    math.max(0L, math.min(v, Int.MaxValue.toLong)).toInt
-
-  /** atom_id predicates bound each frame's decode and row emission
-    * (frame_id ones are the shared shell's: they bound the partition
-    * plan and the index walk). All filters stay post-scan. */
-  override protected def pushOther(filter: Filter): Boolean = filter match {
-    case EqualTo("atom_id", v: Int) =>
-      atomLo = math.max(atomLo, atomBound(v))
-      atomHi = math.min(atomHi, atomBound(v + 1L)); true
-    case GreaterThan("atom_id", v: Int) =>
-      atomLo = math.max(atomLo, atomBound(v + 1L)); true
-    case GreaterThanOrEqual("atom_id", v: Int) =>
-      atomLo = math.max(atomLo, atomBound(v)); true
-    case LessThan("atom_id", v: Int) =>
-      atomHi = math.min(atomHi, atomBound(v)); true
-    case LessThanOrEqual("atom_id", v: Int) =>
-      atomHi = math.min(atomHi, atomBound(v + 1L)); true
-    case In("atom_id", vs)
-        if vs.nonEmpty && vs.forall(_.isInstanceOf[Int]) =>
-      val ids = vs.map(_.asInstanceOf[Int])
-      atomLo = math.max(atomLo, atomBound(ids.min))
-      atomHi = math.min(atomHi, atomBound(ids.max + 1L)); true
-    case _ => false
-  }
-
-  override def build(): Scan =
-    new XtcScan(paths, chunks, unitScale, required, frameLo, frameHi, limit,
-      mode, expectAtoms, atomLo, atomHi, pushedFilters().toSeq)
-}
-
-/** startFrame/endFrame are LOCAL to `filePath`; `startByte` is the
-  * exact offset of startFrame's header (from the driver index) and
-  * `frameOffset` the global frame id of the file's frame 0. */
-case class XtcFrameRange(startFrame: Long, endFrame: Long, startByte: Long,
-    filePath: String, frameOffset: Long) extends InputPartition
-
-class XtcScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    mode: String, expectAtoms: Int = -1, atomLo: Int = 0,
-    atomHi: Int = Int.MaxValue, pushed: Seq[Filter] = Nil,
-    gather: Option[Seq[String]] = None)
-    extends FrameGatherScan with Batch {
-  override def readSchema(): StructType = gather match {
-    case Some(fs) => XtcTable.gatheredSchema(fs)
-    case None => required
-  }
-  override def toBatch: Batch = this
-  override def description(): String =
-    "XtcScan" + gather.fold("")(fs => fs.mkString(" gathered(atom_id, ", ", ", ")")) +
-      s" PushedFilters: ${pushed.mkString("[", ", ", "]")}"
-
-  override def gathered(fields: Seq[String]): Scan =
-    new XtcScan(paths, chunks, unitScale, required, frameLo, frameHi, limit,
-      mode, expectAtoms, atomLo, atomHi, pushed, Some(fields))
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new XtcMicroBatchStream(
-      MultiPath.single("xtc", paths, "streaming read"),
-      chunks, unitScale, required, mode)
-
-  private def planFile(p: String,
-      idx: IndexedSeq[(Long, Long, XtcFrameMeta)], off: Long,
-      rowBudget: Long): (Seq[InputPartition], Long) = {
-    val lo = math.max(off, frameLo) - off
-    var hi = math.min(off + idx.length, frameHi) - off
-    if (lo >= hi) return (Nil, 0L)
-    if (rowBudget != Long.MaxValue) {
-      val base = idx(lo.toInt)._2
-      var h = lo
-      while (h < hi && idx(h.toInt)._2 - base < rowBudget) h += 1
-      hi = h
-    }
-    if (lo >= hi) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      XtcFrameRange(start, math.min(start + chunks, hi),
-        idx(start.toInt)._1, p, off): InputPartition
-    }
-    val rows = idx(hi.toInt - 1)._2 - idx(lo.toInt)._2 +
-      idx(hi.toInt - 1)._3.nAtoms
-    (parts, rows)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = MultiPath.expandAll("xtc", paths, Seq(".xtc"))
-    // top= validates EVERY named file — including shards a pushed
-    // limit/frame bound would prune from the plan (binpos parity; one
-    // 8-byte probe per file, only when top= was given)
-    if (expectAtoms > 0) files.foreach { p =>
-      val n = XtcFormat.probeNatoms(p)
-      if (n != expectAtoms) throw new IllegalArgumentException(
-        s"xtc $p: header declares $n atoms but the topology " +
-          s"declares atom count $expectAtoms (option 'top')")
-    }
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val idx = XtcFormat.indexCached(p, mode,
-          if (frameHi == Long.MaxValue) Long.MaxValue else frameHi - off)
-        val (parts, rows) = planFile(p, idx, off, budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += idx.length
-      }
-    }
-    out.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new XtcReaderFactory(unitScale, required, mode, atomLo, atomHi, gather)
-}
-
-class XtcReaderFactory(unitScale: Double, required: StructType,
-    mode: String, atomLo: Int = 0, atomHi: Int = Int.MaxValue,
-    gather: Option[Seq[String]] = None)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val range = partition.asInstanceOf[XtcFrameRange]
-    gather match {
-      case Some(fs) => new XtcGatherReader(unitScale, fs, range, mode, atomLo, atomHi)
-      case None => new XtcPartitionReader(unitScale, required, range, mode,
-        atomLo, atomHi)
+  override def index(path: String, frameHi: Long): FrameIndex = {
+    val idx = XtcFormat.indexCached(path, mode, frameHi)
+    // frames may differ in atom count
+    new FrameIndex(idx.length, -1) {
+      override def rowsBefore(f: Long): Long =
+        if (f < idx.length) idx(f.toInt)._2
+        else idx.lastOption.fold(0L)(l => l._2 + l._3.nAtoms)
+      override def at(start: Long, end: Long): Any = idx(start.toInt)._1
     }
   }
+
+  override def open(part: FramePartition, need: Set[String],
+      atomHi: Int): FrameReader =
+    new XtcFrameReader(unitScale, mode, part,
+      need("x") || need("y") || need("z"), atomHi)
 }
 
 /** Positioned read of a variable-record range: one seek to the
   * partition's indexed byte offset, then sequential frame decode —
   * each frame's own declared data length advances the cursor. The
   * whole compressed blob is read in ONE positioned read and decoded
-  * in-task; when the x/y/z columns are all pruned the decode is
-  * skipped entirely (header-only scan). Each frame emits atoms
-  * [atomLo, min(nAtoms, atomHi)), and its decode stops at that end. */
-class XtcPartitionReader(unitScale: Double, required: StructType,
-    range: XtcFrameRange, mode: String, atomLo: Int = 0,
-    atomHi: Int = Int.MaxValue)
-    extends PartitionReader[InternalRow] {
+  * in-task, stopping at `atomHi`; when the x/y/z columns are all pruned
+  * the decode is skipped entirely (header-only scan). */
+private final class XtcFrameReader(unitScale: Double, mode: String,
+    part: FramePartition, needXyz: Boolean, atomHi: Int)
+    extends FrameReader("xtc", mode, part) {
 
-  private val raf = FsIO.openRandom(range.filePath)
-  raf.seek(range.startByte)
-
-  private val needXyz =
-    required.fieldNames.exists(Set("x", "y", "z"))
-
+  private val raf = FsIO.openRandom(part.path)
+  raf.seek(part.at.asInstanceOf[Long])
   private var meta: XtcFrameMeta = _
-  protected var xs: Array[Float] = Array.empty
   private var boxNull = false
-  protected var frame = range.startFrame - 1 // advanced by loadFrame
-  protected var emit = 0
-  protected var end = 0 // this frame's emitted atoms are [emit, end)
-  private var nAtoms = 0
-  private var current: InternalRow = _
 
-  private val ordinals: Array[Int] = {
-    val canon = XtcTable.Schema.fieldNames.zipWithIndex.toMap
-    required.fieldNames.map(canon)
-  }
-
-  protected def loadFrame(): Boolean = {
-    if (frame + 1 >= range.endFrame) return false
+  override def next(): Boolean = {
+    if (frame + 1 >= part.endFrame) return false
     frame += 1
-    val m = XtcFormat.readFrameMeta(raf, range.filePath,
-      frame + range.frameOffset).getOrElse(return false)
+    val m = XtcFormat.readFrameMeta(raf, part.path,
+      frame + part.frameOffset).getOrElse(return false)
     meta = m
     nAtoms = m.nAtoms
-    end = math.min(nAtoms, atomHi)
+    val end = math.min(nAtoms, atomHi)
     // all-zero box = "no unitcell" (the format writes 9 zero floats)
     boxNull = m.box.forall(_ == 0f)
-    if (needXyz && atomLo < end) {
+    if (needXyz && end > 0) {
       val floats = XtcFormat.decodedFloats(nAtoms, end)
       if (floats > Int.MaxValue - 8)
-        XtcFormat.fail(range.filePath, frame + range.frameOffset,
+        XtcFormat.fail(part.path, frame + part.frameOffset,
           s"$nAtoms atoms do not fit one frame buffer")
-      if (xs.length < floats) xs = new Array[Float](floats.toInt)
+      val xs = coords(floats.toInt)
       if (nAtoms <= 9) {
         val buf = new Array[Byte](12 * nAtoms)
         raf.readFully(buf)
@@ -842,94 +674,24 @@ class XtcPartitionReader(unitScale: Double, required: StructType,
         val blob = new Array[Byte](m.nBytes)
         raf.seek(m.dataStart)
         raf.readFully(blob)
-        XtcFormat.decompress(m, blob, xs, range.filePath,
-          frame + range.frameOffset, end)
+        XtcFormat.decompress(m, blob, xs, part.path,
+          frame + part.frameOffset, end)
       }
       if (unitScale != 1.0) {
-        var i = 3 * atomLo
-        while (i < 3 * end) {
-          xs(i) = (xs(i) * unitScale).toFloat; i += 1
-        }
+        var i = 0
+        while (i < 3 * end) { xs(i) = (xs(i) * unitScale).toFloat; i += 1 }
       }
     }
     raf.seek(m.frameEnd)
-    emit = math.min(atomLo, end)
     true
   }
 
-  override def next(): Boolean = {
-    // loop: a frame with no atoms in bounds yields no rows but still
-    // advances (the initial end = 0 also forces the first load here)
-    while (emit >= end) {
-      if (!loadFrame()) return false
-    }
-    val a = emit
-    emit += 1
-    val row = new Array[Any](ordinals.length)
-    var i = 0
-    while (i < ordinals.length) {
-      row(i) = ordinals(i) match {
-        case 0 => frame + range.frameOffset
-        case 1 => meta.time
-        case 2 => meta.step
-        case 3 => if (nAtoms <= 9) null else meta.precision
-        case 4 => a // 0-based file-order ordinal — the topology join key
-        // contract every trajectory source shares (TrajLoad.topology)
-        case 5 => xs(3 * a)
-        case 6 => xs(3 * a + 1)
-        case 7 => xs(3 * a + 2)
-        case n =>
-          if (boxNull) null
-          else (meta.box(n - 8) * unitScale).toFloat
-      }
-      i += 1
-    }
-    current = InternalRow.fromSeq(row.toIndexedSeq)
-    true
+  override def frameValue(ord: Int): Any = ord match {
+    case 1 => meta.time
+    case 2 => meta.step
+    case 3 => if (nAtoms <= 9) null else meta.precision
+    case n => if (boxNull) null else (meta.box(n - 8) * unitScale).toFloat
   }
 
-  override def get(): InternalRow = current
   override def close(): Unit = raf.close()
-}
-
-/** [[XtcScan.gathered]]'s reader: the same frame loop, one row per
-  * frame with at least one atom in bounds. Each row's `a` array is
-  * written straight from the decode buffer into an UnsafeRow; no atom
-  * row is built. */
-final class XtcGatherReader(unitScale: Double, fields: Seq[String],
-    range: XtcFrameRange, mode: String, atomLo: Int, atomHi: Int)
-    extends XtcPartitionReader(unitScale,
-      XtcTable.Schema(("frame_id" +: "atom_id" +: fields).toSet),
-      range, mode, atomLo, atomHi) {
-
-  // offset of each field within an atom's (x, y, z) triple
-  private val offsets = fields.map(f => "xyz".indexOf(f)).toArray
-  private val rowWriter = new UnsafeRowWriter(2)
-  private val arrayWriter = new UnsafeArrayWriter(rowWriter, 8)
-  private val atomWriter = new UnsafeRowWriter(arrayWriter, 1 + offsets.length)
-
-  override def next(): Boolean = {
-    do { if (!loadFrame()) return false } while (emit >= end)
-    rowWriter.reset()
-    rowWriter.zeroOutNullBytes()
-    rowWriter.write(0, frame + range.frameOffset)
-    val arrayStart = rowWriter.cursor()
-    arrayWriter.initialize(end - emit)
-    var a = emit
-    while (a < end) {
-      val atomStart = arrayWriter.cursor()
-      atomWriter.resetRowWriter()
-      atomWriter.write(0, a)
-      var j = 0
-      while (j < offsets.length) {
-        atomWriter.write(j + 1, xs(3 * a + offsets(j))); j += 1
-      }
-      arrayWriter.setOffsetAndSizeFromPreviousCursor(a - emit, atomStart)
-      a += 1
-    }
-    rowWriter.setOffsetAndSizeFromPreviousCursor(1, arrayStart)
-    true
-  }
-
-  override def get(): InternalRow = rowWriter.getRow
 }

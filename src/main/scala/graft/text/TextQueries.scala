@@ -107,9 +107,10 @@ object TextQueries {
 
   /** (session, dir, key) → shared state for the dedup pipeline, built
     * once in [[graft.util.SharedArtifacts]] scope `text`: the minhash
-    * signature barriers, the verified (8, 2) pair set — shared by
-    * q_dedup_minhash and q_dedup_cluster — the cluster-assignment table
-    * built from it, and the ngram-DF pair set. */
+    * and simhash signature barriers, the DF tier's shingle and signature
+    * barriers, the verified (8, 2) pair set — shared by q_dedup_minhash
+    * and q_dedup_cluster — the cluster-assignment table built from it,
+    * and the ngram-DF pair set. */
   private def textShared(s: SparkSession, d: String, key: String)
       (build: => DataFrame): DataFrame =
     SharedArtifacts.get(s, "text", s"$d:$key")(build)
@@ -123,6 +124,11 @@ object TextQueries {
     * semantics are unchanged (one build per application). */
   private[graft] def evictShared(s: SparkSession): Unit =
     SharedArtifacts.evict(s, "text")
+
+  /** The per-doc simhash signature barrier, a `text` artifact shared by
+    * every simhash tier build. */
+  private def simhashShared(s: SparkSession, d: String): DataFrame =
+    textShared(s, d, "simhash-signatures")(simhashSig(s, d).graftBarrier)
 
   private def minhashPairsShared(s: SparkSession, d: String): DataFrame =
     textShared(s, d, "pairs")(
@@ -332,10 +338,11 @@ object TextQueries {
     // ONE shingle-extraction pass, barrier-pinned: the census and the
     // de-chromed re-gather both read it (without the barrier the
     // anti-join's two sides would each re-run the kernel)
-    val rows0 = docs.select(col("doc_id"),
-        expr(s"shingles_k(text, $shingleK)").as("sh0"))
-      .filter(size(col("sh0")) > 0)
-      .graftBarrier
+    val rows0 = textShared(s, d, s"df-shingles:$shingleK")(
+      docs.select(col("doc_id"),
+          expr(s"shingles_k(text, $shingleK)").as("sh0"))
+        .filter(size(col("sh0")) > 0)
+        .graftBarrier)
     val ex = rows0.select(col("doc_id"), explode(col("sh0")).as("g"))
     val hot = ex.groupBy("g").agg(count(lit(1)).as("dfc"))
       .filter(col("dfc") > lit(nDocs * dfFrac))
@@ -352,7 +359,7 @@ object TextQueries {
     // chrome corpora take the de-chrome path unchanged.
     val nHot = memoMaxBucket(s, s"minhash-df-nhot-$d-$shingleK-$dfFrac")(
       hot.count())
-    val ds = (if (nHot == 0L)
+    val ds = textShared(s, d, s"df-signatures:$shingleK:$dfFrac")((if (nHot == 0L)
       rows0.select(col("doc_id"), sort_array(col("sh0")).as("sh"))
     else
       // de-chrome via broadcast anti-join + linear re-gather (the
@@ -368,7 +375,7 @@ object TextQueries {
         .where(size(col("sh")) > 0))
       .select(col("doc_id"), col("sh"),
         expr("minhash_banded_from(sh, 8, 2)").as("bkeys"))
-      .graftBarrier // four consumers in the pair tail
+      .graftBarrier) // four consumers in the pair tail
     minhashPairsFromDs(ds)
   }
 
@@ -656,7 +663,7 @@ object TextQueries {
     require(maxHamming >= 0 && maxHamming <= 31,
       s"dedup_simhash: maxHamming must be in [0, 31], got $maxHamming")
     val k = maxHamming + 1
-    val sig = simhashSig(s, d).graftBarrier
+    val sig = simhashShared(s, d)
     val banded = sig.select(col("doc_id"), col("sim_lo"), col("sim_hi"),
       explode(array((0 until k).map(b =>
         struct(lit(b).as("band"), bandValAt(b, k).as("bval"))): _*))
@@ -885,7 +892,7 @@ object TextQueries {
     // lineage barrier — same rationale as dedupMinhash: signatures must
     // evaluate once per doc, not once per banded row after projection
     // collapse
-    val sig = simhashSig(s, d).graftBarrier
+    val sig = simhashShared(s, d)
     val banded = sig.select(col("doc_id"), col("sim_lo"), col("sim_hi"),
       explode(array((0 to 8).map(b =>
         struct(lit(b).as("band"), bandVal(b).as("bval"))): _*)).as("bd"))
@@ -905,7 +912,7 @@ object TextQueries {
     * registered; do not use outside tests. */
   private[graft] def dedupSimhashViaJoin(s: SparkSession,
       d: String): DataFrame = {
-    val sig = simhashSig(s, d).graftBarrier
+    val sig = simhashShared(s, d)
     val banded = sig.select(col("doc_id"), col("sim_lo"), col("sim_hi"),
       explode(array((0 to 8).map(b =>
         struct(lit(b).as("band"), bandVal(b).as("bval"))): _*)).as("bd"))

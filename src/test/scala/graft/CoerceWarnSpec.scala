@@ -125,4 +125,15 @@ class CoerceWarnSpec extends AnyFunSuite {
     }.getOrElse(fail("no BatchScanExec in plan"))
     assert(dropped == 1L)
   }
+
+  CodecFixtures.modeFormats.foreach { fmt =>
+    test(s"$fmt: a limit over a DROPMALFORMED read still returns its rows " +
+      "when the first frames lost records") {
+      val df = spark.read.format(fmt)
+        .options(CodecFixtures.options(fmt) + ("mode" -> "DROPMALFORMED"))
+        .load(CodecFixtures.malformedDir(fmt))
+      val k = 2 * CodecFixtures.nAtoms
+      assert(df.limit(k).collect().length == math.min(k.toLong, df.count()))
+    }
+  }
 }

@@ -159,4 +159,32 @@ class FrameGatherSpec extends AnyFunSuite {
         "struct(atom_id, x, y, z)) FILTER (WHERE atom_id < 50))").as("a")))
     cases.foreach(check(xtc(fixture), wide = false))
   }
+
+  private def codec(fmt: String, dir: String, extra: (String, String)*)(
+      s: SparkSession) =
+    s.read.format(fmt).options(CodecFixtures.options(fmt) ++ extra).load(dir)
+
+  private val edges = {
+    val n = CodecFixtures.nAtoms
+    Seq(0, 1, n - 1, n, n + 5)
+  }
+
+  CodecFixtures.formats.foreach { fmt =>
+    test(s"$fmt: gathered in the scan, equal to the checkpointed rows' " +
+      "gather and pair stats at atom_id < k on the frame's edges") {
+      val dir = CodecFixtures.dir(fmt, shards = 2, frames = 3)
+      for (k <- edges)
+        check(codec(fmt, dir), wide = true)(gather(_, col("atom_id") < k))
+    }
+  }
+
+  CodecFixtures.modeFormats.foreach { fmt =>
+    test(s"$fmt under DROPMALFORMED: the gather skips the dropped " +
+      "records exactly as the checkpointed rows do") {
+      val dir = CodecFixtures.malformedDir(fmt)
+      for (k <- edges)
+        check(codec(fmt, dir, "mode" -> "DROPMALFORMED"), wide = true)(
+          gather(_, col("atom_id") < k))
+    }
+  }
 }

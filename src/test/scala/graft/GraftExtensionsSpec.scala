@@ -100,4 +100,25 @@ class GraftExtensionsSpec extends AnyFunSuite {
       s"use graft.GraftSession.builder() instead in: " +
         offenders.mkString(", "))
   }
+
+  test("only the frame-source shell defines a reader factory, a " +
+    "micro-batch stream or a readable table under sources/") {
+    val base = java.nio.file.Paths.get(
+      sys.props.getOrElse("graft.base", sys.props("user.dir")))
+    val shell = Set("FrameSource.scala", "ShardStreams.scala")
+    val copy = ("""(extends|with)\s+(PartitionReaderFactory|MicroBatchStream)\b|""" +
+      """extends\s+Table\s+with\s+SupportsRead""").r
+    val files = java.nio.file.Files.list(
+      base.resolve("src/main/scala/graft/sources"))
+    val offenders =
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filterNot(p => shell(p.getFileName.toString))
+        .filter(p => copy.findFirstIn(java.nio.file.Files.readString(p)).nonEmpty)
+        .map(p => base.relativize(p).toString).toList
+      finally files.close()
+    assert(offenders.isEmpty,
+      s"put the codec on the FrameCodec shell instead in: " +
+        offenders.mkString(", "))
+  }
 }

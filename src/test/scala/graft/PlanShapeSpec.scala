@@ -309,4 +309,32 @@ class PlanShapeSpec extends AnyFunSuite {
     assert("""\*\(\d+\) Project \[pair_dist_stats\(""".r.findFirstIn(executed).nonEmpty,
       executed)
   }
+
+  test("traj_ref's op over DCD plans as over XTC: gathered in the scan, " +
+    "no collect_list or exchange, one driver merge") {
+    import org.apache.spark.sql.functions._
+    val rnd = new scala.util.Random(12)
+    val path = java.nio.file.Files.createTempFile("trajref", ".dcd").toString
+    graft.sources.DcdWrite.write(path, (0 until 6).map { _ =>
+      def axis() = Array.fill(600)(rnd.between(-3f, 3f))
+      graft.sources.DcdWrite.Frame(axis(), axis(), axis(), None)
+    })
+    val frames = spark.read.format("dcd").option("chunks", 1).load(path)
+      .filter(col("atom_id") < 500)
+      .select(col("frame_id"), col("atom_id"), col("x"), col("y"), col("z"))
+      .groupBy("frame_id")
+      .agg(sort_array(collect_list(struct(col("atom_id"), col("x"),
+        col("y"), col("z")))).as("a"))
+    val op = frames.select(expr("pair_dist_stats(transform(a, s -> s.x), " +
+        "transform(a, s -> s.y), transform(a, s -> s.z))").as("st"))
+      .agg(sum(col("st.cnt")), sum(col("st.sum")), min(col("st.mn")),
+        max(col("st.mx")))
+    val plan = op.queryExecution.executedPlan.toString
+    assert(!plan.contains("hashpartitioning") && !plan.contains("collect_list") &&
+      !plan.contains("ObjectHashAggregate"), plan)
+    assert("Exchange".r.findAllIn(plan).isEmpty &&
+      "DriverMergeAggregate".r.findAllIn(plan).length == 1, plan)
+    assert(plan.contains("DcdScan gathered(atom_id, x, y, z)"), plan)
+    assert(op.collect()(0).getLong(0) == 6L * 500 * 499 / 2)
+  }
 }

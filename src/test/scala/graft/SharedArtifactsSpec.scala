@@ -193,4 +193,24 @@ class SharedArtifactsSpec extends AnyFunSuite {
     text.TextQueries.evictShared(s)
     assert(!built.exists(persisted))
   }
+
+  test("rebuilding q_dedup_simhash and q_dedup_minhash_df three times " +
+    "adds no persisted RDD, and the text eviction frees their barriers") {
+    val s = session()
+    val d = SparkTestBase.sf
+    def ids(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Seq("q_dedup_simhash", "q_dedup_minhash_df").foreach { q =>
+      def pairs(): Seq[String] =
+        SparkEntry.queries(q)(s, d).collect().map(_.toString).toSeq
+      val before = ids()
+      val first = pairs()
+      val built = ids() -- before
+      assert(built.nonEmpty, q)
+      (0 until 2).foreach(_ => assert(pairs() == first, q))
+      assert(ids() -- before == built, s"$q rebuilds persisted " +
+        s"${(ids() -- before -- built).size} more RDD(s)")
+      text.TextQueries.evictShared(s)
+      assert(!built.exists(persisted), q)
+    }
+  }
 }

@@ -339,4 +339,49 @@ class StreamingFormatsSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() == 2L * totalFrames,
       "an idle restart re-emitted rows")
   }
+
+  /** Every row of `df`, as sortable strings. */
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  CodecFixtures.modeFormats.foreach { fmt =>
+    test(s"$fmt: a DROPMALFORMED stream over a shard with one malformed " +
+      "frame gives the batch read's rows") {
+      val dir = CodecFixtures.malformedDir(fmt)
+      val opts = CodecFixtures.options(fmt) + ("mode" -> "DROPMALFORMED")
+      val batch = rows(spark.read.format(fmt).options(opts).load(dir))
+      assert(batch.nonEmpty && batch.size < 3 * CodecFixtures.nAtoms,
+        s"the batch read dropped nothing: ${batch.size} rows")
+      val q = spark.readStream.format(fmt).options(opts).load(dir)
+        .writeStream.format("memory").queryName(s"bad_${fmt}_stream")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        assert(rows(spark.table(s"bad_${fmt}_stream")) == batch)
+      } finally q.stop()
+    }
+  }
+
+  CodecFixtures.formats.foreach { fmt =>
+    test(s"$fmt: maxShardsPerTrigger=2 admits 2 shards of a 5-shard " +
+      "backlog in the first micro-batch") {
+      val dir = CodecFixtures.dir(fmt, shards = 5, frames = 1)
+      val s2 = spark.newSession()
+      s2.conf.set("spark.graft.stream.maxShardsPerTrigger", "2")
+      val q = s2.readStream.format(fmt).options(CodecFixtures.options(fmt))
+        .load(dir)
+        .writeStream.format("memory").queryName(s"adm2_${fmt}_stream")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        val first = q.recentProgress.filter(_.numInputRows > 0).head
+        assert(first.sources.head.endOffset == "2" &&
+          first.numInputRows == 2L * CodecFixtures.nAtoms,
+          s"first batch: offset ${first.sources.head.endOffset}, " +
+            s"${first.numInputRows} rows")
+        assert(s2.table(s"adm2_${fmt}_stream").count() ==
+          5L * CodecFixtures.nAtoms)
+      } finally q.stop()
+    }
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.ByteBuffer
 import java.nio.file.{Files, Path}
 
-import graft.sources.{FsIO, XtcFormat, XtcScanBuilder, XtcWrite}
+import graft.sources.{FrameScanBuilder, FsIO, XtcCodec, XtcFormat, XtcWrite}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.LessThan
 import org.scalatest.funsuite.AnyFunSuite
@@ -136,7 +136,7 @@ class XtcFuzzSpec extends AnyFunSuite {
   /** The FAILFAST scan of `path` under `atom_id < k`, read through the
     * DSv2 reader itself, so no post-scan filter hides a row past k. */
   private def scanBounded(path: String, k: Int): Seq[Atom] = {
-    val b = new XtcScanBuilder(Seq(path), 1, 1.0, "FAILFAST")
+    val b = new FrameScanBuilder(new XtcCodec(1.0, "FAILFAST"), Seq(path), 1)
     b.pushFilters(Array(LessThan("atom_id", k)))
     val batch = b.build().toBatch
     val factory = batch.createReaderFactory()
