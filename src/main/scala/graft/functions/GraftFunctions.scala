@@ -1152,7 +1152,8 @@ object GraftFunctions {
   /** Idempotent per-session registration of the function table, the
     * frame-gather planner strategy ([[graft.sources.FrameGather]]), the
     * driver-merge planner strategy for ungrouped aggregates
-    * ([[DriverMerge]]) and the field-extraction rewrite
+    * ([[DriverMerge]]), the small-sort planner strategy
+    * ([[SmallSort]]) and the field-extraction rewrite
     * ([[ArrayFieldExtract]]). Only names the session does not resolve
     * yet are registered, so a session built with the extensions, or
     * registered before, keeps its functions: nothing is replaced. */
@@ -1162,7 +1163,7 @@ object GraftFunctions {
       .foreach(f => reg.registerFunction(f.id, f.info, f.builder))
     val extra = spark.experimental.extraStrategies
     spark.experimental.extraStrategies = extra ++
-      Seq(graft.sources.FrameGather, DriverMerge).filterNot(extra.contains)
+      Seq(graft.sources.FrameGather, DriverMerge, SmallSort).filterNot(extra.contains)
     val rules = spark.experimental.extraOptimizations
     if (!rules.contains(ArrayFieldExtract))
       spark.experimental.extraOptimizations = rules :+ ArrayFieldExtract

@@ -1,8 +1,18 @@
 package graft.rel
 
+import scala.util.Try
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.util.SharedArtifacts
 
 /** Loaders for the harness star-schema parquet tables (FIXTURES.md §B).
   *
@@ -12,8 +22,53 @@ import org.apache.spark.sql.types.LongType
   * partitioned table root; nothing here materializes on the driver.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `dir/name.parquet`, read with the schema its footer declares.
+    *
+    * `spark.read.parquet` alone infers the schema with a one-task Spark
+    * job per read (about 60 ms of a 70 ms read at bench scale). For a
+    * single file the schema comes from [[footer]] instead, so a read
+    * runs no job. A directory (a partitioned table root, whose
+    * partition columns come from its paths) keeps Spark's inference. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    Try(p.getFileSystem(conf).getFileStatus(p)).toOption.filter(_.isFile) match {
+      case Some(st) => spark.read.schema(footer(spark, st, conf).schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** What one parquet footer says: the Spark schema and the row-group
+    * count. */
+  private[graft] final case class FooterFacts(schema: StructType, rowGroups: Int)
+
+  /** The footer facts of one parquet file, read once per (session,
+    * path, length, mtime): a `meta` shared artifact, never evicted.
+    * The schema is the one Spark's inference derives from the same
+    * footer (`ParquetFileFormat.mergeSchemasInParallel`: the Spark
+    * schema stored in the footer, else the parquet schema converted
+    * under the session's flags). `nanosAsLong` is one of those flags,
+    * hence one memo per session. A rewritten file has a new length or
+    * mtime, so it is read again. */
+  private[graft] def footer(s: SparkSession, st: FileStatus,
+      conf: Configuration): FooterFacts =
+    SharedArtifacts.get(s, "meta",
+        s"${st.getPath}|${st.getLen}|${st.getModificationTime}") {
+      val c = s.sessionState.conf
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = c.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+        nanosAsLong = c.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation)
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try {
+        val meta = r.getFooter
+        FooterFacts(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, meta), converter), meta.getBlocks.size)
+      } finally r.close()
+    }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

@@ -57,11 +57,8 @@ object Fanout {
     if (groups < parts) byKey(df, key) else df
   }
 
-  private val rowGroupCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), Integer]()
-
   /** Total parquet row groups under `path` (file or directory of
-    * `*.parquet`), memoized per (path, mtime, size). */
+    * `*.parquet`), from the memoized footers ([[graft.rel.Tables.footer]]). */
   private[graft] def rowGroups(
       s: org.apache.spark.sql.SparkSession, path: String): Int = {
     val conf = s.sessionState.newHadoopConf()
@@ -72,15 +69,6 @@ object Fanout {
       if (root.isDirectory)
         fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
       else Array(root)
-    files.map { st =>
-      rowGroupCache.computeIfAbsent(
-        (st.getPath.toString, st.getModificationTime, st.getLen),
-        _ => {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try Integer.valueOf(r.getRowGroups.size) finally r.close()
-        }).intValue()
-    }.sum
+    files.map(graft.rel.Tables.footer(s, _, conf).rowGroups).sum
   }
 }

@@ -28,7 +28,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * One application-end listener per SparkContext drops the entries of
   * that context's sessions. Scopes `text` and `sim` hold the tier
   * artifacts that benchmarks [[evict]] between passes; `text-dials`
-  * (plan-choice scalars), `traj` and `multimodal` are never evicted. */
+  * (plan-choice scalars), `traj`, `multimodal` and `meta` (parquet
+  * footers, [[graft.rel.Tables.footer]]) are never evicted. */
 object SharedArtifacts {
   private final case class Key(session: SparkSession, scope: String,
       key: String)

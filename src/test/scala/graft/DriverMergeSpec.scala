@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.DriverMerge
+import graft.functions.{DriverMerge, SmallSort}
 
 /** The driver merge of ungrouped aggregates ([[DriverMerge]]): each
   * query answers exactly as Spark's own plan does, with the final
@@ -87,9 +87,9 @@ class DriverMergeSpec extends AnyFunSuite {
     "SELECT sum(v) + (SELECT max(d) FROM t), count(*) FROM t")
 
   test("register installs the strategy once") {
-    for ((_, s, ref) <- sessions) {
-      assert(s.experimental.extraStrategies.count(_ == DriverMerge) == 1)
-      assert(!ref.experimental.extraStrategies.contains(DriverMerge))
+    for ((_, s, ref) <- sessions; strategy <- Seq(DriverMerge, SmallSort)) {
+      assert(s.experimental.extraStrategies.count(_ == strategy) == 1)
+      assert(!ref.experimental.extraStrategies.contains(strategy))
     }
   }
 
