@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -90,9 +90,36 @@ final class ArcCodec(unitScale: Double, override val mode: String)
       atomHi: Int): FrameReader =
     new ArcFrameReader(unitScale, mode, part, need)
 
-  override def writes: Boolean = true
-  override def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
-    new ArcWriteBuilder(path, unitScale, info)
+  override def sink: Option[FrameSink] = Some(new ArcSink(unitScale))
+}
+
+/** Per frame: a `natoms` header, a box line `a b c alpha beta gamma`
+  * when the frame has box lengths (lengths divided by `unit_scale`,
+  * angles 90 when null), then `id name x y z` atom lines (coordinates
+  * divided by `unit_scale`). */
+private final class ArcSink(unitScale: Double) extends FrameSink {
+  override def ext: String = ".arc"
+  override def required: Seq[String] = Seq("frame_id", "atom_id", "x", "y", "z")
+  override def open(path: String, schema: StructType): Shard =
+    new TextShard(path, schema) {
+      private val Seq(iAtom, iElement, iX, iY, iZ, iA, iB, iC, iAl, iBe, iGa) =
+        Seq("atom_id", "element", "x", "y", "z", "box_a", "box_b", "box_c",
+          "box_alpha", "box_beta", "box_gamma").map(col)
+
+      override def frame(rows: collection.IndexedSeq[InternalRow]): Unit = {
+        val r0 = rows(0)
+        line(s"${rows.length} generated by graft arc writer")
+        if (present(r0, iA) && present(r0, iB) && present(r0, iC))
+          line(s"${r0.getFloat(iA) / unitScale} ${r0.getFloat(iB) / unitScale} " +
+            s"${r0.getFloat(iC) / unitScale} ${float(r0, iAl, 90f)} " +
+            s"${float(r0, iBe, 90f)} ${float(r0, iGa, 90f)}")
+        rows.foreach { r =>
+          out.write(s"${r.getInt(iAtom)} ${str(r, iElement, "X")} " +
+            s"${r.getFloat(iX) / unitScale} ${r.getFloat(iY) / unitScale} " +
+            s"${r.getFloat(iZ) / unitScale}\n")
+        }
+      }
+    }
 }
 
 private final class ArcFrameReader(unitScale: Double, mode: String,

@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util
 
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /** DataSourceV2 connector for the Scripps/AMBER binpos binary format
@@ -79,9 +79,34 @@ final class BinposCodec(unitScale: Double, override val expectAtoms: Int)
   override def open(part: FramePartition, need: Set[String],
       atomHi: Int): FrameReader = new BinposFrameReader(unitScale, part)
 
-  override def writes: Boolean = true
-  override def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
-    new BinposWriteBuilder(path, unitScale, info)
+  override def sink: Option[FrameSink] = Some(new BinposSink(unitScale))
+}
+
+/** The magic, then per frame `[natoms][coords]`, little-endian,
+  * coordinates divided by `unit_scale` (nm back to Å). Every shard is
+  * itself a valid binpos file. */
+private final class BinposSink(unitScale: Double) extends FrameSink {
+  override def ext: String = ".binpos"
+  override def required: Seq[String] = Seq("frame_id", "x", "y", "z")
+  override def open(path: String, schema: StructType): Shard =
+    new Shard(schema) {
+      private val Seq(iX, iY, iZ) = Seq("x", "y", "z").map(col)
+      private val out = FsIO.createStream(path)
+      out.write(BinposTable.Magic)
+
+      override def frame(rows: collection.IndexedSeq[InternalRow]): Unit = {
+        val bb = ByteBuffer.allocate(4 + 12 * rows.length)
+          .order(ByteOrder.LITTLE_ENDIAN)
+        bb.putInt(rows.length)
+        rows.foreach { r =>
+          bb.putFloat((r.getFloat(iX) / unitScale).toFloat)
+            .putFloat((r.getFloat(iY) / unitScale).toFloat)
+            .putFloat((r.getFloat(iZ) / unitScale).toFloat)
+        }
+        out.write(bb.array())
+      }
+      override def close(): Unit = out.close()
+    }
 }
 
 /** Seeks to the partition's first frame by stride arithmetic, then

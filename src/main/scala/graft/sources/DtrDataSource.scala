@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util
 
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /** Desmond frame-set ("dtr") layout: a trajectory is a DIRECTORY of
@@ -294,8 +294,8 @@ final case class DtrAt(nAtoms: Int, hasBox: Boolean, framesPerFile: Int,
 /** Framesets are directories: `expand` resolves framesets, `.stk` lists
   * and collections ([[DtrFormat.framesets]]), and a streamed collection's
   * shard is a `*.dtr` directory whose `timekeys` exists — a frameset is
-  * complete exactly then (the write path publishes by atomic rename,
-  * timekeys written first). Index: one ~16-byte metadata read, one
+  * complete exactly then (the DSv2 write renames a finished frameset
+  * into place, and [[DtrSetWriter]] writes timekeys last). Index: one ~16-byte metadata read, one
   * timekeys read and an O(1) file-size check per frameset. */
 final class DtrCodec(unitScale: Double) extends FrameCodec {
   override def name: String = "dtr"
@@ -323,9 +323,53 @@ final class DtrCodec(unitScale: Double) extends FrameCodec {
   override def open(part: FramePartition, need: Set[String],
       atomHi: Int): FrameReader = new DtrFrameReader(unitScale, part)
 
-  override def writes: Boolean = true
-  override def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
-    new DtrWriteBuilder(path, unitScale, info)
+  override def sink: Option[FrameSink] = Some(new DtrSink(unitScale))
+}
+
+/** Each task writes a `part-NNNNN.dtr` frameset ([[DtrSetWriter]], 256
+  * frames per payload file), a complete frameset on its own; a task
+  * with no frame writes none. Once every task committed, the driver
+  * writes an `all.stk` naming the framesets that hold frames in
+  * partition order (header-only for an empty write), so the output
+  * reads back as one trajectory. A frame's box lengths (angles 90 when
+  * null) and coordinates divide by `unit_scale` (nm → file units),
+  * inverting the scan; every frame of a frameset has the atom count
+  * and box presence of its first. */
+private final class DtrSink(unitScale: Double) extends FrameSink {
+  override def ext: String = ".dtr"
+  override def required: Seq[String] = Seq("frame_id", "x", "y", "z")
+
+  /** A scan of the directory reads the framesets `all.stk` lists, or
+    * else every `.dtr` subdirectory. */
+  override def scanned(e: FsIO.Entry, exts: Seq[String]): Boolean =
+    e.name == "all.stk" || (!e.isFile && e.name.endsWith(".dtr"))
+
+  override def committed(dir: String, shards: Seq[String]): Unit =
+    FsIO.writeString(FsIO.child(dir, "all.stk"),
+      ("# graft dtr frameset list" +: shards).mkString("", "\n", "\n"))
+
+  override def open(path: String, schema: StructType): Shard =
+    new Shard(schema) {
+      private val Seq(iX, iY, iZ, iA, iB, iC, iAl, iBe, iGa) = Seq("x", "y",
+        "z", "box_a", "box_b", "box_c", "box_alpha", "box_beta",
+        "box_gamma").map(col)
+      private val set = new DtrSetWriter(path, 256)
+
+      override def frame(rows: collection.IndexedSeq[InternalRow]): Unit = {
+        val r0 = rows(0)
+        def scaled(i: Int): Array[Float] =
+          rows.map(r => (r.getFloat(i) / unitScale).toFloat).toArray
+        val box =
+          if (present(r0, iA) && present(r0, iB) && present(r0, iC))
+            Some((r0.getFloat(iA) / unitScale, r0.getFloat(iB) / unitScale,
+              r0.getFloat(iC) / unitScale, float(r0, iAl, 90f).toDouble,
+              float(r0, iBe, 90f).toDouble, float(r0, iGa, 90f).toDouble))
+          else None
+        set.add(scaled(iX), scaled(iY), scaled(iZ), box, time(r0))
+      }
+      override def finish(): Unit = set.finish()
+      override def close(): Unit = set.close()
+    }
 }
 
 /** Pure-arithmetic positioned read: frame f lives in file

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The read shell every trajectory source shares — the Spark-native form
+/** The frame-codec shell every trajectory source shares — the Spark-native form
   * of the reference's one chunk planner (`load_chunks`,
   * core/dask_traj.py:103-140), one positioned chunk reader (`read_chunk`,
   * :329-361) and one registry of what each format yields (`file_returns`,
@@ -25,7 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * rest once:
   *
   *  - [[FrameSource]] / [[FrameTable]]: the provider and table (name,
-  *    capabilities, the write hand-off);
+  *    capabilities, which follow from the codec's sink, and the write
+  *    hand-off);
   *  - [[FrameScanBuilder]]: column pruning, `frame_id` and `atom_id`
   *    bounds, the limit row budget;
   *  - [[FrameScan]]: the `top=` atom-count check on every named file,
@@ -34,7 +35,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    ([[ShardStream]]);
   *  - [[AtomRowReader]]: one `UnsafeRow` per atom straight from the
   *    codec's frame buffer through the pruned ordinals;
-  *  - [[GatherReader]]: one `(frame_id, a)` row per frame, no atom row.
+  *  - [[GatherReader]]: one `(frame_id, a)` row per frame, no atom row;
+  *  - the write half, in FrameWrite.scala: [[FrameWriteBuilder]] and
+  *    the one `Write`/`BatchWrite`/`DataWriterFactory`/`DataWriter`
+  *    chain, which owns the shard-commit protocol (truncate, the append
+  *    check, `part-NNNNN.<ext>` names, attempt-private output renamed
+  *    at task commit, frame boundaries on `frame_id`, the
+  *    required-column check, abort).
   *
   * The codec contract:
   *  - `name`, `schema`, `extensions` and the options parsed in its
@@ -51,7 +58,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * Planning methods a codec may override where its layout differs:
   * `plan` (inpcrd: one frame per file, partitions are runs of files),
   * `expand` and `isShard` (dtr: framesets are directories listed by
-  * `.stk` files), `probeAtoms` (xtc: an 8-byte `top=` probe). */
+  * `.stk` files), `probeAtoms` (xtc: an 8-byte `top=` probe).
+  *
+  * The sink contract, for the codecs that take batch writes: `sink`
+  * returns a [[FrameSink]] that names the shard extension and the
+  * required columns and opens a [[Shard]] at the path the shell gives
+  * it; the shard takes one frame's rows at a time and finishes at task
+  * commit. A sink may also say which directory entries its scan reads
+  * (dtr: frameset directories and `all.stk`) and act once every task
+  * committed (dtr writes `all.stk`). Coordinates divide by the codec's
+  * `unit_scale` on the way out where the format's writer applies it. */
 abstract class FrameCodec extends Serializable {
   def name: String
   def schema: StructType
@@ -121,10 +137,8 @@ abstract class FrameCodec extends Serializable {
     (out.toSeq, counts.toSeq)
   }
 
-  /** Whether the table takes batch writes (`writeBuilder`). */
-  def writes: Boolean = false
-  def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
-    throw new UnsupportedOperationException(s"$name does not support writes")
+  /** The record writer of a codec that takes batch writes ([[FrameSink]]). */
+  def sink: Option[FrameSink] = None
 
   /** `top=` validates EVERY named file, including shards a pushed limit
     * or frame bound prunes from the plan: a disagreeing trailing shard
@@ -226,7 +240,7 @@ class FrameTable(codec: FrameCodec, paths: Seq[String], chunks: Int)
   // batch reads take files/directories/lists/globs; streaming reads and
   // writes take a SINGLE directory of immutable shard files
   override def capabilities(): util.Set[TableCapability] =
-    if (codec.writes)
+    if (codec.sink.isDefined)
       util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
         TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
     else util.EnumSet.of(TableCapability.BATCH_READ,
@@ -234,7 +248,12 @@ class FrameTable(codec: FrameCodec, paths: Seq[String], chunks: Int)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new FrameScanBuilder(codec, paths, chunks)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    codec.writeBuilder(MultiPath.single(codec.name, paths, "write"), info)
+    codec.sink match {
+      case Some(sink) => new FrameWriteBuilder(codec, sink,
+        MultiPath.single(codec.name, paths, "write"), info)
+      case None => throw new UnsupportedOperationException(
+        s"${codec.name} does not support writes")
+    }
 }
 
 /** Column pruning, the `frame_id` range, the `atom_id` bounds and a
@@ -622,7 +641,7 @@ final class ReadOptions(format: String, props: util.Map[String, String]) {
   /** `unit_scale`, for the formats that take it: 0.1 for Å files (to
     * nm), 1.0 for files already in their convention's units. */
   def unitScale(default: Double): Double =
-    ReadOptions.unitScale(format, props, default)
+    ReadOptions.parsed(format, props, "unit_scale", "numeric", default)(_.toDouble)
 
   def int(key: String, default: Int): Int =
     ReadOptions.parsed(format, props, key, "an integer", default)(_.toInt)
@@ -636,11 +655,6 @@ final class ReadOptions(format: String, props: util.Map[String, String]) {
 }
 
 object ReadOptions {
-  /** `unit_scale` from any option map, the write paths' included. */
-  def unitScale(format: String, props: util.Map[String, String],
-      default: Double): Double =
-    parsed(format, props, "unit_scale", "numeric", default)(_.toDouble)
-
   private def parsed[T](format: String, props: util.Map[String, String],
       key: String, what: String, default: T)(f: String => T): T =
     Option(props.get(key)).map { v =>

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -92,9 +92,42 @@ final class GroCodec(override val mode: String) extends FrameCodec {
   override def open(part: FramePartition, need: Set[String],
       atomHi: Int): FrameReader = new GroFrameReader(mode, part)
 
-  override def writes: Boolean = true
-  override def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
-    new GroWriteBuilder(path, info)
+  override def sink: Option[FrameSink] = Some(GroSink)
+}
+
+/** Per frame: a `graft t= <time>` title, the atom count, fixed-width
+  * atom lines per the GROMACS spec (atom numbers restart at 1 per
+  * frame), then the box line: all nine vector components when any
+  * off-diagonal is non-zero, else the three diagonal terms (null
+  * components write 0). */
+private object GroSink extends FrameSink {
+  override def ext: String = ".gro"
+  override def required: Seq[String] =
+    Seq("frame_id", "res_name", "atom_name", "x", "y", "z")
+  override def open(path: String, schema: StructType): Shard =
+    new TextShard(path, schema) {
+      private val Seq(iResId, iResName, iAtomName, iX, iY, iZ) =
+        Seq("res_id", "res_name", "atom_name", "x", "y", "z").map(col)
+      private val iBox = Seq("bv1x", "bv1y", "bv1z", "bv2x", "bv2y", "bv2z",
+        "bv3x", "bv3y", "bv3z").map(col)
+
+      override def frame(rows: collection.IndexedSeq[InternalRow]): Unit = {
+        line(s"graft t= ${time(rows(0))}")
+        line(rows.length.toString)
+        rows.indices.foreach { k =>
+          val r = rows(k)
+          out.write(fmt("%5d", int(r, iResId, 1)) +
+            fmt("%-5s", r.getUTF8String(iResName).toString.take(5)) +
+            fmt("%-5s", r.getUTF8String(iAtomName).toString.take(5)) +
+            fmt("%5d", k + 1) + fmt("%8.3f", r.getFloat(iX)) +
+            fmt("%8.3f", r.getFloat(iY)) + fmt("%8.3f", r.getFloat(iZ)) + "\n")
+        }
+        val box = iBox.map(float(rows(0), _, 0f))
+        val offDiag = Seq(1, 2, 3, 5, 6, 7).exists(box(_) != 0f)
+        val terms = if (offDiag) Seq(0, 4, 8, 1, 2, 3, 5, 6, 7) else Seq(0, 4, 8)
+        line(terms.map(i => fmt("%10.5f", box(i))).mkString)
+      }
+    }
 }
 
 /** Positioned chunk read: skip whole frames before the range, then

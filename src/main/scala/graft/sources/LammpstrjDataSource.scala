@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -137,9 +137,47 @@ final class LammpstrjCodec(unitScale: Double, override val mode: String)
       atomHi: Int): FrameReader =
     new LammpstrjFrameReader(unitScale, mode, part, need)
 
-  override def writes: Boolean = true
-  override def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
-    new LammpstrjWriteBuilder(path, unitScale, info)
+  override def sink: Option[FrameSink] = Some(new LammpstrjSink(unitScale))
+}
+
+/** Per frame, the fixed 9-line dump header, then `id element x y z`
+  * atom lines. The timestep is the frame time, written as an integer
+  * when it is one. `BOX BOUNDS` are orthogonal, `0.0..box_a` etc.;
+  * tilted boxes would need the inverse of the reader's bound
+  * adjustment and are out of the writer's scope (reads take them).
+  * The header cannot omit `BOX BOUNDS` without breaking the line
+  * arithmetic every dump reader relies on, so a boxless frame writes
+  * `0.0 0.0` bounds and reads back with box lengths 0, not null.
+  * Coordinates and box lengths divide by `unit_scale`. */
+private final class LammpstrjSink(unitScale: Double) extends FrameSink {
+  override def ext: String = ".lammpstrj"
+  override def required: Seq[String] = Seq("frame_id", "atom_id", "x", "y", "z")
+  override def open(path: String, schema: StructType): Shard =
+    new TextShard(path, schema) {
+      private val Seq(iAtom, iElement, iX, iY, iZ, iA, iB, iC) =
+        Seq("atom_id", "element", "x", "y", "z", "box_a", "box_b", "box_c")
+          .map(col)
+
+      private def scaled(v: Float): Float = (v / unitScale).toFloat
+
+      override def frame(rows: collection.IndexedSeq[InternalRow]): Unit = {
+        val r0 = rows(0)
+        val t = time(r0)
+        val boxed = present(r0, iA) && present(r0, iB) && present(r0, iC)
+        def len(i: Int): Float = if (boxed) r0.getFloat(i) else 0.0f
+        out.write("ITEM: TIMESTEP\n" +
+          (if (t == t.toLong.toDouble) t.toLong.toString else t.toString) +
+          s"\nITEM: NUMBER OF ATOMS\n${rows.length}" +
+          "\nITEM: BOX BOUNDS pp pp pp\n" +
+          s"0.0 ${scaled(len(iA))}\n0.0 ${scaled(len(iB))}\n" +
+          s"0.0 ${scaled(len(iC))}\nITEM: ATOMS id element x y z\n")
+        rows.foreach { r =>
+          out.write(s"${r.getInt(iAtom)} ${str(r, iElement, "X")} " +
+            s"${scaled(r.getFloat(iX))} ${scaled(r.getFloat(iY))} " +
+            s"${scaled(r.getFloat(iZ))}\n")
+        }
+      }
+    }
 }
 
 /** Positioned chunk read: skip whole frames by line arithmetic, then

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /** DataSourceV2 connector for the AMBER ASCII trajectory format
@@ -105,9 +105,36 @@ final class MdcrdCodec(natoms: Int, box: Boolean, unitScale: Double,
       atomHi: Int): FrameReader =
     new MdcrdFrameReader(natoms, box, unitScale, mode, part)
 
-  override def writes: Boolean = true
-  override def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
-    new MdcrdWriteBuilder(path, box, unitScale, info)
+  override def sink: Option[FrameSink] = Some(new MdcrdSink(box, unitScale))
+}
+
+/** A title line, then per frame 10F8.3 coordinate lines and, with
+  * `box=true`, a 3F8.3 box-lengths line (0 for a boxless frame);
+  * coordinates and lengths divide by `unit_scale`, so a nm-normalized
+  * frame writes back in Å. */
+private final class MdcrdSink(box: Boolean, unitScale: Double)
+    extends FrameSink {
+  override def ext: String = ".mdcrd"
+  override def required: Seq[String] = Seq("frame_id", "x", "y", "z")
+  override def open(path: String, schema: StructType): Shard =
+    new TextShard(path, schema) {
+      private val Seq(iX, iY, iZ, iA, iB, iC) =
+        Seq("x", "y", "z", "box_a", "box_b", "box_c").map(col)
+      line("generated by graft mdcrd writer")
+
+      private def f8(v: Double): String = fmt("%8.3f", v)
+
+      override def frame(rows: collection.IndexedSeq[InternalRow]): Unit = {
+        rows.flatMap(r => Seq(iX, iY, iZ).map(r.getFloat(_) / unitScale))
+          .grouped(10).foreach(g => line(g.map(f8).mkString))
+        if (box) {
+          val r0 = rows(0)
+          val boxed = present(r0, iA) && present(r0, iB) && present(r0, iC)
+          line(Seq(iA, iB, iC).map(i =>
+            f8((if (boxed) r0.getFloat(i) else 0.0f) / unitScale)).mkString)
+        }
+      }
+    }
 }
 
 /** Positioned chunk read over fixed-width 8-char coordinate columns. */

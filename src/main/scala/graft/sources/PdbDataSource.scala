@@ -3,7 +3,7 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -129,9 +129,55 @@ final class PdbCodec(unitScale: Double, override val mode: String)
       atomHi: Int): FrameReader =
     new PdbFrameReader(unitScale, mode, part, need)
 
-  override def writes: Boolean = true
-  override def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
-    new PdbWriteBuilder(path, info)
+  override def sink: Option[FrameSink] = Some(new PdbSink(unitScale))
+}
+
+/** PDB v3.3 fixed-column records, exactly the set [[PdbFrameReader]]
+  * reads, so read → write → read is the identity on the scan schema:
+  * one CRYST1 per shard from its first row's box (when all six box
+  * columns are set), then MODEL / ATOM… / ENDMDL per frame.
+  * Coordinates and box lengths are stored in Å, divided by the codec's
+  * `unit_scale` (default 0.1), so a default-option read recovers the
+  * written nm values. */
+private final class PdbSink(unitScale: Double) extends FrameSink {
+  override def ext: String = ".pdb"
+  override def required: Seq[String] =
+    Seq("frame_id", "name", "res_name", "x", "y", "z")
+  override def open(path: String, schema: StructType): Shard =
+    new TextShard(path, schema) {
+      private val Seq(iSerial, iName, iResName, iChain, iResSeq, iElement,
+        iX, iY, iZ) = Seq("serial", "name", "res_name", "chain", "res_seq",
+        "element", "x", "y", "z").map(col)
+      private val iBox = Seq("box_a", "box_b", "box_c",
+        "box_alpha", "box_beta", "box_gamma").map(col)
+      private var models = 0L
+
+      override def frame(rows: collection.IndexedSeq[InternalRow]): Unit = {
+        val r0 = rows(0)
+        if (models == 0 && iBox.forall(present(r0, _)))
+          line("CRYST1" +
+            iBox.take(3).map(i => fmt("%9.3f", r0.getFloat(i) / unitScale)).mkString +
+            iBox.drop(3).map(i => fmt("%7.2f", r0.getFloat(i))).mkString +
+            " P 1           1")
+        models += 1
+        line(fmt("MODEL     %4d", models))
+        rows.indices.foreach { k =>
+          val r = rows(k)
+          val chain = str(r, iChain, "")
+          line("ATOM  " + fmt("%5d", int(r, iSerial, k + 1)) + " " +
+            fmt("%-4s", str(r, iName, "").take(4)) + " " +
+            fmt("%-3s", str(r, iResName, "").take(3)) + " " +
+            (if (chain.isEmpty) "A" else chain.take(1)) +
+            fmt("%4d", int(r, iResSeq, 1)) + "    " +
+            fmt("%8.3f", r.getFloat(iX) / unitScale) +
+            fmt("%8.3f", r.getFloat(iY) / unitScale) +
+            fmt("%8.3f", r.getFloat(iZ) / unitScale) +
+            "  1.00  0.00          " +
+            fmt("%2s", str(r, iElement, "").takeRight(2)))
+        }
+        line("ENDMDL")
+      }
+    }
 }
 
 /** Positioned chunk read: skip to the partition's first MODEL line,

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -121,9 +121,33 @@ final class XyzCodec(unitScale: Double, override val mode: String)
       atomHi: Int): FrameReader =
     new XyzFrameReader(unitScale, mode, part, need)
 
-  override def writes: Boolean = true
-  override def writeBuilder(path: String, info: LogicalWriteInfo): WriteBuilder =
-    new XyzWriteBuilder(path, info)
+  override def sink: Option[FrameSink] = Some(XyzSink)
+}
+
+/** The inverse of the scan: per frame, the atom count, a `# Step: <time>`
+  * comment (` Box: x y z` appended when the frame has box lengths),
+  * then `element x y z` atom lines, coordinates as given. */
+private object XyzSink extends FrameSink {
+  override def ext: String = ".xyz"
+  override def required: Seq[String] = Seq("frame_id", "element", "x", "y", "z")
+  override def open(path: String, schema: StructType): Shard =
+    new TextShard(path, schema) {
+      private val Seq(iElement, iX, iY, iZ, iBx, iBy, iBz) = Seq("element",
+        "x", "y", "z", "box_x", "box_y", "box_z").map(col)
+
+      override def frame(rows: collection.IndexedSeq[InternalRow]): Unit = {
+        val r0 = rows(0)
+        line(rows.length.toString)
+        line(s"# Step: ${time(r0)}" +
+          (if (present(r0, iBx) && present(r0, iBy) && present(r0, iBz))
+            s" Box: ${r0.getFloat(iBx)} ${r0.getFloat(iBy)} ${r0.getFloat(iBz)}"
+          else ""))
+        rows.foreach { r =>
+          out.write(s"${r.getUTF8String(iElement)} ${r.getFloat(iX)} " +
+            s"${r.getFloat(iY)} ${r.getFloat(iZ)}\n")
+        }
+      }
+    }
 }
 
 /** Positioned chunk read (core/dask_traj.py:329-361): skip to the
