@@ -66,8 +66,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * it; the shard takes one frame's rows at a time and finishes at task
   * commit. A sink may also say which directory entries its scan reads
   * (dtr: frameset directories and `all.stk`) and act once every task
-  * committed (dtr writes `all.stk`). Coordinates divide by the codec's
-  * `unit_scale` on the way out where the format's writer applies it. */
+  * committed (dtr writes `all.stk`). */
 abstract class FrameCodec extends Serializable {
   def name: String
   def schema: StructType
