@@ -5,7 +5,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** JVM kernels behind the custom Catalyst expressions in
@@ -513,6 +513,10 @@ object HashKernels {
     s
   }
 
+  /** [[dotScaled]] over two `array<double>` values. */
+  def dotScaled(a: ArrayData, b: ArrayData): Long =
+    dotScaled(a.toDoubleArray(), b.toDoubleArray())
+
   /** Σ floor(a_i · b_i · 1e12 + 0.5) as a long — the single-pass twin
     * of sum(CAST(floor(x * y * 1e12 + 5e-1) AS BIGINT)), the exact
     * term form the PQ-training oracle SQL is written in. NOT the same
@@ -531,10 +535,17 @@ object HashKernels {
     s
   }
 
+  /** [[dotFloorScaled]] over two `array<double>` values. */
+  def dotFloorScaled(a: ArrayData, b: ArrayData): Long =
+    dotFloorScaled(a.toDoubleArray(), b.toDoubleArray())
+
   /** 16-bit sign-LSH code: bit p = [Σ_i round(v_i · sin(997p + 31i) ·
     * 1e12) > 0] with 1-based i — the kernel form of the HOF expression
     * in SimQueries (same Math.sin the expression form evaluates). */
   def lsh16Code(v: Array[Double]): Long = lshCode(v, 16)
+
+  /** [[lsh16Code]] over an `array<double>` value. */
+  def lsh16Code(v: ArrayData): Long = lshCode(v.toDoubleArray(), 16)
 
   /** Sign-LSH code over the first `bits` hyperplanes of the same
     * family (h_p[i] = sin(997p + 31i)). Because wider codes EXTEND the
@@ -582,6 +593,10 @@ object HashKernels {
     }
     code
   }
+
+  /** [[lshCode]] over an `array<double>` value. */
+  def lshCode(v: ArrayData, bits: Int): Long =
+    lshCode(v.toDoubleArray(), bits)
 
   /** Two-list variant of [[simhashClosePairs]] for SEGMENTED buckets —
     * the hot-bucket guard (SCALING.md): a (band, bval) bucket larger
@@ -1031,6 +1046,10 @@ object HashKernels {
     }
     n
   }
+
+  /** [[sortedIntersectCount]] over two `array<bigint>` values. */
+  def sortedIntersectCount(a: ArrayData, b: ArrayData): Int =
+    sortedIntersectCount(a.toLongArray(), b.toLongArray())
 
   /** [[sortedIntersectCount]] with an early-abort bound: returns the
     * EXACT intersection count if it reaches `needed`, else -1 the

@@ -43,7 +43,7 @@ object SimQueries {
   private val S = "1e12"
 
   /** Exact scaled-integer sum of elementwise products of two arrays —
-    * the native single-pass kernel (graft.functions.DotScaled; the
+    * the native single-pass kernel (`dot_scaled`; the
     * HOF-composed aggregate/zip_with form of the same reduction ran
     * interpreted per element and dominated the candidate verify). */
   private def dotScaled(a: String, b: String): String =
@@ -195,7 +195,7 @@ object SimQueries {
     * qualifying code pair joins the two lists (≤ bits+1 partners per
     * code, so a vector's embedding is shuffled at most 17 times —
     * corpus-linear) and the c² cosine verify runs inside
-    * [[graft.functions.CosineClosePairs]] as primitive array loops.
+    * `cosine_close_pairs` as primitive array loops.
     * The pre-r11 plan materialized every candidate as a join row
     * carrying both full embeddings (~1 KB each): 18.0 s idle at the
     * 10× replica. Only surviving pairs become rows. */

@@ -121,13 +121,15 @@ final class XyzCodec(unitScale: Double, override val mode: String)
       atomHi: Int): FrameReader =
     new XyzFrameReader(unitScale, mode, part, need)
 
-  override def sink: Option[FrameSink] = Some(XyzSink)
+  override def sink: Option[FrameSink] = Some(new XyzSink(unitScale))
 }
 
 /** The inverse of the scan: per frame, the atom count, a `# Step: <time>`
   * comment (` Box: x y z` appended when the frame has box lengths),
-  * then `element x y z` atom lines, coordinates as given. */
-private object XyzSink extends FrameSink {
+  * then `element x y z` atom lines. Coordinates and box lengths are
+  * divided by the codec's `unit_scale`, so a read at the same scale
+  * gives them back. */
+private final class XyzSink(unitScale: Double) extends FrameSink {
   override def ext: String = ".xyz"
   override def required: Seq[String] = Seq("frame_id", "element", "x", "y", "z")
   override def open(path: String, schema: StructType): Shard =
@@ -135,16 +137,19 @@ private object XyzSink extends FrameSink {
       private val Seq(iElement, iX, iY, iZ, iBx, iBy, iBz) = Seq("element",
         "x", "y", "z", "box_x", "box_y", "box_z").map(col)
 
+      private def v(r: InternalRow, i: Int): Float =
+        (r.getFloat(i) / unitScale).toFloat
+
       override def frame(rows: collection.IndexedSeq[InternalRow]): Unit = {
         val r0 = rows(0)
         line(rows.length.toString)
         line(s"# Step: ${time(r0)}" +
           (if (present(r0, iBx) && present(r0, iBy) && present(r0, iBz))
-            s" Box: ${r0.getFloat(iBx)} ${r0.getFloat(iBy)} ${r0.getFloat(iBz)}"
+            s" Box: ${v(r0, iBx)} ${v(r0, iBy)} ${v(r0, iBz)}"
           else ""))
         rows.foreach { r =>
-          out.write(s"${r.getUTF8String(iElement)} ${r.getFloat(iX)} " +
-            s"${r.getFloat(iY)} ${r.getFloat(iZ)}\n")
+          out.write(s"${r.getUTF8String(iElement)} ${v(r, iX)} " +
+            s"${v(r, iY)} ${v(r, iZ)}\n")
         }
       }
     }

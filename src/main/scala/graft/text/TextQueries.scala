@@ -43,7 +43,7 @@ object TextQueries {
 
   /** Per-doc distinct word-3-gram shingle array, 8-hash MinHash
     * signature and 4 banded bucket keys — one native-kernel call per
-    * document (graft.functions.MinHashDoc; SURVEY §2.9 level 3: the
+    * document (`minhash_doc`, HashKernels.minhashDocRow; SURVEY §2.9 level 3: the
     * HOF-composed form of this signature ran interpreted at
     * O(shingles × 8) md5+concat expression-tree evals per doc).
     * min(md5(seed:shingle)) is a string-min minhash — same total order
@@ -599,7 +599,7 @@ object TextQueries {
 
   /** 64-bit frequency-weighted SimHash signature per doc, as two 32-bit
     * halves in BIGINTs (integer math only — bit-exact across engines).
-    * One native-kernel call per document (graft.functions.SimHash64) —
+    * One native-kernel call per document (`simhash64`, HashKernels.simhashRow) —
     * the HOF-composed form ran interpreted at O(tokens × 64)
     * expression-tree evals per doc and dominated the benchmark. Bit b
     * of md5 hex h: floor(nibble(h, b div 4) / 2^(b mod 4)) mod 2. */
@@ -710,7 +710,7 @@ object TextQueries {
   /** Shared tail of the simhash dedup family: one bucket per
     * (band, bval) key, members gathered with collect_list, candidate
     * enumeration + Hamming verify inside the
-    * [[graft.functions.SimhashClosePairs]] kernel. Only surviving
+    * `simhash_close_pairs` kernel. Only surviving
     * pairs ever become rows; the cross-band `distinct()` stays because
     * a qualifying pair can collide in several bands.
     *
@@ -1714,7 +1714,7 @@ object TextQueries {
   def fingerprint(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     Fanout.byKey(Tables.documents(s, d), col("doc_id"))
-      // native single-pass kernel (see graft.functions.MinFingerprint)
+      // native single-pass kernel (see HashKernels.fingerprintUtf8)
       .select(col("doc_id"),
         expr("min_fingerprint(text)").as("fingerprint"))
       .orderBy("doc_id")

@@ -111,7 +111,7 @@ object TrajOps {
   }
 
   /** Codegen'd kernel form of the triclinic MIC distance — ONE static
-    * call inside the generated stage (graft.functions.TriclinicMicDist
+    * call inside the generated stage (`tri_mic`
     * → GeomKernels.triMic), bit-identical to [[distMicTriclinic]].
     * Requires GraftFunctions.register(spark) (or the GraftExtensions
     * session extension). Use THIS in query plans: the Column-tree form

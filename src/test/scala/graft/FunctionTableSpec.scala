@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.GraftFunctions
 import graft.util.CodegenErrors
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -181,16 +181,16 @@ class FunctionTableSpec extends AnyFunSuite {
       "ArraySeq([1,5,0.6], [3,5,0.8])",
       "cosine_close_pairs(members_a, members_b, same_bucket, threshold) - exact-cosine verify of two LSH buckets, as (v1, v2, cos_sim)"))
 
-  /** Runs `name`'s sample under `mode` and returns (column, result). */
-  private def run(s: SparkSession, name: String, mode: String)
-      : (String, String) = {
-    val smp = samples(name)
+  /** Runs `name(args…, lits…)` under `mode` and returns (column,
+    * result). */
+  private def run(s: SparkSession, name: String, args: Seq[String],
+      lits: Seq[String], mode: String): (String, String) = {
     s.conf.set("spark.sql.codegen.factoryMode", mode)
     s.conf.set("spark.sql.codegen.wholeStage", mode == "CODEGEN_ONLY")
-    val in: DataFrame = s.range(1).selectExpr(smp.args.zipWithIndex.map {
+    val in: DataFrame = s.range(1).selectExpr(args.zipWithIndex.map {
       case (a, i) => s"IF(id = 0, $a, NULL) AS a$i"
     }: _*)
-    val call = s"$name(" + (smp.args.indices.map(i => s"a$i") ++ smp.lits)
+    val call = s"$name(" + (args.indices.map(i => s"a$i") ++ lits)
       .mkString(", ") + ")"
     val df = in.select(expr(call))
     (df.columns.head, df.collect().head.get(0).toString)
@@ -209,8 +209,8 @@ class FunctionTableSpec extends AnyFunSuite {
     val errors0 = CodegenErrors.snapshot()
     samples.keys.toSeq.sorted.foreach { name =>
       val smp = samples(name)
-      val (colGen, gen) = run(s, name, "CODEGEN_ONLY")
-      val (colInt, int) = run(s, name, "NO_CODEGEN")
+      val (colGen, gen) = run(s, name, smp.args, smp.lits, "CODEGEN_ONLY")
+      val (colInt, int) = run(s, name, smp.args, smp.lits, "NO_CODEGEN")
       val usage = s.sql(s"DESCRIBE FUNCTION $name").collect()
         .map(_.getString(0)).find(_.startsWith("Usage: ")).getOrElse("")
         .stripPrefix("Usage: ")
@@ -220,5 +220,35 @@ class FunctionTableSpec extends AnyFunSuite {
       assert(usage == smp.usage, s"$name: usage")
     }
     assert(CodegenErrors.snapshot() == errors0)
+  }
+
+  test("mistyped arguments fail at analysis with a data type mismatch " +
+    "naming the function") {
+    val calls = Seq(
+      "sorted_intersect_count(array(CAST(id AS INT), CAST(id + 1 AS INT), " +
+        "CAST(id + 2 AS INT)), array(CAST(id + 1 AS INT), CAST(id + 2 AS INT)))",
+      "simhash64(id)",
+      "ngram5_count(CAST(id AS INT))",
+      "dot_scaled(array(1, 2), array(CAST(id AS INT), 4))",
+      "dot_scaled(array(CAST(id AS FLOAT), 2.0F), array(3.0F, 4.0F))",
+      "xyz_sum_scaled(CAST(id AS STRING), 1)")
+    calls.foreach { call =>
+      val e = intercept[AnalysisException](spark.range(3).selectExpr(call))
+      assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), s"$call: $e")
+      val name = call.takeWhile(_ != '(')
+      assert(e.getMessage.contains(s"\"$name("), s"$call: $e")
+    }
+  }
+
+  test("a NaN cosine threshold compiles and matches interpreted eval") {
+    CodegenErrors.install()
+    val s = spark.newSession()
+    val errors0 = CodegenErrors.snapshot()
+    val args = samples("cosine_close_pairs").args
+    val nan = Seq("CAST('NaN' AS DOUBLE)")
+    val (_, gen) = run(s, "cosine_close_pairs", args, nan, "CODEGEN_ONLY")
+    assert(CodegenErrors.snapshot() == errors0)
+    val (_, int) = run(s, "cosine_close_pairs", args, nan, "NO_CODEGEN")
+    assert(gen == int)
   }
 }

@@ -121,4 +121,24 @@ class GraftExtensionsSpec extends AnyFunSuite {
       s"put the codec on the FrameCodec shell instead in: " +
         offenders.mkString(", "))
   }
+
+  test("only the kernel-call expression and the top-k aggregate define " +
+    "an expression class under functions/") {
+    val base = java.nio.file.Paths.get(
+      sys.props.getOrElse("graft.base", sys.props("user.dir")))
+    val shell = Set("KernelCall.scala", "TopKAgg.scala")
+    val copy = """extends\s+(Unary|Binary|Ternary)?Expression\b""".r
+    val files = java.nio.file.Files.list(
+      base.resolve("src/main/scala/graft/functions"))
+    val offenders =
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filterNot(p => shell(p.getFileName.toString))
+        .filter(p => copy.findFirstIn(java.nio.file.Files.readString(p)).nonEmpty)
+        .map(p => base.relativize(p).toString).toList
+      finally files.close()
+    assert(offenders.isEmpty,
+      s"add a Kernel entry to GraftFunctions.table instead in: " +
+        offenders.mkString(", "))
+  }
 }

@@ -171,4 +171,39 @@ class ShardBytesSpec extends AnyFunSuite {
       assert(got == pinned(fmt), s"$fmt shard listing: $got")
     }
   }
+
+  // every writer whose codec takes unit_scale (gro is nm-only): a
+  // write and read at 0.1 gives back the coordinates written, and every
+  // float column a write and read at 1 gives back
+  cases.filterNot(_._1 == "gro").foreach { case (fmt, schema, opts) =>
+    test(s"$fmt: a write at unit_scale 0.1 reads back at 0.1") {
+      val floats = schema.fields.filter(_.dataType == FloatType).map(_.name)
+      val read = if (fmt == "mdcrd") opts + ("natoms" -> nAtoms.toString) else opts
+      def trip(scale: String): Array[Row] = {
+        val dir = Files.createTempDirectory(s"unitscale_$fmt").toString
+        wide.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
+          .write.format(fmt).options(opts + ("unit_scale" -> scale))
+          .mode("overwrite").save(dir)
+        spark.read.format(fmt).options(read + ("unit_scale" -> scale)).load(dir)
+          .orderBy("frame_id", "atom_id").select(floats.map(col).toSeq: _*)
+          .collect()
+      }
+      val (at1, at01) = (trip("1"), trip("0.1"))
+      val ids = for (f <- 0 until 5; a <- 0 until nAtoms) yield row(f, a)
+      assert(at01.length == ids.length && at1.length == ids.length)
+      def near(a: Float, b: Float): Boolean = math.abs(a - b) <= 1e-3
+      at01.zip(at1).zip(ids).foreach { case ((r, r1), in) =>
+        Seq("x", "y", "z").foreach { c =>
+          val i = floats.indexOf(c)
+          assert(near(r.getFloat(i), in.getFloat(wideSchema.fieldIndex(c))),
+            s"$fmt $c: read ${r.getFloat(i)}, wrote $in")
+        }
+        floats.indices.foreach { i =>
+          assert(r.isNullAt(i) == r1.isNullAt(i) &&
+            (r.isNullAt(i) || near(r.getFloat(i), r1.getFloat(i))),
+            s"$fmt ${floats(i)}: ${r.get(i)} at 0.1, ${r1.get(i)} at 1")
+        }
+      }
+    }
+  }
 }
